@@ -83,11 +83,19 @@ object SparkEntry {
     * query. Safe between queries only — a still-referenced
     * localCheckpointed RDD cannot be recomputed once its blocks drop.
     *
-    * KEPT ALIVE by design: the BUILT indexes — the NN-descent graph
-    * tables (SimilarityOps.graphMemo, ≤ K rows per node) and the
-    * 3-gram shingle table (DedupOps.shingleMemo, r20) — both
-    * build-once/serve-many localCheckpointed frames whose RDD ids are
-    * pinned here; [[releaseIndexes]] is the full teardown. */
+    * KEPT ALIVE by design: the BUILT indexes of all five
+    * [[graft.queries.BuiltIndexMemo]] instances, build-once/serve-many
+    * localCheckpointed frames whose RDD ids are pinned here:
+    *  - DedupOps.shingleMemo: the dedup tiers, the 3-gram shingle
+    *    table sh3 and those built on it (nd08, exh, ex50, sc50, d41k,
+    *    d44v);
+    *  - TextOps.textMemo: the text tiers (t36p, sp8, t35q);
+    *  - MultimodalOps.mmMemo: the asset keep-list (m43k);
+    *  - SimilarityOps.graphMemo: the NN-descent graph tables (nnd0,
+    *    nnd1; ≤ K rows per node);
+    *  - SimilarityOps.evalMemo: the index-eval ground truth and
+    *    per-index results (gt10, s37p/s40p/s42p/s43p, s65r/s67r).
+    * [[releaseIndexes]] is the full teardown. */
   def release(spark: SparkSession): Unit = {
     // shared-index memo first: its entries are persisted DataFrames
     // about to be unpersisted below — a stale handle would silently

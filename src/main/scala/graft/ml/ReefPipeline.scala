@@ -40,6 +40,20 @@ import org.apache.spark.sql.functions._
   * the vocabulary rides the plan as literals (broadcast-sized, 189
   * entries). See [[FamilyCountAggregator]] for the typed single-column
   * alternative with identical semantics.
+  *
+  * The fits run on a lineage-truncated copy: [[trainAndEvaluate]] and
+  * [[crossValidate]] take one eager `localCheckpoint` of the feature
+  * frame and split, fit and score on it. Tree learners run one job per
+  * tree level, and every task binary serializes its RDD's whole
+  * lineage; on the plan itself that is the CSV scan, the 189-way pivot
+  * and both assemblers, and the split and the evaluator re-scan the CSV
+  * besides. `persist()` would not help: a persisted RDD serves its
+  * blocks but still ships its parents in every task, while a checkpoint
+  * replaces them. The cost is one MEMORY_AND_DISK copy of the feature
+  * frame (two labels and a |vocab|+1-slot vector per survey, the size
+  * of the copy GBT already caches of its input), held only for the
+  * call: a blocking unpersist releases it when the call returns or
+  * throws.
   */
 object ReefPipeline {
 
@@ -98,21 +112,32 @@ object ReefPipeline {
   /** Seeded 70/30 split, fit, RMSE on the held-out 30% —
     * Data_transform.py:155-179 with reproducibility fixed. */
   def trainAndEvaluate(featured: DataFrame, labelCol: String,
-      kind: ModelKind, seed: Long = 42L): (PipelineModel, Double) = {
-    val Array(train, test) = featured.randomSplit(Array(0.7, 0.3), seed)
-    val regressor = kind match {
-      case RF => new RandomForestRegressor()
-        .setFeaturesCol("features").setLabelCol(labelCol).setSeed(seed)
-      case GBT => new GBTRegressor()
-        .setFeaturesCol("features").setLabelCol(labelCol).setSeed(seed)
+      kind: ModelKind, seed: Long = 42L): (PipelineModel, Double) =
+    onCheckpoint(featured) { frame =>
+      val Array(train, test) = frame.randomSplit(Array(0.7, 0.3), seed)
+      val regressor = kind match {
+        case RF => new RandomForestRegressor()
+          .setFeaturesCol("features").setLabelCol(labelCol).setSeed(seed)
+        case GBT => new GBTRegressor()
+          .setFeaturesCol("features").setLabelCol(labelCol).setSeed(seed)
+      }
+      val model = new Pipeline().setStages(Array(regressor)).fit(train)
+      val predictions = model.transform(test)
+      val rmse = new RegressionEvaluator()
+        .setLabelCol(labelCol).setPredictionCol("prediction")
+        .setMetricName("rmse")
+        .evaluate(predictions)
+      (model, rmse)
     }
-    val model = new Pipeline().setStages(Array(regressor)).fit(train)
-    val predictions = model.transform(test)
-    val rmse = new RegressionEvaluator()
-      .setLabelCol(labelCol).setPredictionCol("prediction")
-      .setMetricName("rmse")
-      .evaluate(predictions)
-    (model, rmse)
+
+  /** Run `body` on one eager, lineage-truncated copy of `featured`,
+    * released (blocking) when `body` returns or throws. The copy keeps
+    * the plan's partitions and each partition's row order, so seeded
+    * splits and folds select the same rows as on the plan itself. */
+  private def onCheckpoint[T](featured: DataFrame)(body: DataFrame => T): T = {
+    val frame = featured.localCheckpoint(true)
+    try body(frame)
+    finally org.apache.spark.sql.GraftBridge.uncheckpoint(frame, blocking = true)
   }
 
   /** Seeded k-fold model selection — the `CrossValidator` surface the
@@ -125,24 +150,25 @@ object ReefPipeline {
     * compose. Returns (best mean RMSE, best maxDepth, all mean RMSEs
     * in grid order). */
   def crossValidate(featured: DataFrame, labelCol: String,
-      seed: Long = 42L): (Double, Int, Array[Double]) = {
-    val rf = new RandomForestRegressor()
-      .setFeaturesCol("features").setLabelCol(labelCol).setSeed(seed)
-    val grid = new ParamGridBuilder()
-      .addGrid(rf.maxDepth, Array(3, 5))
-      .build()
-    val cv = new CrossValidator()
-      .setEstimator(new Pipeline().setStages(Array(rf)))
-      .setEvaluator(new RegressionEvaluator()
-        .setLabelCol(labelCol).setPredictionCol("prediction")
-        .setMetricName("rmse"))
-      .setEstimatorParamMaps(grid)
-      .setNumFolds(3)
-      .setSeed(seed)
-      .setParallelism(2)
-    val m = cv.fit(featured)
-    val bestDepth = m.bestModel.asInstanceOf[PipelineModel]
-      .stages(0).asInstanceOf[RandomForestRegressionModel].getMaxDepth
-    (m.avgMetrics.min, bestDepth, m.avgMetrics)
-  }
+      seed: Long = 42L): (Double, Int, Array[Double]) =
+    onCheckpoint(featured) { frame =>
+      val rf = new RandomForestRegressor()
+        .setFeaturesCol("features").setLabelCol(labelCol).setSeed(seed)
+      val grid = new ParamGridBuilder()
+        .addGrid(rf.maxDepth, Array(3, 5))
+        .build()
+      val cv = new CrossValidator()
+        .setEstimator(new Pipeline().setStages(Array(rf)))
+        .setEvaluator(new RegressionEvaluator()
+          .setLabelCol(labelCol).setPredictionCol("prediction")
+          .setMetricName("rmse"))
+        .setEstimatorParamMaps(grid)
+        .setNumFolds(3)
+        .setSeed(seed)
+        .setParallelism(2)
+      val m = cv.fit(frame)
+      val bestDepth = m.bestModel.asInstanceOf[PipelineModel]
+        .stages(0).asInstanceOf[RandomForestRegressionModel].getMaxDepth
+      (m.avgMetrics.min, bestDepth, m.avgMetrics)
+    }
 }

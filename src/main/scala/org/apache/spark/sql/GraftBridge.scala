@@ -39,10 +39,13 @@ object GraftBridge {
     * Accepts ONLY the checkpointed DataFrame itself (plan root is the
     * LogicalRDD), never a derivation of it: matching anywhere in the
     * tree would silently drop blocks of OTHER live checkpointed
-    * DataFrames embedded in a derived plan. */
-  def uncheckpoint(df: DataFrame): Unit =
+    * DataFrames embedded in a derived plan.
+    *
+    * `blocking = true` waits until the blocks are gone, so a call that
+    * checkpoints for its own use is charged its cleanup. */
+  def uncheckpoint(df: DataFrame, blocking: Boolean = false): Unit =
     analyzedPlan(df) match {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking)
       case other => throw new IllegalArgumentException(
         "uncheckpoint expects the localCheckpointed DataFrame itself " +
           s"(root LogicalRDD), got plan root ${other.getClass.getSimpleName}")

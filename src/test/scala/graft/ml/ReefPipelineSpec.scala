@@ -1,7 +1,15 @@
 package graft.ml
 
+import java.lang.Double.doubleToRawLongBits
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ml.{Pipeline, PipelineStage}
+import org.apache.spark.ml.evaluation.RegressionEvaluator
+import org.apache.spark.ml.regression.{GBTRegressor, RandomForestRegressor}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.linalg.Vector
 import org.scalatest.funsuite.AnyFunSuite
@@ -127,6 +135,85 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(best1 === best2)
     assert(metrics1.length === 2 && metrics1.forall(m => m > 0 && !m.isNaN))
     assert(best1 === metrics1.min)
+    // recorded on this fixture (local[4], 4 shuffle partitions) with the
+    // folds drawn from the feature plan itself, before crossValidate
+    // moved onto a checkpoint: the checkpoint must not move a fold
+    assert(metrics1.toSeq === Seq(21.63129746947821, 21.658998160591654))
+    assert(depth1 === 3)
+  }
+
+  /** The uncheckpointed path, spelled out: seeded split of the feature
+    * plan itself, fit on the 70 %, score the 30 %. */
+  private def regressor(kind: ReefPipeline.ModelKind): PipelineStage = kind match {
+    case ReefPipeline.RF => new RandomForestRegressor()
+      .setFeaturesCol("features").setLabelCol("longitude").setSeed(42L)
+    case ReefPipeline.GBT => new GBTRegressor()
+      .setFeaturesCol("features").setLabelCol("longitude").setSeed(42L)
+  }
+
+  private def predictionBits(scored: DataFrame): Seq[Long] =
+    scored.select(col("prediction")).collect()
+      .map(r => doubleToRawLongBits(r.getDouble(0))).toSeq
+
+  test("the checkpointed split, fit and score are bit-identical to the plan's own") {
+    val Array(train, test) = featured.randomSplit(Array(0.7, 0.3), 42L)
+    assert(test.count() > 0, "held-out split must be non-empty")
+    for (kind <- Seq(ReefPipeline.RF, ReefPipeline.GBT)) {
+      val reference = new Pipeline().setStages(Array(regressor(kind))).fit(train)
+      val refScored = reference.transform(test)
+      val refRmse = new RegressionEvaluator().setLabelCol("longitude")
+        .setPredictionCol("prediction").setMetricName("rmse").evaluate(refScored)
+      val (model, rmse) = ReefPipeline.trainAndEvaluate(featured, "longitude", kind)
+      assert(doubleToRawLongBits(rmse) === doubleToRawLongBits(refRmse),
+        s"$kind RMSE $rmse vs uncheckpointed $refRmse")
+      assert(predictionBits(model.transform(test)) === predictionBits(refScored),
+        s"$kind held-out predictions differ from the uncheckpointed fit")
+    }
+  }
+
+  test("trainAndEvaluate and crossValidate pin nothing, also when the fit throws") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    featured.schema
+    val before = persisted
+    ReefPipeline.trainAndEvaluate(featured, "longitude", ReefPipeline.RF)
+    assert(persisted === before, "RF trainAndEvaluate")
+    ReefPipeline.trainAndEvaluate(featured, "longitude", ReefPipeline.GBT)
+    assert(persisted === before, "GBT trainAndEvaluate")
+    ReefPipeline.crossValidate(featured, "longitude")
+    assert(persisted === before, "crossValidate")
+    intercept[IllegalArgumentException](
+      ReefPipeline.trainAndEvaluate(featured, "no_such_label", ReefPipeline.GBT))
+    assert(persisted === before, "trainAndEvaluate whose fit throws")
+    intercept[IllegalArgumentException](
+      ReefPipeline.crossValidate(featured, "no_such_label"))
+    assert(persisted === before, "crossValidate whose fit throws")
+  }
+
+  test("one trainAndEvaluate scans the CSV in exactly one stage") {
+    // a fresh frame: re-running `featured`'s own, already executed plan
+    // would reuse its pivot shuffle and scan nothing
+    val fresh = ReefPipeline.featurize(spark, csvPath, vocab)
+    // a stage scans the CSV if a FileScanRDD is among its narrow
+    // ancestors; stages past the pivot shuffle or the checkpoint stop
+    // short of it
+    val csvStages = new AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val info = e.stageInfo
+        if (info.rddInfos.exists(_.name == "FileScanRDD") &&
+            info.taskMetrics.inputMetrics.bytesRead > 0)
+          csvStages.incrementAndGet()
+      }
+    }
+    GraftBridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ReefPipeline.trainAndEvaluate(fresh, "longitude", ReefPipeline.GBT)
+      GraftBridge.waitListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // measured: 3 stages scanned the CSV when the split, fit and score
+    // ran on the feature plan itself; the checkpoint's is the one left
+    assert(csvStages.get === 1)
   }
 
   test("regression learns signal on a 2000-survey synthetic reef (rmse < label stddev)") {
