@@ -60,12 +60,12 @@ object Bench {
     // returned rc 124 at r18). A small pool overlaps the driver-side
     // plan/codegen work of one query with the executor-side jobs of
     // others; the shared memos are already build-race-safe (losers
-    // discard, documented at memoGet/graphMemoGet). Timed passes below
-    // are untouched — they stay strictly sequential.
+    // discard, documented at SimilarityOps.memoGet and BuiltIndexMemo).
+    // Timed passes below are untouched — they stay strictly sequential.
     val warmT0 = System.nanoTime()
     val warmPool = java.util.concurrent.Executors.newFixedThreadPool(
       sys.env.getOrElse("SPARK_GRAFT_WARM_THREADS", "8").toInt)
-    // The NN-descent family shares graphMemo keys and s72 is a
+    // The NN-descent family shares tier keys and s72 is a
     // rebuild=true caller (ADVICE r19). Since r20 a rebuild DEFERS the
     // replaced entry's uncheckpoint (BuiltIndexMemo.deferred), so
     // rebuild-while-serving can no longer kill an in-flight warm job;
@@ -133,12 +133,12 @@ object Bench {
     // rows carry one sample. Persisted handles are released between
     // reps (SparkEntry.release), so every rep pays the query's full
     // cost — rep 2 never gets rep 1's cache for free. ONE documented
-    // exception (r19): the NN-descent graph INDEXES survive release
-    // by contract (build-once/serve-many — SimilarityOps.graphMemo).
-    // s72 is the build query and rebuilds unconditionally, so its row
-    // always measures the build; s73/s74 are search queries and
-    // measure serving over the built index — exactly the split a
-    // 100 TB deployment has. releaseIndexes() below tears the pins
+    // exception (r19): the built-index tiers survive release by
+    // contract (build-once/serve-many — BuiltIndexMemo). Each tier's
+    // build row (s72 for the graph, d28 for the shingles, ...)
+    // rebuilds unconditionally, so its row always measures the build;
+    // the other rows measure serving over the built index — exactly
+    // the split a 100 TB deployment has. releaseIndexes() below tears the pins
     // down before the leak accounting.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val fastCutoff =

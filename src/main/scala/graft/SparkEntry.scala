@@ -33,12 +33,11 @@ object SparkEntry {
     * documented exceptions run jobs at plan-construction time:
     * (1) the NN-descent graph queries (s72/s73/s74) — their iterative
     * fixed point localCheckpoints per superstep, which CANNOT be lazy
-    * (an un-truncated 6-round plan grows ~6^iters subtrees), and since
-    * r19 the built edge tables are memoized indexes (see
-    * SimilarityOps.graphMemo and [[releaseIndexes]]); likewise (r20)
-    * the shingle-family dedup queries serve a memoized 3-gram shingle
-    * index (DedupOps.shingleMemo — d28 is the rebuild-always build
-    * row, the s72 posture); (2) the BOUNDED
+    * (an un-truncated 6-round plan grows ~6^iters subtrees); more
+    * generally, every built-index tier ([[graft.queries.BuiltIndexMemo]]
+    * — the graph, dedup, text, asset and eval tiers) localCheckpoints
+    * its table on a memo miss or on its build row's rebuild, and
+    * serves it thereafter until [[releaseIndexes]]; (2) the BOUNDED
     * fence probes: q83/s34 count
     * their input against `spark.graft.exact.maxRows`, m52 samples 64
     * payloads against `spark.graft.cdc.maxDegenerateFrac`, and
@@ -83,19 +82,13 @@ object SparkEntry {
     * query. Safe between queries only — a still-referenced
     * localCheckpointed RDD cannot be recomputed once its blocks drop.
     *
-    * KEPT ALIVE by design: the BUILT indexes of all five
-    * [[graft.queries.BuiltIndexMemo]] instances, build-once/serve-many
-    * localCheckpointed frames whose RDD ids are pinned here:
-    *  - DedupOps.shingleMemo: the dedup tiers, the 3-gram shingle
-    *    table sh3 and those built on it (nd08, exh, ex50, sc50, d41k,
-    *    d44v);
-    *  - TextOps.textMemo: the text tiers (t36p, sp8, t35q);
-    *  - MultimodalOps.mmMemo: the asset keep-list (m43k);
-    *  - SimilarityOps.graphMemo: the NN-descent graph tables (nnd0,
-    *    nnd1; ≤ K rows per node);
-    *  - SimilarityOps.evalMemo: the index-eval ground truth and
-    *    per-index results (gt10, s37p/s40p/s42p/s43p, s65r/s67r).
-    * [[releaseIndexes]] is the full teardown. */
+    * KEPT ALIVE by design: the built-index tiers of
+    * [[graft.queries.BuiltIndexMemo]] — build-once/serve-many
+    * localCheckpointed frames — of EVERY live session on this
+    * SparkContext, plus other sessions' superseded generations still
+    * awaiting their own session's release. Only this session's
+    * superseded generations are reclaimed. [[releaseIndexes]] is the
+    * full teardown of this session's tiers. */
   def release(spark: SparkSession): Unit = {
     // shared-index memo first: its entries are persisted DataFrames
     // about to be unpersisted below — a stale handle would silently
@@ -104,26 +97,27 @@ object SparkEntry {
     // blocking RDD unpersist FIRST — this is the synchronous barrier
     // (it covers cached-Dataset buffer RDDs too); catalog.clearCache()
     // afterwards drops the CacheManager bookkeeping (its own unpersist
-    // is async-only, which is why it cannot be the barrier). Pins are
-    // scoped to THIS session (ADVICE r19): another live session's
-    // indexes are neither pinned here nor torn down below. Superseded
-    // index generations (a rebuild swaps the entry; the old blocks are
-    // only DEFERRED so in-flight readers finish) are reclaimed here:
-    // their ids are not pinned, so the blanket unpersist drops the
-    // blocks, and the drain trims the handle queue.
-    graft.queries.BuiltIndexMemo.drainDeferredAll(spark)
-    val pinned = graft.queries.BuiltIndexMemo.allPinnedRddIds(spark)
+    // is async-only, which is why it cannot be the barrier). The
+    // persistent-RDD list spans every session on the context, so the
+    // pins do too: no live session's tiers are torn down here. This
+    // session's superseded tier generations (a rebuild swaps the
+    // entry; the old blocks are only DEFERRED so in-flight readers
+    // finish) are reclaimed here: their ids are not retained, so the
+    // blanket unpersist drops the blocks, and the drain trims the
+    // handle queue.
+    graft.queries.BuiltIndexMemo.drainDeferred(spark)
+    val pinned = graft.queries.BuiltIndexMemo.retained(spark)
     spark.sparkContext.getPersistentRDDs.valuesIterator
       .foreach(r => if (!pinned(r.id)) r.unpersist(blocking = true))
     spark.catalog.clearCache()
   }
 
-  /** Full teardown: [[release]] plus the built graph indexes the
-    * per-query release deliberately keeps (the build-once/serve-many
-    * contract). Call when done with the session's similarity serving —
-    * Bench does before its leak accounting. */
+  /** Full teardown: [[release]] plus this session's built-index tiers,
+    * which the per-query release deliberately keeps (the
+    * build-once/serve-many contract). Call when done with the
+    * session's serving — Bench does before its leak accounting. */
   def releaseIndexes(spark: SparkSession): Unit = {
-    graft.queries.BuiltIndexMemo.clearAll(spark)
+    graft.queries.BuiltIndexMemo.clear(spark)
     release(spark)
   }
 

@@ -69,12 +69,12 @@ object Tables {
   }
 
   /** True while [[withShared]] overrides (spark, dir, name). The
-    * session-scoped index memos (DedupOps.shingleMemo,
-    * SimilarityOps.graphMemo) consult this: a memoized CORPUS index is
-    * only valid for the real corpus, so under an override they neither
-    * serve a stale entry nor — the r20 regression this guards against —
-    * publish an index built from the substituted frame, which would
-    * poison every post-override serving query in the session. */
+    * built-index tiers (graft.queries.BuiltIndexMemo.get, the only
+    * caller) consult this: a memoized CORPUS index is only valid for
+    * the real corpus, so under an override they neither serve a stale
+    * entry nor — the r20 regression this guards against — publish an
+    * index built from the substituted frame, which would poison every
+    * post-override serving query in the session. */
   def isShared(spark: SparkSession, dir: String, name: String): Boolean =
     shared.containsKey((spark, dir, name))
 

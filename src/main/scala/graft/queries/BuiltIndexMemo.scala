@@ -1,59 +1,141 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
-/** Session-scoped registry of BUILT index tables — the
-  * build-once/serve-many lifecycle shared by the NN-descent graph
-  * family (SimilarityOps.graphMemo, r19) and the dedup shingle index
-  * (DedupOps.shingleMemo, r20).
+/** The built-index TIERS: one session-scoped memo for every BUILT
+  * index table the registry serves — the dedup tiers (sh3, exh, ex50,
+  * sc50, nd08, d41k, d44v), the text tiers (t36p, sp8, t35q), the
+  * asset keep-list (m43k), the NN-descent graphs (nnd0, nnd1) and the
+  * index-eval tables (gt10, s37p, s40p, s42p, s43p, s65r, s67r). Each
+  * tier helper declares itself in ONE [[get]] call naming its kind and
+  * the corpus table it derives from; this object owns the whole
+  * lifecycle, so a fix here holds for every tier.
   *
-  * Entries are localCheckpointed DataFrames: materialized fixed points
-  * or derived corpus tables whose build dominates their family's cost
-  * and whose blocks CANNOT be recomputed once dropped (a
-  * localCheckpoint truncates lineage). They survive
-  * `SparkEntry.release()` by design — their RDD ids are pinned via
-  * [[pinnedRddIds]] — and are torn down only by
-  * `SparkEntry.releaseIndexes()`, a dir switch (the same dir-walk
-  * eviction discipline as SimilarityOps.memoGet), or an explicit
-  * `rebuild = true` caller (the designated "build" query of a family:
-  * s72 for the graph tier, d28 for the shingle index — their bench
-  * rows keep measuring the build while every other family member
-  * measures serving). The 100 TB posture is exactly this split: one
+  * Entries are keyed by (session, dir, kind) and are localCheckpointed
+  * DataFrames: materialized fixed points or derived corpus tables
+  * whose build dominates their family's cost and whose blocks CANNOT
+  * be recomputed once dropped (a localCheckpoint truncates lineage).
+  * They survive `SparkEntry.release()` by design — their RDD ids are
+  * pinned via [[retained]] — and are torn down only by
+  * `SparkEntry.releaseIndexes()`, a dir switch, or an explicit
+  * `rebuild = true` caller (a family's designated "build" row: d28 for
+  * the lower dedup tiers, s72 for the graph, and so on — their bench
+  * rows keep measuring the build while every other consumer measures
+  * serving). The 100 TB posture is exactly this split: one
   * materialized index in cluster storage, many query batches against
   * it.
   *
-  * CONCURRENCY (ADVICE r19): concurrent BUILDERS are safe
-  * (putIfAbsent — losers uncheckpoint their never-published build and
-  * serve the winner's). Rebuild-while-SERVING is also safe, by
-  * DEFERRAL rather than discipline: a replaced or dir-evicted entry is
-  * never uncheckpointed inline — its handle moves to [[deferred]], so
-  * any job still reading the old blocks completes — and the blocks are
-  * reclaimed at the next lifecycle point ([[drainDeferred]], called by
-  * `SparkEntry.release()`, whose blanket not-pinned unpersist drops
-  * them anyway; the drain also trims the handle queue). Between
-  * releases the cost is at most one superseded generation per rebuild,
-  * and rebuilds outside the concurrent warm-up happen strictly between
-  * releases.
+  * BYPASS: under a `Tables.withShared` override of a tier's table,
+  * [[get]] neither serves nor publishes — a corpus index is only valid
+  * for the real corpus, and one built from a substituted frame would
+  * poison every post-override serving query in the session. The
+  * caller gets the tier's body as pure lineage (persisted when the
+  * helper declares `persistOnBypass`, at its multi-consumer reuse
+  * point; released by the next `SparkEntry.release()`).
+  *
+  * DIR WALK: a session holds one dir's tiers at a time. The first
+  * [[get]] for another dir evicts the session's entries of EVERY kind
+  * for the old dir (deferred, see below), so a caller that walks SF
+  * dirs without calling `releaseIndexes` pins at most one corpus's
+  * tiers. Entries whose SparkContext has stopped are dropped on the
+  * same sweep: their blocks died with the context's block manager.
+  *
+  * SESSIONS: `release(s)` keeps every live entry on s's SparkContext,
+  * whichever session owns it, and other sessions' deferred
+  * generations (their readers may still be running). RDD ids restart
+  * per SparkContext, so only entries on s's own context count: a
+  * stopped context's ids would alias live RDDs.
+  *
+  * CONCURRENCY: concurrent BUILDERS are safe (putIfAbsent — losers
+  * uncheckpoint their never-published build and serve the winner's).
+  * Rebuild-while-SERVING is also safe, by DEFERRAL rather than
+  * discipline: a replaced or dir-evicted entry is never uncheckpointed
+  * inline — its handle moves to `deferred`, so any job still reading
+  * the old blocks completes — and its session's next
+  * `SparkEntry.release()` reclaims the blocks ([[drainDeferred]] plus
+  * release's blanket unpersist of everything not [[retained]]).
+  * Between releases the cost is at most one superseded generation per
+  * rebuild, and rebuilds outside the concurrent warm-up happen
+  * strictly between releases.
   */
-private[graft] final class BuiltIndexMemo {
-  BuiltIndexMemo.register(this)
-
+private[graft] object BuiltIndexMemo {
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]()
   /** Superseded entries awaiting reclaim — see CONCURRENCY above. */
   private val deferred = new java.util.concurrent.ConcurrentLinkedQueue[
     (SparkSession, DataFrame)]()
 
-  /** RDD ids whose blocks `SparkEntry.release()` must leave resident —
-    * scoped to the CALLING session (ADVICE r19: one session's release
-    * must not pin — or later tear down — another live session's
-    * entries). Deferred generations are deliberately NOT pinned: by
-    * drain time no job reads them, and release's blanket unpersist is
-    * exactly where their blocks should die. */
-  def pinnedRddIds(s: SparkSession): Set[Int] = {
+  /** The tier `kind` of corpus `d`, derived from `table`: served from
+    * the memo, or built from `body` and published. `body` is
+    * localCheckpointed unless it already is one (the NN-descent
+    * builds checkpoint per superstep). `rebuild = true` forces a fresh
+    * build and swaps it in: the build row's posture — it must never
+    * report a memo hit, and its run refreshes what the serving queries
+    * read. Under a withShared override of `table`, `body` comes back
+    * as pure lineage (see BYPASS above). */
+  def get(s: SparkSession, d: String, kind: String, table: String,
+      rebuild: Boolean = false, persistOnBypass: Boolean = false)
+      (body: => DataFrame): DataFrame =
+    if (!graft.Tables.isShared(s, d, table)) serve(s, d, kind, rebuild)(body)
+    else if (persistOnBypass)
+      body.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else body
+
+  private def serve(s: SparkSession, d: String, kind: String,
+      rebuild: Boolean)(body: => DataFrame): DataFrame = {
+    val it = memo.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      val owner = e.getKey._1
+      if (owner.sparkContext.isStopped) it.remove()
+      else if ((owner eq s) && e.getKey._2 != d) {
+        deferred.add((owner, e.getValue))
+        it.remove()
+      }
+    }
+    val key = (s, d, kind)
+    val hit = if (rebuild) null else memo.get(key)
+    if (hit != null) hit
+    else {
+      val b = body
+      val built =
+        if (GraftBridge.isCheckpointed(b)) b else b.localCheckpoint(true)
+      if (rebuild) {
+        val old = memo.put(key, built)
+        if (old != null && (old ne built)) deferred.add((s, old))
+        built
+      } else {
+        // losers of a concurrent build race drop their blocks inline:
+        // the loser's frame was never published, so no other thread
+        // can be reading it
+        val prev = memo.putIfAbsent(key, built)
+        if (prev != null) { GraftBridge.uncheckpoint(built); prev }
+        else built
+      }
+    }
+  }
+
+  /** The session's published tiers: kind → checkpoint RDD id (one dir
+    * per session, so one entry per kind). */
+  def pinned(s: SparkSession): Map[String, Int] = {
+    val b = Map.newBuilder[String, Int]
+    memo.forEach { (k, df) =>
+      if (k._1 eq s) b += k._3 -> GraftBridge.checkpointRddId(df)
+    }
+    b.result()
+  }
+
+  /** RDD ids `SparkEntry.release(s)` must leave resident: every
+    * session's [[pinned]] tiers on s's SparkContext, and the deferred
+    * generations of sessions other than s (see SESSIONS above). */
+  def retained(s: SparkSession): Set[Int] = {
+    def live(owner: SparkSession) = owner.sparkContext eq s.sparkContext
     val b = Set.newBuilder[Int]
     memo.forEach { (k, df) =>
-      if (k._1 eq s) b += org.apache.spark.sql.GraftBridge.checkpointRddId(df)
+      if (live(k._1)) b += GraftBridge.checkpointRddId(df)
+    }
+    deferred.forEach { case (owner, df) =>
+      if ((owner ne s) && live(owner)) b += GraftBridge.checkpointRddId(df)
     }
     b.result()
   }
@@ -62,94 +144,19 @@ private[graft] final class BuiltIndexMemo {
     * Idempotent with release()'s blanket unpersist — unpersisting an
     * already-dropped RDD is a no-op — so this is primarily handle
     * hygiene; it also makes a standalone drain (no release) correct. */
-  def drainDeferred(s: SparkSession): Unit = {
-    val it = deferred.iterator()
-    while (it.hasNext) {
-      val (owner, df) = it.next()
-      if (owner eq s) {
-        if (!owner.sparkContext.isStopped)
-          org.apache.spark.sql.GraftBridge.uncheckpoint(df)
-        it.remove()
+  def drainDeferred(s: SparkSession): Unit =
+    deferred.removeIf { case (owner, df) =>
+      (owner eq s) && {
+        if (!owner.sparkContext.isStopped) GraftBridge.uncheckpoint(df)
+        true
       }
     }
-  }
 
-  /** Drop the session's memoized indexes — blocks and handles. */
+  /** Drop the session's tiers — blocks and handles. */
   def clear(s: SparkSession): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        org.apache.spark.sql.GraftBridge.uncheckpoint(e.getValue)
-        it.remove()
-      }
+    memo.entrySet().removeIf { e =>
+      (e.getKey._1 eq s) && { GraftBridge.uncheckpoint(e.getValue); true }
     }
     drainDeferred(s)
   }
-
-  /** Memo get with dir-walk + dead-session eviction; `build` must
-    * return a localCheckpointed frame (root LogicalRDD — both the pin
-    * and the eviction go through GraftBridge's root-only contract).
-    * `rebuild = true` forces a fresh build and swaps it in (the
-    * designated build query's posture: it must never report a memo
-    * hit — and its run refreshes what the serving queries read). */
-  def get(s: SparkSession, d: String, kind: String,
-      rebuild: Boolean = false)(build: => DataFrame): DataFrame = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val owner = e.getKey._1
-      if (owner.sparkContext.isStopped) {
-        // ADVICE r19: an entry keyed to a stopped session would leak
-        // its handle (and session reference) for the JVM lifetime. Its
-        // blocks died with the context's block manager, so there is
-        // nothing to uncheckpoint — just drop the entry.
-        it.remove()
-      } else if ((owner eq s) && e.getKey._2 != d) {
-        // same-session dir walk: at most one dir's index per kind. A
-        // concurrent reader may still be serving the evicted entry —
-        // defer the block drop (see CONCURRENCY above).
-        deferred.add((owner, e.getValue))
-        it.remove()
-      }
-    }
-    val key = (s, d, kind)
-    if (!rebuild) {
-      val hit = memo.get(key)
-      if (hit != null) return hit
-    }
-    val built = build
-    if (rebuild) {
-      val old = memo.put(key, built)
-      if (old != null && (old ne built)) deferred.add((s, old))
-      built
-    } else {
-      // losers of a concurrent build race drop their blocks inline:
-      // the loser's frame was never published, so no other thread can
-      // be reading it
-      val prev = memo.putIfAbsent(key, built)
-      if (prev != null) {
-        org.apache.spark.sql.GraftBridge.uncheckpoint(built); prev
-      } else built
-    }
-  }
-}
-
-/** All memo instances, so SparkEntry's lifecycle hooks cover every
-  * index family without per-family wiring — a new BuiltIndexMemo is
-  * pinned, drained, and torn down correctly the moment it exists. */
-private[graft] object BuiltIndexMemo {
-  private val instances =
-    new java.util.concurrent.CopyOnWriteArrayList[BuiltIndexMemo]()
-  private def register(m: BuiltIndexMemo): Unit = instances.add(m)
-
-  def allPinnedRddIds(s: SparkSession): Set[Int] = {
-    var out = Set.empty[Int]
-    instances.forEach(m => out ++= m.pinnedRddIds(s))
-    out
-  }
-  def drainDeferredAll(s: SparkSession): Unit =
-    instances.forEach(_.drainDeferred(s))
-  def clearAll(s: SparkSession): Unit =
-    instances.forEach(_.clear(s))
 }

@@ -53,9 +53,9 @@ object DedupOps {
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"), shingleCol.as("shingles"))
 
-  /** Session-scoped memo for the BUILT 3-gram shingle table (r20,
-    * VERDICT r19 item 2) — the [[BuiltIndexMemo]] lifecycle the
-    * NN-descent graph family proved at r19, applied to the stage every
+  /** The BUILT 3-gram shingle table (r20, kind "sh3", VERDICT r19
+    * item 2) — the [[BuiltIndexMemo]] lifecycle the NN-descent graph
+    * family proved at r19, applied to the stage every
     * shingle-family query (d28/d30/d33/d35/d36/d46/d52/d53/d54/d56,
     * the d40/d45 edge helper, d61's 3-gram arm) used to rebuild from
     * the corpus scan per invocation: tokenize → ≥3-word filter →
@@ -66,35 +66,19 @@ object DedupOps {
     * base near-dup query) is the designated BUILD row: it rebuilds
     * unconditionally, so its bench row keeps measuring tokenize +
     * shingle + its own join work while every other family member
-    * measures serving. Entries are localCheckpointed (≤ one row per
-    * qualifying doc: id + distinct shingle array), pinned across
-    * SparkEntry.release(), torn down by releaseIndexes / dir walk. */
-  private val shingleMemo = new BuiltIndexMemo
-
-  private[graft] def pinnedShingleRddIds(s: SparkSession): Set[Int] =
-    shingleMemo.pinnedRddIds(s)
-  private[graft] def clearShingleMemo(s: SparkSession): Unit =
-    shingleMemo.clear(s)
-
-  /** The memoized shingle INDEX — build-on-miss, serve thereafter;
-    * `rebuild = true` is d28's posture (see [[shingleMemo]]). The
-    * eager localCheckpoint runs a job at plan-construction time — the
-    * same documented eagerness exception as the graph tier
-    * (SparkEntry.queries doc). Under a Tables.withShared override of
-    * the documents table the memo is BYPASSED both ways (no serve, no
-    * publish — see Tables.isShared): the caller gets a pure-lineage
-    * shingle table over the substituted frame, persisted at the old
-    * pre-memo reuse point and released by SparkEntry.release(). */
+    * measures serving. An entry is ≤ one row per qualifying doc (id +
+    * distinct shingle array). The eager localCheckpoint runs a job at
+    * plan-construction time — the same documented eagerness exception
+    * as the graph tier (SparkEntry.queries doc). Under an override the
+    * pure-lineage table is persisted at the old pre-memo reuse
+    * point. */
   private def shingleIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents"))
-      shingles(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else
-      shingleMemo.get(s, d, "sh3", rebuild)(
-        shingles(s, d).localCheckpoint(true))
+    BuiltIndexMemo.get(s, d, "sh3", "documents", rebuild,
+      persistOnBypass = true)(shingles(s, d))
 
-  /** The memoized near-dup PAIR index (r20, second tier over [[shingleMemo]]):
+  /** The memoized near-dup PAIR index (r20, kind "nd08", second tier
+    * over [[shingleIndex]]):
     * the confirmed Jaccard-≥0.8 edge list — the d-family's exact analog
     * of the s72 NN-descent edge table. Every clustering/reporting
     * composer (d31/d34/d37/d41→d42/d44/d48/d55/q96/q103/q104, d43,
@@ -109,23 +93,17 @@ object DedupOps {
     * row keeps measuring tokenize + shingle + candidate join + confirm
     * while the composers measure clustering/reporting over a built
     * edge list. The table is tiny (one row per confirmed pair), so the
-    * checkpoint cost is a barrier, not storage. Under a
-    * Tables.withShared override the memo is bypassed both ways (the
-    * shingle-index discipline): pure-lineage pairs over the
-    * substituted corpus, nothing published. */
+    * checkpoint cost is a barrier, not storage. */
   private def pairsIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents"))
-      neardupPairs(shingleIndex(s, d))
-    else
-      shingleMemo.get(s, d, "nd08", rebuild) {
-        // d28's rebuild refreshes the whole lower chain in order:
-        // shingles first, then the posting list over the fresh
-        // shingles, then the pairs over both — one rebuild each.
-        val sh = shingleIndex(s, d, rebuild)
-        val ex = postingsIndex(s, d, rebuild)
-        neardupPairsFrom(sh, ex).localCheckpoint(true)
-      }
+    BuiltIndexMemo.get(s, d, "nd08", "documents", rebuild) {
+      // d28's rebuild refreshes the whole lower chain in order:
+      // shingles first, then the posting list over the fresh
+      // shingles, then the pairs over both — one rebuild each.
+      val sh = shingleIndex(s, d, rebuild)
+      val ex = postingsIndex(s, d, rebuild)
+      neardupPairsFrom(sh, ex)
+    }
 
   /** Shared df cap of the rare-anchor candidate pipeline (d33's
     * stop-shingle discipline; d53 and d61's 3-gram arm run the same
@@ -143,23 +121,18 @@ object DedupOps {
     * d28 stays the family's build row (its rebuild refreshes shingles
     * → postings → pairs, so its bench row still measures tokenize +
     * shingle + explode/hash + candidate join + confirm); every other
-    * consumer serves. Same lifecycle as the other tiers; bypassed
-    * (pure lineage over the caller-visible shingle table) under a
-    * Tables.withShared override. */
+    * consumer serves. */
   private def postingsBody(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"), explode(col("shingles")).as("sstr"))
       .select(col("doc_id"), xxhash64(col("sstr")).as("sv"))
 
   private def postingsIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents"))
-      postingsBody(shingleIndex(s, d))
-    else
-      // the build SERVES the shingle tier (build-on-miss): when d28
-      // rebuilds it has already refreshed shingles one line above, so
-      // this reads the new generation without double-building it
-      shingleMemo.get(s, d, "exh", rebuild)(
-        postingsBody(shingleIndex(s, d)).localCheckpoint(true))
+    // the build SERVES the shingle tier (build-on-miss): when d28
+    // rebuilds it has already refreshed shingles one line above, so
+    // this reads the new generation without double-building it
+    BuiltIndexMemo.get(s, d, "exh", "documents", rebuild)(
+      postingsBody(shingleIndex(s, d)))
 
   /** The memoized CAPPED posting list (r21, kind "ex50"): the postings
     * restricted to shingles with df ≤ [[NeardupMaxDf]] — the
@@ -169,7 +142,9 @@ object DedupOps {
     * self-join + exact confirm over the served posting list; d53's
     * decontamination and d61's 3-gram arm serve. At 100 TB this is
     * the second materialization a capped dedup pipeline ships (the
-    * "rare-anchor index"). */
+    * "rare-anchor index"). Under an override the pure-lineage stream
+    * is persisted at the old pre-memo reuse point (both sides of every
+    * consumer's candidate join read it). */
   private def cappedPostingsBody(ex: DataFrame): DataFrame = {
     val rare = ex.groupBy(col("sv"))
       .agg(count(lit(1)).as("df"))
@@ -180,15 +155,8 @@ object DedupOps {
 
   private def cappedPostingsIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents"))
-      // pure-lineage fallback, persisted at the old pre-memo reuse
-      // point (both sides of every consumer's candidate join read it);
-      // released by SparkEntry.release()
-      cappedPostingsBody(postingsIndex(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else
-      shingleMemo.get(s, d, "ex50", rebuild)(
-        cappedPostingsBody(postingsIndex(s, d)).localCheckpoint(true))
+    BuiltIndexMemo.get(s, d, "ex50", "documents", rebuild,
+      persistOnBypass = true)(cappedPostingsBody(postingsIndex(s, d)))
 
   /** The memoized SCORED capped candidate table (r21, kind "sc50"):
     * every capped candidate pair (shares ≥ 1 df ≤ [[NeardupMaxDf]]
@@ -221,11 +189,8 @@ object DedupOps {
 
   private def scoredCappedIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents"))
-      scoredCappedBody(s, d)
-    else
-      shingleMemo.get(s, d, "sc50", rebuild)(
-        scoredCappedBody(s, d, rebuild).localCheckpoint(true))
+    BuiltIndexMemo.get(s, d, "sc50", "documents", rebuild)(
+      scoredCappedBody(s, d, rebuild))
 
   /** The memoized CANONICAL KEEP-LIST index (r20, kind "d41k") — the
     * third artifact tier of the dedup pipeline: shingles (d28 builds)
@@ -239,14 +204,10 @@ object DedupOps {
     * row measures its OWN tier's build over served lower tiers: d28
     * = tokenize+shingle+pairs, d41 = CC + canonicalization over the
     * served pair index, d44 = gates + verdict over the served
-    * keep-list. Same lifecycle as the other tiers: localCheckpointed,
-    * pinned across release(), dropped by releaseIndexes/dir-walk,
-    * bypassed (pure lineage) under a Tables.withShared override. */
+    * keep-list. */
   private[graft] def labelsIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents")) labelsBody(s, d)
-    else shingleMemo.get(s, d, "d41k", rebuild)(
-      labelsBody(s, d).localCheckpoint(true))
+    BuiltIndexMemo.get(s, d, "d41k", "documents", rebuild)(labelsBody(s, d))
 
   /** The memoized CLEAN-CORPUS VERDICT index (r20, kind "d44v") — the
     * final artifact tier: per-document keep/drop decision with a
@@ -260,9 +221,7 @@ object DedupOps {
     * dataset-card and trainer-manifest job reads it. */
   private[graft] def verdictIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents")) verdictBody(s, d)
-    else shingleMemo.get(s, d, "d44v", rebuild)(
-      verdictBody(s, d).localCheckpoint(true))
+    BuiltIndexMemo.get(s, d, "d44v", "documents", rebuild)(verdictBody(s, d))
 
   private def verdictBody(s: SparkSession, d: String): DataFrame = {
     // The DEDUP gate comes from the keep-list tier, OUTSIDE the
@@ -333,17 +292,10 @@ object DedupOps {
         col("cluster_size"))
   }
 
-  /** d28's pair derivation over a given shingle table: shingle
-    * equi-join candidates → inclusion-exclusion Jaccard ≥ 0.8. Kept
-    * separate from the registry entry so [[pairsIndex]] can run it over
-    * either the SERVED index (memo-miss build) or a fresh rebuild
-    * (d28's posture). */
-  private def neardupPairs(sh: DataFrame): DataFrame =
-    neardupPairsFrom(sh, postingsBody(sh))
-
-  /** d28's pair scoring with the exploded posting stream supplied by
-    * the caller (the served [[postingsIndex]] on the memo path; a
-    * pure-lineage [[postingsBody]] under an override). */
+  /** d28's pair derivation over a given shingle table and its
+    * exploded posting stream (the served [[postingsIndex]]; pure
+    * lineage under an override): shingle equi-join candidates →
+    * inclusion-exclusion Jaccard ≥ 0.8. */
   private def neardupPairsFrom(sh: DataFrame, ex: DataFrame): DataFrame = {
     // join on xxhash64(shingle), not the shingle string: the shuffle
     // ships and compares 8-byte keys instead of ~20-byte strings

@@ -40,15 +40,17 @@ object MultimodalOps extends Serializable {
     array(feats: _*)
   }
 
-  /** Session-scoped memo for the BUILT asset KEEP-LIST (r21 — the
-    * m-family mirror of the dedup d41k tier): m43's connected
+  /** The BUILT asset KEEP-LIST (r21, kind "m43k" — the m-family
+    * mirror of the dedup d41k tier): m43's connected
     * components + canonical-survivor labeling over the m36 phash
     * similarity edges used to re-run inside m44 per invocation. m43
     * is the build row (rebuilds unconditionally, so its bench row
     * keeps measuring edge derivation + CC + labeling); m44's verdict
-    * serves. Standard BuiltIndexMemo lifecycle; bypassed (pure
-    * lineage) under a Tables.withShared override of `documents`. */
-  private val mmMemo = new BuiltIndexMemo
+    * serves. */
+  private[graft] def assetLabelsIndex(s: SparkSession, d: String,
+      rebuild: Boolean = false): DataFrame =
+    BuiltIndexMemo.get(s, d, "m43k", "documents", rebuild)(
+      assetLabelsBody(s, d))
 
   private def assetLabelsBody(s: SparkSession, d: String): DataFrame = {
     val edges = queries("m36_asset_similarity")(s, d)
@@ -69,12 +71,6 @@ object MultimodalOps extends Serializable {
         (col("doc_id") === col("cluster_rep")).as("keep"),
         col("cluster_size"))
   }
-
-  private[graft] def assetLabelsIndex(s: SparkSession, d: String,
-      rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents")) assetLabelsBody(s, d)
-    else mmMemo.get(s, d, "m43k", rebuild)(
-      assetLabelsBody(s, d).localCheckpoint(true))
 
   /** documents rendered as a multimodal table:
     * (doc_id, payload binary, meta struct). */

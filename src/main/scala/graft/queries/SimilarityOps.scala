@@ -160,47 +160,9 @@ object SimilarityOps {
   private def cellAssignMemo(s: SparkSession, d: String): DataFrame =
     memoGet(s, d, "cell")(cellAssignEager(emb(s, d)))
 
-  /** Session-scoped memo for the BUILT NN-descent edge tables: layer 0
-    * (the full-corpus kNN graph shared by s72/s73/s74) and layer 1
-    * (s74's /8 entry tier). Unlike [[indexMemo]] — pure-lineage plans,
-    * cleared on every SparkEntry.release() — these entries are
-    * localCheckpointed fixed points: six supersteps of shuffled
-    * candidate scoring that CANNOT be recomputed once their blocks
-    * drop, and whose build dominates the family's cost. They are the
-    * graph-ANN analogue of [[ElbowQuantizer]]'s fitted centroids: a
-    * built INDEX, constructed once per (session, dir) and then SERVED
-    * many times. RELEASE SEMANTICS (VERDICT r18 item 1a, documented
-    * here and at SparkEntry.release): release() keeps these — their
-    * RDD ids are pinned via [[pinnedGraphRddIds]] — and only
-    * SparkEntry.releaseIndexes(), a dir switch (the same dir-walk
-    * eviction as [[memoGet]]), or s72's explicit rebuild drops one.
-    * Size is tiny relative to the corpus it indexes: ≤ K rows per node
-    * of (long, long, double) — the 100 TB posture is exactly this,
-    * an edge table pinned in cluster storage while query batches come
-    * and go. Without the memo one bench pass built the same layer-0
-    * fixed point four times over (s72, s73 via s72's entry, s74). */
-  private val graphMemo = new BuiltIndexMemo
-
-  /** RDD ids whose blocks SparkEntry.release() must leave resident,
-    * scoped to the session being released (ADVICE r19). */
-  private[graft] def pinnedGraphRddIds(s: SparkSession): Set[Int] =
-    graphMemo.pinnedRddIds(s)
-
-  /** Drop the session's memoized graph indexes — blocks and handles. */
-  private[graft] def clearGraphMemo(s: SparkSession): Unit =
-    graphMemo.clear(s)
-
-  /** See [[BuiltIndexMemo.get]] — dir-walk + dead-session eviction;
-    * `rebuild = true` is s72's posture: that query IS the index build,
-    * so it must never report a memo hit — and its run refreshes what
-    * s73/s74 serve. */
-  private def graphMemoGet(s: SparkSession, d: String, kind: String,
-      rebuild: Boolean = false)(build: => DataFrame): DataFrame =
-    graphMemo.get(s, d, kind, rebuild)(build)
-
-  /** Session-scoped memo for the BUILT eval artifacts (r21) — the
-    * tables the index-eval suite publishes once per corpus snapshot
-    * and every recall row then joins:
+  /** The BUILT eval artifacts (r21) — the tables the index-eval suite
+    * publishes once per corpus snapshot and every recall row then
+    * joins:
     *
     *  - "gt10": the exact brute-force ground truth, top-10 per query
     *    (the s33 derivation to depth 10 — s33's own top-5 is its
@@ -216,13 +178,10 @@ object SimilarityOps {
     * At 100 TB the ground truth is computed once over a bounded query
     * sample and stored next to the index; every eval is a join against
     * it — exactly this split. All entries are ≤ (10 queries × 10
-    * rows); the checkpoint cost is a barrier, not storage. Standard
-    * [[BuiltIndexMemo]] lifecycle; bypassed (pure lineage) under a
-    * Tables.withShared override of the embeddings table. */
-  private val evalMemo = new BuiltIndexMemo
-
-  private[graft] def pinnedEvalRddIds(s: SparkSession): Set[Int] =
-    evalMemo.pinnedRddIds(s)
+    * rows); the checkpoint cost is a barrier, not storage. */
+  private def gt10Index(s: SparkSession, d: String,
+      rebuild: Boolean = false): DataFrame =
+    BuiltIndexMemo.get(s, d, "gt10", "embeddings", rebuild)(gt10Body(s, d))
 
   private def gt10Body(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
@@ -237,17 +196,6 @@ object SimilarityOps {
       .select(col("qid"), col("rnk"), col("vec_id").as("neighbor_id"),
         col("cosine"))
   }
-
-  private def gt10Index(s: SparkSession, d: String,
-      rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "embeddings")) gt10Body(s, d)
-    else evalMemo.get(s, d, "gt10", rebuild)(
-      gt10Body(s, d).localCheckpoint(true))
-
-  private def recallIndex(s: SparkSession, d: String, kind: String,
-      rebuild: Boolean)(body: => DataFrame): DataFrame =
-    if (graft.Tables.isShared(s, d, "embeddings")) body
-    else evalMemo.get(s, d, kind, rebuild)(body.localCheckpoint(true))
 
   /** s65's per-query SQ8 recall@10 table (tier "s65r"): ADC search
     * over the sq8Enc-reconstructed corpus vs the served gt10 ground
@@ -279,7 +227,7 @@ object SimilarityOps {
 
   private def sq8RecallIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    recallIndex(s, d, "s65r", rebuild)(sq8RecallBody(s, d))
+    BuiltIndexMemo.get(s, d, "s65r", "embeddings", rebuild)(sq8RecallBody(s, d))
 
   /** s67's per-query binary-Hamming recall@10 table (tier "s67r"):
     * symmetric Hamming search over binCodes vs the served gt10. */
@@ -310,7 +258,8 @@ object SimilarityOps {
 
   private def hammingRecallIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    recallIndex(s, d, "s67r", rebuild)(hammingRecallBody(s, d))
+    BuiltIndexMemo.get(s, d, "s67r", "embeddings", rebuild)(
+      hammingRecallBody(s, d))
 
   /** The four PROBE-RESULT tiers (r21, kinds "s37p"/"s40p"/"s42p"/
     * "s43p"): each index variant's published top-k candidate table —
@@ -320,8 +269,7 @@ object SimilarityOps {
     * joins the stored lists against the ground truth — the split these
     * tiers encode. s37/s40/s42/s43 are the build rows (rebuild
     * unconditionally, so their bench rows keep measuring the index
-    * probe itself); s48 serves all four, s45 serves s37's. Same
-    * lifecycle/bypass as the gt10 tier above. */
+    * probe itself); s48 serves all four, s45 serves s37's. */
   private def ivfProbeBody(s: SparkSession, d: String): DataFrame = {
     val cell = cellAssignMemo(s, d)
     val q = cell.filter(col("vec_id") < 10)
@@ -340,7 +288,7 @@ object SimilarityOps {
 
   private def ivfProbeIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    recallIndex(s, d, "s37p", rebuild)(ivfProbeBody(s, d))
+    BuiltIndexMemo.get(s, d, "s37p", "embeddings", rebuild)(ivfProbeBody(s, d))
 
   private def trainedProbeBody(s: SparkSession, d: String): DataFrame = {
     val ranked = trainedRanked(s, d)
@@ -364,7 +312,8 @@ object SimilarityOps {
 
   private def trainedProbeIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    recallIndex(s, d, "s40p", rebuild)(trainedProbeBody(s, d))
+    BuiltIndexMemo.get(s, d, "s40p", "embeddings", rebuild)(
+      trainedProbeBody(s, d))
 
   private def pqProbeBody(s: SparkSession, d: String): DataFrame = {
     val pq = PqModel.model(s, d)
@@ -395,7 +344,7 @@ object SimilarityOps {
 
   private def pqProbeIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    recallIndex(s, d, "s42p", rebuild)(pqProbeBody(s, d))
+    BuiltIndexMemo.get(s, d, "s42p", "embeddings", rebuild)(pqProbeBody(s, d))
 
   private def residProbeBody(s: SparkSession, d: String): DataFrame = {
     val ranked = trainedRanked(s, d)
@@ -428,28 +377,39 @@ object SimilarityOps {
 
   private def residProbeIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    recallIndex(s, d, "s43p", rebuild)(residProbeBody(s, d))
+    BuiltIndexMemo.get(s, d, "s43p", "embeddings", rebuild)(
+      residProbeBody(s, d))
 
-  /** Layer-0 NN-descent edges (src, dst, cosine; out-degree ≤ K) —
-    * build-on-miss, serve-from-memo thereafter. Under a
-    * Tables.withShared override of the embeddings table the memo is
-    * bypassed both ways (no serve, no publish — Tables.isShared): a
-    * corpus index is only valid for the real corpus, and publishing
-    * one built from a substituted frame would poison every
-    * post-override serving query in the session. The bypass build
-    * still localCheckpoints internally (the fixed point requires it);
-    * its unpinned blocks die at the next release(). */
-  private def nndescentEdges(s: SparkSession, d: String): DataFrame =
-    if (graft.Tables.isShared(s, d, "embeddings")) nndescentLayer0Build(s, d)
-    else graphMemoGet(s, d, "nnd0")(nndescentLayer0Build(s, d))
+  /** The BUILT NN-descent edge tables: layer 0 (kind "nnd0", the
+    * full-corpus kNN graph shared by s72/s73/s74; src, dst, cosine;
+    * out-degree ≤ K) and layer 1 (kind "nnd1", s74's /8 entry tier).
+    * Unlike [[indexMemo]] — pure-lineage plans, cleared on every
+    * SparkEntry.release() — these are localCheckpointed fixed points:
+    * six supersteps of shuffled candidate scoring that CANNOT be
+    * recomputed once their blocks drop, and whose build dominates the
+    * family's cost. They are the graph-ANN analogue of
+    * [[ElbowQuantizer]]'s fitted centroids: a built INDEX, constructed
+    * once per (session, dir) and then SERVED many times; `rebuild =
+    * true` is s72's posture (that query IS the index build). Size is
+    * tiny relative to the corpus it indexes: ≤ K rows per node of
+    * (long, long, double) — the 100 TB posture is exactly this, an
+    * edge table pinned in cluster storage while query batches come and
+    * go. Without the memo one bench pass built the same layer-0 fixed
+    * point four times over (s72, s73 via s72's entry, s74). The build
+    * localCheckpoints per superstep, so it also returns a checkpoint
+    * under an override; its unpinned blocks die at the next
+    * release(). */
+  private def nndescentEdges(s: SparkSession, d: String,
+      rebuild: Boolean = false): DataFrame =
+    BuiltIndexMemo.get(s, d, "nnd0", "embeddings", rebuild)(
+      nndescentLayer0Build(s, d))
 
   /** s74's /8 entry-tier edges, re-keyed to contiguous rank ids —
     * the same derivation as s74's `e1` (filter every 8th, rank id =
     * vec_id/8), so the memoized graph is exactly what the oracle's
     * `e1` CTE chain unrolls. */
   private def nndescentEdges1(s: SparkSession, d: String): DataFrame =
-    if (graft.Tables.isShared(s, d, "embeddings")) nndescentLayer1Build(s, d)
-    else graphMemoGet(s, d, "nnd1")(nndescentLayer1Build(s, d))
+    BuiltIndexMemo.get(s, d, "nnd1", "embeddings")(nndescentLayer1Build(s, d))
 
   private def nndescentLayer1Build(s: SparkSession, d: String): DataFrame = {
       val e1 = emb(s, d).select(col("vec_id"), col("emb"))
@@ -1953,14 +1913,8 @@ object SimilarityOps {
     "s72_nndescent_knn_graph" -> { (s, d) =>
       // this query IS the index build: it always rebuilds (never
       // reports a memo hit — its bench row keeps measuring the build),
-      // and the rebuild refreshes what s73/s74 serve from [[graphMemo]]
-      // — unless a Tables.withShared override is active, in which case
-      // the build must NOT be published (see [[nndescentEdges]])
-      val g =
-        if (graft.Tables.isShared(s, d, "embeddings"))
-          nndescentLayer0Build(s, d)
-        else graphMemoGet(s, d, "nnd0", rebuild = true)(
-          nndescentLayer0Build(s, d))
+      // and the rebuild refreshes what s73/s74 serve
+      val g = nndescentEdges(s, d, rebuild = true)
       // final ranks: ≤ K rows per src — the only acceptable use of a
       // bounded per-key window (the s44 posture)
       val w = Window.partitionBy(col("src"))

@@ -33,8 +33,8 @@ object TextOps {
 
   private val stopwords = Seq("the", "a", "and", "of")
 
-  /** Session-scoped memo for the BUILT per-doc PERPLEXITY table (r21
-    * — the deferred r20 forward note): t36's bigram-LM fit +
+  /** The BUILT per-doc PERPLEXITY table (r21, kind "t36p" — the
+    * deferred r20 forward note): t36's bigram-LM fit +
     * per-document scoring used to re-run inside every composer that
     * reads the perplexity signal (t48's quartile buckets, t51's
     * calibration, q106's rank correlation — ~0.8–1 s of identical
@@ -43,11 +43,11 @@ object TextOps {
     * once per corpus snapshot and every curation job joins it — the
     * same build-once/serve-many posture as the dedup tiers. t36 is
     * the build row (rebuilds unconditionally, so its bench row keeps
-    * measuring the fit + scoring); lifecycle is the standard
-    * BuiltIndexMemo contract (localCheckpointed, pinned across
-    * release, torn down by releaseIndexes/dir-walk, bypassed as pure
-    * lineage under a Tables.withShared override of `documents`). */
-  private val textMemo = new BuiltIndexMemo
+    * measuring the fit + scoring). */
+  private[graft] def perplexityIndex(s: SparkSession, d: String,
+      rebuild: Boolean = false): DataFrame =
+    BuiltIndexMemo.get(s, d, "t36p", "documents", rebuild)(
+      perplexityBody(s, d))
 
   private def perplexityBody(s: SparkSession, d: String): DataFrame = {
     val bg = t(s, d, "documents")
@@ -80,12 +80,6 @@ object TextOps {
         round(pow(lit(2.0), nll), 4).as("perplexity"))
   }
 
-  private[graft] def perplexityIndex(s: SparkSession, d: String,
-      rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents")) perplexityBody(s, d)
-    else textMemo.get(s, d, "t36p", rebuild)(
-      perplexityBody(s, d).localCheckpoint(true))
-
   /** The BUILT 8-token span-digest stream (r21, kind "sp8" — the text
     * family's analog of the dedup posting list): one row per (doc_id,
     * source, DISTINCT span_md5) over docs with ≥ 8 tokens, the stream
@@ -99,10 +93,9 @@ object TextOps {
     * measuring the full derivation + checkpoint; t40 (novelty) and t38
     * (top spans per source) serve. t59 is deliberately NOT a consumer:
     * its accounting is position-aware (posexplode, no per-doc
-    * distinct) — a different artifact. Standard BuiltIndexMemo
-    * lifecycle; bypassed under a Tables.withShared override of
-    * `documents` (pure lineage, persisted at the multi-consumer reuse
-    * point — every consumer fans the stream into ≥ 2 plan branches). */
+    * distinct) — a different artifact. Under an override the
+    * pure-lineage stream is persisted at the multi-consumer reuse
+    * point: every consumer fans it into ≥ 2 plan branches. */
   private def spans8Body(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .withColumn("w", tokens(col("text")))
@@ -114,14 +107,8 @@ object TextOps {
 
   private[graft] def spans8Index(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents"))
-      spans8Body(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else textMemo.get(s, d, "sp8", rebuild)(
-      spans8Body(s, d).localCheckpoint(true))
-
-  private[graft] def pinnedTextRddIds(s: SparkSession): Set[Int] =
-    textMemo.pinnedRddIds(s)
+    BuiltIndexMemo.get(s, d, "sp8", "documents", rebuild,
+      persistOnBypass = true)(spans8Body(s, d))
 
   /** The BUILT per-doc quality-verdict table (r21, kind "t35q"): t35's
     * five rule signals + reason/keep verdict, one row per document —
@@ -133,14 +120,12 @@ object TextOps {
     * every downstream curation job joins it — the same posture as the
     * perplexity tier above. t35 is the designated BUILD row (rebuilds
     * unconditionally, so its bench row keeps measuring the full signal
-    * derivation + checkpoint); standard BuiltIndexMemo lifecycle;
-    * bypassed as pure lineage under a Tables.withShared override of
-    * `documents` (d44's composite gate substitutes a shared scan). */
+    * derivation + checkpoint). d44's composite gate reads it under a
+    * shared-scan override of `documents`, so there it is pure
+    * lineage. */
   private[graft] def qualityIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    if (graft.Tables.isShared(s, d, "documents")) qualityBody(s, d)
-    else textMemo.get(s, d, "t35q", rebuild)(
-      qualityBody(s, d).localCheckpoint(true))
+    BuiltIndexMemo.get(s, d, "t35q", "documents", rebuild)(qualityBody(s, d))
 
   private def qualityBody(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "documents")

@@ -44,22 +44,27 @@ object GraftBridge {
     * `blocking = true` waits until the blocks are gone, so a call that
     * checkpoints for its own use is charged its cleanup. */
   def uncheckpoint(df: DataFrame, blocking: Boolean = false): Unit =
-    analyzedPlan(df) match {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking)
-      case other => throw new IllegalArgumentException(
-        "uncheckpoint expects the localCheckpointed DataFrame itself " +
-          s"(root LogicalRDD), got plan root ${other.getClass.getSimpleName}")
-    }
+    checkpointRdd(df, "uncheckpoint").unpersist(blocking)
 
   /** The id of the block-manager-resident RDD behind a localCheckpointed
     * DataFrame — lets lifecycle code (SparkEntry.release) identify PINNED
     * index blocks and leave them resident while everything else is
     * unpersisted. Same root-only contract as [[uncheckpoint]]. */
   def checkpointRddId(df: DataFrame): Int =
+    checkpointRdd(df, "checkpointRddId").id
+
+  /** True when `df` is itself a localCheckpointed DataFrame — the
+    * root-only test [[uncheckpoint]] and [[checkpointRddId]] apply. */
+  def isCheckpointed(df: DataFrame): Boolean = rootRdd(df).isDefined
+
+  private def rootRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     analyzedPlan(df) match {
-      case lr: execution.LogicalRDD => lr.rdd.id
-      case other => throw new IllegalArgumentException(
-        "checkpointRddId expects the localCheckpointed DataFrame itself " +
-          s"(root LogicalRDD), got plan root ${other.getClass.getSimpleName}")
+      case lr: execution.LogicalRDD => Some(lr.rdd)
+      case _ => None
     }
+
+  private def checkpointRdd(df: DataFrame, op: String) =
+    rootRdd(df).getOrElse(throw new IllegalArgumentException(
+      s"$op expects the localCheckpointed DataFrame itself (root " +
+        s"LogicalRDD), got plan root ${analyzedPlan(df).getClass.getSimpleName}"))
 }

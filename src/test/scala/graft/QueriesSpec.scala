@@ -5,6 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every registered query runs on sf0.001; spot-checks against golden
   * values computed independently (DuckDB) from the fixed corpus. */
 class QueriesSpec extends AnyFunSuite with SparkTestBase {
+  import graft.queries.BuiltIndexMemo
+
+  /** Checkpoint RDD ids of this session's published tiers of `kinds`. */
+  private def pinnedOf(kinds: Set[String]): Set[Int] =
+    BuiltIndexMemo.pinned(spark).collect { case (k, id) if kinds(k) => id }
+      .toSet
+  private val graphTiers = Set("nnd0", "nnd1")
+  private val dedupTiers =
+    Set("sh3", "exh", "ex50", "sc50", "nd08", "d41k", "d44v")
+  private val textTiers = Set("t36p", "sp8", "t35q")
+  private val evalTiers =
+    Set("gt10", "s37p", "s40p", "s42p", "s43p", "s65r", "s67r")
 
   test("every query in the registry has either an oracle or a documented rows-only reason") {
     val rowsOnly = SparkEntry.rowsOnly // single source of truth; Verify warns on drift at runtime
@@ -84,7 +96,6 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("graph-index lifecycle: release keeps the pinned NN-descent index, releaseIndexes drops it, memo-hit == fresh rebuild") {
-    import graft.queries.SimilarityOps
     SparkEntry.releaseIndexes(spark) // start clean
     def rows(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sf0001)
@@ -92,7 +103,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // s73 builds layer 0 on miss; the built index must survive release()
     val served = rows("s73_graph_ann_nndescent")
     SparkEntry.release(spark)
-    val pinned = SimilarityOps.pinnedGraphRddIds(spark)
+    val pinned = pinnedOf(graphTiers)
     assert(pinned.nonEmpty, "release() must keep the built graph index")
     assert(pinned.subsetOf(spark.sparkContext.getPersistentRDDs.keySet),
       "pinned index blocks must still be resident after release()")
@@ -102,7 +113,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // serving from the memo must equal a fresh build row-for-row
     val servedFromMemo = rows("s73_graph_ann_nndescent")
     SparkEntry.releaseIndexes(spark)
-    assert(SimilarityOps.pinnedGraphRddIds(spark).isEmpty &&
+    assert(pinnedOf(graphTiers).isEmpty &&
       spark.sparkContext.getPersistentRDDs.isEmpty,
       "releaseIndexes() must drop the pins and every block")
     val rebuilt = rows("s73_graph_ann_nndescent")
@@ -110,35 +121,85 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
       "memo-hit and fresh-rebuild results must be identical")
     // s72 is the build query: running it must REFRESH the pin, not hit it
     SparkEntry.queries("s72_nndescent_knn_graph")(spark, sf0001).count()
-    val pinnedBefore = SimilarityOps.pinnedGraphRddIds(spark)
+    val pinnedBefore = pinnedOf(graphTiers)
     SparkEntry.queries("s72_nndescent_knn_graph")(spark, sf0001).count()
-    val pinnedAfter = SimilarityOps.pinnedGraphRddIds(spark)
+    val pinnedAfter = pinnedOf(graphTiers)
     assert((pinnedBefore & pinnedAfter).isEmpty,
       "s72 must rebuild (new checkpoint RDD), never serve a memo hit")
     SparkEntry.releaseIndexes(spark)
   }
 
   test("graph-index dir walk: switching sf dirs evicts the old pin and replaces it") {
-    import graft.queries.SimilarityOps
     SparkEntry.releaseIndexes(spark)
+    // an sp8 text tier beside the graph: the dir switch below runs
+    // through the graph family only, yet must evict BOTH old-dir pins
+    SparkEntry.queries("t40_ngram_novelty")(spark, sf0001).count()
+    val sp8Pin = BuiltIndexMemo.pinned(spark)("sp8")
     SparkEntry.queries("s73_graph_ann_nndescent")(spark, sf0001).count()
-    val pinned1 = SimilarityOps.pinnedGraphRddIds(spark)
+    val pinned1 = pinnedOf(graphTiers)
     assert(pinned1.nonEmpty)
-    // a dir-walking caller must hold at most one dir's index per kind:
-    // the sf0.01 build evicts (and uncheckpoints) the sf0.001 entry
+    // a session holds one dir's tiers at a time: the sf0.01 build
+    // evicts (and, at release, uncheckpoints) every sf0.001 entry
     SparkEntry.queries("s73_graph_ann_nndescent")(spark,
       "/root/testdata/sf0.01").count()
-    val pinned2 = SimilarityOps.pinnedGraphRddIds(spark)
+    val pinned2 = pinnedOf(graphTiers)
     assert(pinned2.nonEmpty && (pinned1 & pinned2).isEmpty,
       "old dir's index must be evicted, new dir's pinned")
+    assert(!BuiltIndexMemo.pinned(spark).contains("sp8"),
+      "a dir switch must evict the old dir's tiers of every family")
     SparkEntry.release(spark)
-    assert(!pinned1.exists(spark.sparkContext.getPersistentRDDs.keySet),
+    assert(!(pinned1 + sp8Pin).exists(
+      spark.sparkContext.getPersistentRDDs.keySet),
       "evicted index blocks must not stay resident")
     SparkEntry.releaseIndexes(spark)
   }
 
+  test("one session's release keeps another live session's tiers: its serving rows still resolve") {
+    // RDD storage is per SparkContext, so a release that unpersists by
+    // RDD id reaches every session's blocks: it must leave the other
+    // session's checkpointed tiers resident, or that session's next
+    // serving row reads blocks that cannot be recomputed
+    val b = spark.newSession()
+    def rows(s: org.apache.spark.sql.SparkSession, name: String) =
+      SparkEntry.queries(name)(s, sf0001).collect().map(_.toString).sorted.toSeq
+    SparkEntry.releaseIndexes(spark)
+    try {
+      SparkEntry.queries("d28_neardup_jaccard")(b, sf0001).count()
+      val bPins = BuiltIndexMemo.pinned(b).values.toSet
+      assert(bPins.nonEmpty)
+      SparkEntry.queries("q01_pricing_summary")(spark, sf0001).count()
+      SparkEntry.release(spark)
+      assert(bPins.subsetOf(spark.sparkContext.getPersistentRDDs.keySet),
+        "another session's tiers must survive this session's release")
+      val served = rows(b, "d31_dedup_clusters")
+      SparkEntry.releaseIndexes(b)
+      assert(rows(b, "d31_dedup_clusters") == served,
+        "served rows must equal a fresh rebuild")
+    } finally SparkEntry.releaseIndexes(b)
+  }
+
+  test("every built-index tier is declared once through BuiltIndexMemo.get, the only Tables.isShared caller") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+      .toSeq
+    // a hand-wired bypass branch elsewhere would fork the lifecycle
+    assert(sources.filter(_._2.contains("isShared(")).map(_._1).toSet ==
+      Set("Tables.scala", "BuiltIndexMemo.scala"))
+    val calls = sources.map(f => "BuiltIndexMemo\\.get\\(".r
+      .findAllMatchIn(f._2).size).sum
+    val kinds = sources.flatMap(f =>
+      "BuiltIndexMemo\\.get\\(\\s*\\w+,\\s*\\w+,\\s*\"(\\w+)\"".r
+        .findAllMatchIn(f._2).map(_.group(1)))
+    assert(kinds.size == calls, "every tier must name its kind as a literal")
+    // each kind declared once: a reused kind would alias two tiers
+    val all = graphTiers ++ dedupTiers ++ textTiers ++ evalTiers + "m43k"
+    assert(all.size == 20 && kinds.sorted == all.toSeq.sorted, kinds.sorted)
+  }
+
   test("shingle-index lifecycle: release keeps the pin, d28 rebuilds and defers the old generation, releaseIndexes drops all") {
-    import graft.queries.DedupOps
     SparkEntry.releaseIndexes(spark) // start clean
     def rows(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sf0001)
@@ -146,7 +207,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // d33 serves: builds the index on miss; it must survive release()
     val served = rows("d33_neardup_capped")
     SparkEntry.release(spark)
-    val pinned = DedupOps.pinnedShingleRddIds(spark)
+    val pinned = pinnedOf(dedupTiers)
     assert(pinned.nonEmpty, "release() must keep the built shingle index")
     assert(pinned.subsetOf(spark.sparkContext.getPersistentRDDs.keySet),
       "pinned shingle blocks must still be resident after release()")
@@ -155,7 +216,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // serving from the memo must equal a fresh build row-for-row
     val servedFromMemo = rows("d33_neardup_capped")
     SparkEntry.releaseIndexes(spark)
-    assert(DedupOps.pinnedShingleRddIds(spark).isEmpty &&
+    assert(pinnedOf(dedupTiers).isEmpty &&
       spark.sparkContext.getPersistentRDDs.isEmpty,
       "releaseIndexes() must drop the pins and every block")
     val rebuilt = rows("d33_neardup_capped")
@@ -164,9 +225,9 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // d33 is itself the build row of the capped tiers (r21): a second
     // run must refresh ex50/sc50 (new checkpoint RDDs somewhere in the
     // pin set), never serve them as hits
-    val d33Pins1 = DedupOps.pinnedShingleRddIds(spark)
+    val d33Pins1 = pinnedOf(dedupTiers)
     SparkEntry.queries("d33_neardup_capped")(spark, sf0001).count()
-    val d33Pins2 = DedupOps.pinnedShingleRddIds(spark)
+    val d33Pins2 = pinnedOf(dedupTiers)
     assert((d33Pins2 -- d33Pins1).nonEmpty,
       "d33 must rebuild its capped tiers, never serve them as hits")
     // d28 is the build row of the LOWER tiers (shingles, postings,
@@ -177,9 +238,9 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // rebuild — that is d33's job) don't sit in the intersection.
     SparkEntry.releaseIndexes(spark)
     SparkEntry.queries("d28_neardup_jaccard")(spark, sf0001).count()
-    val pinnedBefore = DedupOps.pinnedShingleRddIds(spark)
+    val pinnedBefore = pinnedOf(dedupTiers)
     SparkEntry.queries("d28_neardup_jaccard")(spark, sf0001).count()
-    val pinnedAfter = DedupOps.pinnedShingleRddIds(spark)
+    val pinnedAfter = pinnedOf(dedupTiers)
     assert((pinnedBefore & pinnedAfter).isEmpty,
       "d28 must rebuild (new checkpoint RDD), never serve a memo hit")
     assert(pinnedBefore.subsetOf(spark.sparkContext.getPersistentRDDs.keySet),
@@ -193,7 +254,6 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("near-dup pair index lifecycle: composers serve the built edge list, d28 refreshes it, memo-hit ≡ fresh rebuild") {
-    import graft.queries.DedupOps
     SparkEntry.releaseIndexes(spark) // start clean
     def rows(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sf0001)
@@ -201,7 +261,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // d31 serves: a miss builds BOTH tiers (shingle index + pair index)
     val served = rows("d31_dedup_clusters")
     SparkEntry.release(spark)
-    val pinned = DedupOps.pinnedShingleRddIds(spark)
+    val pinned = pinnedOf(dedupTiers)
     assert(pinned.size >= 2,
       "both the shingle index and the pair index must be pinned")
     // serving from the memo must equal a fresh build row-for-row
@@ -214,9 +274,9 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // checkpoint RDDs), never serve a hit, and its rows must equal the
     // edge list a fresh session derives
     val viaServe = rows("d28_neardup_jaccard")
-    val pinnedBefore = DedupOps.pinnedShingleRddIds(spark)
+    val pinnedBefore = pinnedOf(dedupTiers)
     SparkEntry.queries("d28_neardup_jaccard")(spark, sf0001).count()
-    val pinnedAfter = DedupOps.pinnedShingleRddIds(spark)
+    val pinnedAfter = pinnedOf(dedupTiers)
     assert((pinnedBefore & pinnedAfter).isEmpty,
       "d28 must rebuild both indexes, never serve a memo hit")
     SparkEntry.releaseIndexes(spark)
@@ -226,7 +286,6 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("keep-list + verdict tiers: build rows refresh their own tier over served lower tiers; serving ≡ rebuild") {
-    import graft.queries.DedupOps
     SparkEntry.releaseIndexes(spark) // start clean
     def rows(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sf0001)
@@ -235,7 +294,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // (shingles → pairs → keep-list → verdict), all pinned
     val served = rows("q104_curation_funnel")
     SparkEntry.release(spark)
-    assert(DedupOps.pinnedShingleRddIds(spark).size >= 4,
+    assert(pinnedOf(dedupTiers).size >= 4,
       "all four dedup tiers (sh3/nd08/d41k/d44v) must be pinned")
     // serving ≡ fresh rebuild row-for-row
     val servedFromMemo = rows("q104_curation_funnel")
@@ -247,22 +306,21 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // ONLY its own tier's checkpoint while the served lower tiers'
     // pins stay put
     rows("d44_clean_corpus")
-    val p1 = DedupOps.pinnedShingleRddIds(spark)
+    val p1 = pinnedOf(dedupTiers)
     rows("d44_clean_corpus")
-    val p2 = DedupOps.pinnedShingleRddIds(spark)
+    val p2 = pinnedOf(dedupTiers)
     assert((p1 & p2).nonEmpty && p1 != p2,
       "d44 must refresh its own tier while serving the lower tiers")
     // d41 likewise for the keep-list tier
-    val p3 = DedupOps.pinnedShingleRddIds(spark)
+    val p3 = pinnedOf(dedupTiers)
     rows("d41_canonical_docs")
-    val p4 = DedupOps.pinnedShingleRddIds(spark)
+    val p4 = pinnedOf(dedupTiers)
     assert((p3 & p4).nonEmpty && p3 != p4,
       "d41 must refresh its own tier while serving the lower tiers")
     SparkEntry.releaseIndexes(spark)
   }
 
   test("sp8 span-digest tier: t40/t38 serve the built stream, t37 rebuilds it, memo-hit ≡ fresh rebuild") {
-    import graft.queries.TextOps
     SparkEntry.releaseIndexes(spark) // start clean
     def rows(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sf0001)
@@ -270,13 +328,13 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // t40 builds the stream on miss; the tier must survive release()
     val served = rows("t40_ngram_novelty")
     SparkEntry.release(spark)
-    assert(TextOps.pinnedTextRddIds(spark).nonEmpty,
+    assert(pinnedOf(textTiers).nonEmpty,
       "release() must keep the built span tier")
     // serving ≡ fresh rebuild row-for-row, for both serving consumers
     val servedAgain = rows("t40_ngram_novelty")
     val t38Served = rows("t38_top_spans_per_source")
     SparkEntry.releaseIndexes(spark)
-    assert(TextOps.pinnedTextRddIds(spark).isEmpty,
+    assert(pinnedOf(textTiers).isEmpty,
       "releaseIndexes() must drop the span-tier pin")
     val rebuilt = rows("t40_ngram_novelty")
     val t38Rebuilt = rows("t38_top_spans_per_source")
@@ -286,16 +344,15 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
       "served and rebuilt t38 rows must be identical")
     // t37 is the build row: consecutive runs must refresh the pin
     rows("t37_dup_span_fraction")
-    val p1 = TextOps.pinnedTextRddIds(spark)
+    val p1 = pinnedOf(textTiers)
     rows("t37_dup_span_fraction")
-    val p2 = TextOps.pinnedTextRddIds(spark)
+    val p2 = pinnedOf(textTiers)
     assert(p1.nonEmpty && (p1 & p2).isEmpty,
       "t37 must rebuild the span tier, never serve a memo hit")
     SparkEntry.releaseIndexes(spark)
   }
 
   test("t35q verdict tier: t65/q95 serve the built signal table, t35 rebuilds it, memo-hit ≡ fresh rebuild") {
-    import graft.queries.TextOps
     SparkEntry.releaseIndexes(spark) // start clean
     def rows(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sf0001)
@@ -303,7 +360,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // t65 builds the tier on miss; it must survive release()
     val served = rows("t65_linear_probe")
     SparkEntry.release(spark)
-    assert(TextOps.pinnedTextRddIds(spark).nonEmpty,
+    assert(pinnedOf(textTiers).nonEmpty,
       "release() must keep the built verdict tier")
     val servedAgain = rows("t65_linear_probe")
     val q95Served = rows("q95_quality_weighted_mix")
@@ -316,16 +373,15 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
       "served and rebuilt q95 rows must be identical")
     // t35 is the build row: consecutive runs must refresh the pin
     rows("t35_quality_filter")
-    val p1 = TextOps.pinnedTextRddIds(spark)
+    val p1 = pinnedOf(textTiers)
     rows("t35_quality_filter")
-    val p2 = TextOps.pinnedTextRddIds(spark)
+    val p2 = pinnedOf(textTiers)
     assert(p1.nonEmpty && (p1 & p2).isEmpty,
       "t35 must rebuild the verdict tier, never serve a memo hit")
     SparkEntry.releaseIndexes(spark)
   }
 
   test("eval tiers: s48/s69 serve the built ground-truth/probe/recall tables, the build rows refresh them, serving ≡ rebuild") {
-    import graft.queries.SimilarityOps
     SparkEntry.releaseIndexes(spark) // start clean
     def rows(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sf0001)
@@ -333,13 +389,13 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // s48 builds gt10 + all four probe tiers on miss; pins survive release()
     val served48 = rows("s48_index_recall_matrix")
     SparkEntry.release(spark)
-    assert(SimilarityOps.pinnedEvalRddIds(spark).size >= 5,
+    assert(pinnedOf(evalTiers).size >= 5,
       "gt10 + four probe tiers must be pinned after s48")
     val s48Again = rows("s48_index_recall_matrix")
     // s69 serves the two recall tiers (building them on miss)
     val served69 = rows("s69_codec_frontier")
     SparkEntry.releaseIndexes(spark)
-    assert(SimilarityOps.pinnedEvalRddIds(spark).isEmpty,
+    assert(pinnedOf(evalTiers).isEmpty,
       "releaseIndexes() must drop every eval-tier pin")
     val rebuilt48 = rows("s48_index_recall_matrix")
     val rebuilt69 = rows("s69_codec_frontier")
@@ -349,9 +405,9 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
       "served and rebuilt s69 rows must be identical")
     // the build rows refresh their own tiers, never serve hits
     rows("s33_knn_bruteforce"); rows("s37_ivf_ann")
-    val p1 = SimilarityOps.pinnedEvalRddIds(spark)
+    val p1 = pinnedOf(evalTiers)
     rows("s33_knn_bruteforce"); rows("s37_ivf_ann")
-    val p2 = SimilarityOps.pinnedEvalRddIds(spark)
+    val p2 = pinnedOf(evalTiers)
     assert(p1.size == p2.size && p1 != p2 && (p1 & p2).nonEmpty,
       "s33/s37 must swap their own tier checkpoints while other pins stay")
     SparkEntry.releaseIndexes(spark)
