@@ -59,35 +59,22 @@ object Bench {
     // ~8 min of the driver's bench budget, the binding constraint that
     // returned rc 124 at r18). A small pool overlaps the driver-side
     // plan/codegen work of one query with the executor-side jobs of
-    // others; the shared memos are already build-race-safe (losers
-    // discard, documented at SimilarityOps.memoGet and BuiltIndexMemo).
-    // Timed passes below are untouched — they stay strictly sequential.
+    // others. Shared state is build-race-safe: the tier memo keeps the
+    // first published build and defers a rebuild's uncheckpoint until
+    // release, so in-flight readers finish (BuiltIndexMemo), and Spark's
+    // CacheManager caches a persisted plan once however many queries
+    // build it. Timed passes below are untouched — they stay strictly
+    // sequential.
     val warmT0 = System.nanoTime()
-    val warmPool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.env.getOrElse("SPARK_GRAFT_WARM_THREADS", "8").toInt)
-    // The NN-descent family shares tier keys and s72 is a
-    // rebuild=true caller (ADVICE r19). Since r20 a rebuild DEFERS the
-    // replaced entry's uncheckpoint (BuiltIndexMemo.deferred), so
-    // rebuild-while-serving can no longer kill an in-flight warm job;
-    // the family still warms sequentially on one pool thread, build
-    // (s72) first, so the expensive fixed-point builds run once
-    // instead of racing as discarded duplicates. (The dedup shingle
-    // family's builds at the warm dir are pennies — its members stay
-    // in the general pool; race losers discard.)
-    val graphFamily = Seq("s72_nndescent_knn_graph",
-      "s73_graph_ann_nndescent", "s74_hnsw_entry_search")
-    def warmOne(name: String): Unit =
-      try SparkEntry.queries(name)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    warmPool.submit(new Runnable {
-      def run(): Unit = graphFamily.filter(selected.contains).foreach(warmOne)
-    })
-    selected.keysIterator
-      .filterNot(graphFamily.contains)
-      .foreach { name =>
-        warmPool.submit(new Runnable { def run(): Unit = warmOne(name) })
-      }
+    val warmPool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    selected.keysIterator.foreach { name =>
+      warmPool.submit(new Runnable {
+        def run(): Unit =
+          try SparkEntry.queries(name)(spark, warmDir)
+            .write.format("noop").mode("overwrite").save()
+          catch { case _: Throwable => }
+      })
+    }
     warmPool.shutdown()
     val warmDone = warmPool.awaitTermination(
       60, java.util.concurrent.TimeUnit.MINUTES)

@@ -19,12 +19,12 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * LIFECYCLE: some queries persist shared stages (shingle sets, ANN
-    * cell assignments) at documented reuse points. A long-lived session
-    * embedding this registry should call [[release]] when it is done
-    * with a query's result — Bench/Verify do so between queries. The
-    * similarity-index memo additionally self-evicts when the same
-    * session asks for a different sfDir, so a dir-walking caller that
-    * never releases holds at most one dir's cached index.
+    * cell assignments) at documented reuse points. Spark's
+    * CacheManager serves a repeat build of the same persisted plan
+    * from the first one's cache, and every persisted stage lives until
+    * [[release]]. A long-lived session embedding this registry should
+    * call [[release]] when it is done with a query's result —
+    * Bench/Verify do so between queries.
     *
     * EAGERNESS: every entry is a lazy plan. d61_shingle_size_sweep's
     * 3-arm sweep sits behind a DeferredRowsPlan leaf (r17) — plan-only
@@ -90,10 +90,6 @@ object SparkEntry {
     * superseded generations are reclaimed. [[releaseIndexes]] is the
     * full teardown of this session's tiers. */
   def release(spark: SparkSession): Unit = {
-    // shared-index memo first: its entries are persisted DataFrames
-    // about to be unpersisted below — a stale handle would silently
-    // recompute unpersisted on next use instead of re-caching
-    graft.queries.SimilarityOps.clearMemo()
     // blocking RDD unpersist FIRST — this is the synchronous barrier
     // (it covers cached-Dataset buffer RDDs too); catalog.clearCache()
     // afterwards drops the CacheManager bookkeeping (its own unpersist

@@ -178,6 +178,21 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     } finally SparkEntry.releaseIndexes(b)
   }
 
+  test("identical index stages share one cache entry: s50 after s49 materializes no second cell assignment") {
+    // s49 and s50 both build the persisted IVF cell assignment; within
+    // one session and without a release, the second build must be
+    // served from the first one's cache, not cached again
+    SparkEntry.releaseIndexes(spark)
+    try {
+      SparkEntry.queries("s49_ivf_cell_stats")(spark, sf0001).count()
+      val afterS49 = spark.sparkContext.getPersistentRDDs.keySet
+      assert(afterS49.nonEmpty, "s49 persists its cell assignment")
+      SparkEntry.queries("s50_two_stage_rerank")(spark, sf0001).count()
+      assert(spark.sparkContext.getPersistentRDDs.keySet == afterS49,
+        "s50 must reuse s49's cached cell assignment")
+    } finally SparkEntry.release(spark)
+  }
+
   test("every built-index tier is declared once through BuiltIndexMemo.get, the only Tables.isShared caller") {
     import scala.jdk.CollectionConverters._
     val sources = java.nio.file.Files.walk(
