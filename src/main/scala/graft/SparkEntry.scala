@@ -84,9 +84,10 @@ object SparkEntry {
     *
     * KEPT ALIVE by design: the built-index tiers of
     * [[graft.queries.BuiltIndexMemo]] — build-once/serve-many
-    * localCheckpointed frames — of EVERY live session on this
-    * SparkContext, plus other sessions' superseded generations still
-    * awaiting their own session's release. Only this session's
+    * localCheckpointed frames, the reef feature frame of
+    * `graft.ml.ReefPipeline.featurize` among them — of EVERY live
+    * session on this SparkContext, plus other sessions' superseded
+    * generations still awaiting their own session's release. Only this session's
     * superseded generations are reclaimed. [[releaseIndexes]] is the
     * full teardown of this session's tiers. */
   def release(spark: SparkSession): Unit = {

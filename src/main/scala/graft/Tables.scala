@@ -78,6 +78,22 @@ object Tables {
   def isShared(spark: SparkSession, dir: String, name: String): Boolean =
     shared.containsKey((spark, dir, name))
 
+  /** The files behind table `name` of `dir`, as sorted (path, length,
+    * modification time) from the Hadoop FileSystem listing: a rewrite
+    * of the table at the same path yields a different fingerprint. */
+  def fingerprint(spark: SparkSession, dir: String,
+      name: String): Seq[(String, Long, Long)] = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val files = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(path, true)
+    val b = Seq.newBuilder[(String, Long, Long)]
+    while (files.hasNext) {
+      val f = files.next()
+      b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    b.result().sorted
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     configure(spark)
     val o = shared.get((spark, dir, name))

@@ -5,11 +5,13 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 /** The built-index TIERS: one session-scoped memo for every BUILT
   * index table the registry serves — the dedup tiers (sh3, exh, ex50,
   * sc50, nd08, d41k, d44v), the text tiers (t36p, sp8, t35q), the
-  * asset keep-list (m43k), the NN-descent graphs (nnd0, nnd1) and the
-  * index-eval tables (gt10, s37p, s40p, s42p, s43p, s65r, s67r). Each
-  * tier helper declares itself in ONE [[get]] call naming its kind and
-  * the corpus table it derives from; this object owns the whole
-  * lifecycle, so a fix here holds for every tier.
+  * asset keep-list (m43k), the NN-descent graphs (nnd0, nnd1), the
+  * index-eval tables (gt10, s37p, s40p, s42p, s43p, s65r, s67r) and the
+  * reef feature frame (reef: `graft.ml.ReefPipeline.featurize`, whose
+  * "dir" is the CSV path and which rebuilds on every call). Each tier
+  * helper declares itself in ONE [[get]] call naming its kind and the
+  * corpus table it derives from; this object owns the whole lifecycle,
+  * so a fix here holds for every tier.
   *
   * Entries are keyed by (session, dir, kind) and are localCheckpointed
   * DataFrames: materialized fixed points or derived corpus tables
@@ -38,7 +40,9 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * for the old dir (deferred, see below), so a caller that walks SF
   * dirs without calling `releaseIndexes` pins at most one corpus's
   * tiers. Entries whose SparkContext has stopped are dropped on the
-  * same sweep: their blocks died with the context's block manager.
+  * same sweep: their blocks died with the context's block manager. A
+  * reef `featurize` and a corpus tier have different dirs, so each
+  * evicts the other.
   *
   * SESSIONS: `release(s)` keeps every live entry on s's SparkContext,
   * whichever session owns it, and other sessions' deferred

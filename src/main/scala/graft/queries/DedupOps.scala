@@ -1858,7 +1858,10 @@ object DedupOps {
     * aggregation in the recursive term, and the iteration count is
     * fixed anyway). Every divide is `//` on BIGINT with all-positive
     * operands ≡ Spark's `div` truncation; sums are integer, so
-    * accumulation order cannot matter. */
+    * accumulation order cannot matter. `edges0` and `sym` are
+    * MATERIALIZED: every `pr` step reads `sym`, and an inlined copy per
+    * step repeats the uncapped shingle self-join, which ran DuckDB out
+    * of memory (12.5 GiB) at sf0.1. */
   private def d37Oracle: String = {
     val scale = graft.operators.GraphRank.Scale
     val baseNum = 15L * scale / 100L
@@ -1886,12 +1889,12 @@ object DedupOps {
        | SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
        | FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
        | GROUP BY 1, 2),
-       |edges0 AS (
+       |edges0 AS MATERIALIZED (
        | SELECT ia, ib FROM pairs
        |  JOIN sizes sa ON sa.doc_id = ia
        |  JOIN sizes sb ON sb.doc_id = ib
        | WHERE inter / (sa.n + sb.n - inter) >= 0.8),
-       |sym AS (SELECT ia AS src, ib AS dst FROM edges0
+       |sym AS MATERIALIZED (SELECT ia AS src, ib AS dst FROM edges0
        |        UNION SELECT ib, ia FROM edges0),
        |nodes AS (SELECT DISTINCT src AS node FROM sym),
        |deg AS (SELECT src AS node, count(*) AS deg FROM sym GROUP BY 1),

@@ -291,7 +291,7 @@ object SimilarityOps {
     // residual codes encode a different domain than s42's raw codes,
     // so they train their own codebooks; like s42's corpus, the encode
     // stays a lazy single-branch plan
-    val pq = pqResidFits(d, 16)(
+    val pq = pqResidFits(s, d, 16)(
       graft.ml.ProductQuantizer.fit(corpus0, embCol = "remb", m = 16, k = 16))
     val corpus = pq.encode(corpus0, embCol = "remb")
       .select(col("vec_id"), col("cid"), col("pq_code"))
@@ -371,20 +371,25 @@ object SimilarityOps {
     try nndescentGraph(e) finally e.unpersist(blocking = false)
   }
 
-  /** Driver-side fitted models, memoized per (SF dir, key) so each is
-    * fit once per process: the fitted parameters enter both engines' plans
-    * as rounded literals (Spark via typed rows or `lit`s, DuckDB via
-    * VALUES clauses in the oracle). [[last]] reads the most recent
-    * dir's fit for those oracle literals — Verify dumps oracle SQL
-    * after the queries run, so the fit has always happened by then. */
+  /** Driver-side fitted models of the embeddings table, memoized per
+    * (SF dir, table fingerprint, key) so each is fit once per process
+    * and corpus: a rewrite of the table at the same path changes the
+    * fingerprint ([[graft.Tables.fingerprint]]), so the next call
+    * refits. The fitted parameters enter both engines' plans as rounded
+    * literals (Spark via typed rows or `lit`s, DuckDB via VALUES
+    * clauses in the oracle). [[last]] reads the most recent corpus's
+    * fit for those oracle literals — Verify dumps oracle SQL after the
+    * queries run, so the fit has always happened by then. */
   private final class FitMemo[K, V] {
-    private val fitted = scala.collection.concurrent.TrieMap.empty[(String, K), V]
-    @volatile private var lastDir: Option[String] = None
-    def apply(d: String, key: K)(fit: => V): V = {
-      lastDir = Some(d)
-      fitted.getOrElseUpdate((d, key), fit)
+    private type Corpus = (String, Seq[(String, Long, Long)])
+    private val fitted = scala.collection.concurrent.TrieMap.empty[(Corpus, K), V]
+    @volatile private var lastCorpus: Option[Corpus] = None
+    def apply(s: SparkSession, d: String, key: K)(fit: => V): V = {
+      val corpus = (d, graft.Tables.fingerprint(s, d, "embeddings"))
+      lastCorpus = Some(corpus)
+      fitted.getOrElseUpdate((corpus, key), fit)
     }
-    def last(key: K): Option[V] = lastDir.flatMap(dd => fitted.get((dd, key)))
+    def last(key: K): Option[V] = lastCorpus.flatMap(c => fitted.get((c, key)))
   }
 
   /** Trained coarse quantizers, keyed by k: seeded k-means on a single
@@ -397,7 +402,7 @@ object SimilarityOps {
   private val kmeansFits = new FitMemo[Int, Array[Array[Double]]]
   private def kmeansCentroids(s: SparkSession, d: String,
       k: Int): Array[Array[Double]] =
-    kmeansFits(d, k) {
+    kmeansFits(s, d, k) {
       new org.apache.spark.ml.clustering.KMeans()
         .setK(k).setSeed(42L).setFeaturesCol("vec")
         .fit(quantizerTrainSet(s, d)).clusterCenters
@@ -412,7 +417,7 @@ object SimilarityOps {
   private val pqFits = new FitMemo[Int, graft.ml.ProductQuantizerModel]
   private def pqModel(s: SparkSession, d: String,
       m: Int): graft.ml.ProductQuantizerModel =
-    pqFits(d, m)(graft.ml.ProductQuantizer.fit(emb(s, d), m = m, k = 16))
+    pqFits(s, d, m)(graft.ml.ProductQuantizer.fit(emb(s, d), m = m, k = 16))
   private val pqSweepMs: Seq[Int] = Seq(2, 4, 8)
 
   /** s43's RESIDUAL product quantizer, keyed by m (16): the same

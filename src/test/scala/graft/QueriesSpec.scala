@@ -193,6 +193,44 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     } finally SparkEntry.release(spark)
   }
 
+  test("fitted centroids follow a same-path rewrite of the embeddings: s40 equals s40 on a fresh path") {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    def copyTree(from: Path, to: Path): Unit =
+      Files.walk(from).iterator().asScala.foreach { p =>
+        val dst = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(dst)
+        else Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
+      }
+    def rows(d: String) = SparkEntry.queries("s40_ivf_trained")(spark, d)
+      .collect().map(_.toString).sorted.toSeq
+    val base = Files.createTempDirectory("rewrite")
+    val rewritten = base.resolve("rewritten")
+    copyTree(java.nio.file.Paths.get(sf0001), rewritten)
+    val d = rewritten.toString
+    try {
+      val before = rows(d)
+      // rewrite embeddings.parquet in place: even vec_ids only
+      val staged = base.resolve("staged").toString
+      spark.read.parquet(s"$d/embeddings.parquet")
+        .filter(org.apache.spark.sql.functions.col("vec_id") % 2 === 0)
+        .coalesce(1).write.parquet(staged)
+      Files.delete(rewritten.resolve("embeddings.parquet"))
+      copyTree(java.nio.file.Paths.get(staged), rewritten.resolve("embeddings.parquet"))
+      SparkEntry.releaseIndexes(spark)
+      val after = rows(d)
+      val afterOracle = SparkEntry.oracleSql("s40_ivf_trained")
+      val fresh = base.resolve("fresh")
+      copyTree(rewritten, fresh)
+      SparkEntry.releaseIndexes(spark)
+      assert(after != before, "the rewrite must change s40's rows")
+      assert(after == rows(fresh.toString),
+        "s40 after a same-path rewrite must equal s40 on a fresh path")
+      assert(afterOracle == SparkEntry.oracleSql("s40_ivf_trained"),
+        "the oracle's centroids must come from the rewritten corpus")
+    } finally SparkEntry.releaseIndexes(spark)
+  }
+
   test("every built-index tier is declared once through BuiltIndexMemo.get, the only Tables.isShared caller") {
     import scala.jdk.CollectionConverters._
     val sources = java.nio.file.Files.walk(
@@ -210,8 +248,8 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
         .findAllMatchIn(f._2).map(_.group(1)))
     assert(kinds.size == calls, "every tier must name its kind as a literal")
     // each kind declared once: a reused kind would alias two tiers
-    val all = graphTiers ++ dedupTiers ++ textTiers ++ evalTiers + "m43k"
-    assert(all.size == 20 && kinds.sorted == all.toSeq.sorted, kinds.sorted)
+    val all = graphTiers ++ dedupTiers ++ textTiers ++ evalTiers + "m43k" + "reef"
+    assert(all.size == 21 && kinds.sorted == all.toSeq.sorted, kinds.sorted)
   }
 
   test("shingle-index lifecycle: release keeps the pin, d28 rebuilds and defers the old generation, releaseIndexes drops all") {

@@ -7,19 +7,29 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ml.{Pipeline, PipelineStage}
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.regression.{GBTRegressor, RandomForestRegressor}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.linalg.Vector
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{SparkEntry, SparkTestBase}
 
 /** Reference-faithful tests of the reef pipeline (FIXTURES.md §1):
   * quoted-comma CSV handling, vocabulary drop semantics, L1
-  * normalization with zero-total guard, vector dims, seeded RMSE. */
-class ReefPipelineSpec extends AnyFunSuite with SparkTestBase {
+  * normalization with zero-total guard, vector dims, seeded RMSE.
+  *
+  * `featured` is the session's "reef" tier: a later `featurize`
+  * supersedes it, and the next `SparkEntry.release` then drops its
+  * blocks. The tests that release therefore come last. */
+class ReefPipelineSpec extends AnyFunSuite with SparkTestBase
+    with BeforeAndAfterAll {
+
+  // the test session is shared by every suite: leave no reef pin behind
+  override def afterAll(): Unit =
+    try SparkEntry.releaseIndexes(spark) finally super.afterAll()
 
   val vocab = Seq("Labridae", "Pomacentridae", "Serranidae", "Chaetodontidae")
 
@@ -53,6 +63,13 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   lazy val featured = ReefPipeline.featurize(spark, csvPath, vocab)
+
+  /** `featurize`'s frame as the lazy plan it checkpoints. */
+  private def featurePlan(path: String): DataFrame = {
+    val vectors = ReefPipeline.countVectors(ReefPipeline.ingest(spark, path), vocab)
+    ReefPipeline.featurePipeline(vocab).fit(vectors).transform(vectors)
+      .select(col("latitude"), col("longitude"), col("features"))
+  }
 
   test("one vector per survey; dims = |vocab| + 1 (latitude appended)") {
     assert(featured.count() === 42)
@@ -156,7 +173,9 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase {
       .map(r => doubleToRawLongBits(r.getDouble(0))).toSeq
 
   test("the checkpointed split, fit and score are bit-identical to the plan's own") {
-    val Array(train, test) = featured.randomSplit(Array(0.7, 0.3), 42L)
+    // the reference path runs on the lazy plan, not on featurize's
+    // checkpoint, so the comparison does not hold the tier against itself
+    val Array(train, test) = featurePlan(csvPath).randomSplit(Array(0.7, 0.3), 42L)
     assert(test.count() > 0, "held-out split must be non-empty")
     for (kind <- Seq(ReefPipeline.RF, ReefPipeline.GBT)) {
       val reference = new Pipeline().setStages(Array(regressor(kind))).fit(train)
@@ -173,47 +192,77 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("trainAndEvaluate and crossValidate pin nothing, also when the fit throws") {
     def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    featured.schema
-    val before = persisted
-    ReefPipeline.trainAndEvaluate(featured, "longitude", ReefPipeline.RF)
-    assert(persisted === before, "RF trainAndEvaluate")
-    ReefPipeline.trainAndEvaluate(featured, "longitude", ReefPipeline.GBT)
-    assert(persisted === before, "GBT trainAndEvaluate")
-    ReefPipeline.crossValidate(featured, "longitude")
-    assert(persisted === before, "crossValidate")
-    intercept[IllegalArgumentException](
-      ReefPipeline.trainAndEvaluate(featured, "no_such_label", ReefPipeline.GBT))
-    assert(persisted === before, "trainAndEvaluate whose fit throws")
-    intercept[IllegalArgumentException](
-      ReefPipeline.crossValidate(featured, "no_such_label"))
-    assert(persisted === before, "crossValidate whose fit throws")
+    // the tier is served as it is; a plain plan gets a call-scoped copy
+    for ((frame, what) <- Seq((featured, "tier"), (featurePlan(csvPath), "plan"))) {
+      val before = persisted
+      ReefPipeline.trainAndEvaluate(frame, "longitude", ReefPipeline.RF)
+      assert(persisted === before, s"RF trainAndEvaluate on the $what")
+      ReefPipeline.trainAndEvaluate(frame, "longitude", ReefPipeline.GBT)
+      assert(persisted === before, s"GBT trainAndEvaluate on the $what")
+      ReefPipeline.crossValidate(frame, "longitude")
+      assert(persisted === before, s"crossValidate on the $what")
+      intercept[IllegalArgumentException](
+        ReefPipeline.trainAndEvaluate(frame, "no_such_label", ReefPipeline.GBT))
+      assert(persisted === before, s"trainAndEvaluate whose fit throws, on the $what")
+      intercept[IllegalArgumentException](
+        ReefPipeline.crossValidate(frame, "no_such_label"))
+      assert(persisted === before, s"crossValidate whose fit throws, on the $what")
+    }
   }
 
-  test("one trainAndEvaluate scans the CSV in exactly one stage") {
-    // a fresh frame: re-running `featured`'s own, already executed plan
-    // would reuse its pivot shuffle and scan nothing
-    val fresh = ReefPipeline.featurize(spark, csvPath, vocab)
-    // a stage scans the CSV if a FileScanRDD is among its narrow
-    // ancestors; stages past the pivot shuffle or the checkpoint stop
-    // short of it
-    val csvStages = new AtomicInteger
+  /** A stage scans the CSV's rows if a FileScanRDD is among its narrow
+    * ancestors and it read more than one record: stages past the pivot
+    * shuffle or a checkpoint stop short of it, and the reader's header
+    * probe (the `spark.read.csv` schema resolution) reads one line. */
+  private def scansCsv(i: StageInfo): Boolean =
+    i.rddInfos.exists(_.name == "FileScanRDD") &&
+      i.taskMetrics.inputMetrics.recordsRead > 1
+
+  /** A stage reads a SQL exchange (here: the pivot's shuffle) if a
+    * ShuffledRowRDD is among its narrow ancestors; the MLlib learners
+    * shuffle RDDs of their own kinds. */
+  private def readsPivot(i: StageInfo): Boolean =
+    i.rddInfos.exists(_.name == "ShuffledRowRDD")
+
+  /** The completed stages that `counted` accepts while `body` runs. */
+  private def stages(counted: StageInfo => Boolean)(body: => Unit): Int = {
+    val n = new AtomicInteger
     val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val info = e.stageInfo
-        if (info.rddInfos.exists(_.name == "FileScanRDD") &&
-            info.taskMetrics.inputMetrics.bytesRead > 0)
-          csvStages.incrementAndGet()
-      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (counted(e.stageInfo)) n.incrementAndGet()
     }
     GraftBridge.waitListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
-      ReefPipeline.trainAndEvaluate(fresh, "longitude", ReefPipeline.GBT)
+      body
       GraftBridge.waitListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
+    n.get
+  }
+
+  test("one trainAndEvaluate scans the CSV in exactly one stage") {
+    // a fresh plain plan: re-running an already executed plan would
+    // reuse its pivot shuffle and scan nothing
+    val plan = featurePlan(csvPath)
     // measured: 3 stages scanned the CSV when the split, fit and score
-    // ran on the feature plan itself; the checkpoint's is the one left
-    assert(csvStages.get === 1)
+    // ran on the feature plan itself; the call's checkpoint is the one left
+    assert(stages(scansCsv)(
+      ReefPipeline.trainAndEvaluate(plan, "longitude", ReefPipeline.GBT)) === 1)
+  }
+
+  test("featurize plus four trainAndEvaluate calls scan the CSV in exactly one stage") {
+    def fourFits(frame: DataFrame): Unit =
+      for (label <- Seq("latitude", "longitude");
+           kind <- Seq(ReefPipeline.RF, ReefPipeline.GBT))
+        ReefPipeline.trainAndEvaluate(frame, label, kind)
+    var frame: DataFrame = null
+    assert(stages(scansCsv) {
+      frame = ReefPipeline.featurize(spark, csvPath, vocab)
+      fourFits(frame)
+    } === 1)
+    // the fits train on featurize's checkpoint: none re-runs the pivot,
+    // where a call-scoped checkpoint of the plan re-reads its shuffle
+    assert(stages(i => scansCsv(i) || readsPivot(i))(fourFits(frame)) === 0)
   }
 
   test("regression learns signal on a 2000-survey synthetic reef (rmse < label stddev)") {
@@ -370,5 +419,46 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase {
     // L1 normalization still holds across the wide, mostly-zero vector
     val shares = v.toArray.dropRight(1)
     assert(math.abs(shares.sum - 1.0) < 1e-9 || shares.sum == 0.0)
+  }
+
+  // the tests below call SparkEntry.release, which drops superseded
+  // reef generations such as `featured`: keep them last
+
+  private def rmseBits(frame: DataFrame): Seq[Long] =
+    for (label <- Seq("latitude", "longitude");
+         kind <- Seq(ReefPipeline.RF, ReefPipeline.GBT))
+      yield doubleToRawLongBits(ReefPipeline.trainAndEvaluate(frame, label, kind)._2)
+
+  test("a featurize frame survives release, and its four fits are bit-identical to the plain plan's") {
+    val frame = ReefPipeline.featurize(spark, csvPath, vocab)
+    SparkEntry.release(spark)
+    assert(spark.sparkContext.getPersistentRDDs
+      .contains(GraftBridge.checkpointRddId(frame)), "release dropped the reef tier")
+    assert(frame.count() === 42)
+    assert(rmseBits(frame) === rmseBits(featurePlan(csvPath)))
+  }
+
+  test("featurize after a same-path rewrite of the CSV returns the new rows") {
+    val dir = Files.createTempDirectory("reef-rewrite").toFile
+    val f = new java.io.File(dir, "reef.csv")
+    def write(lats: Seq[Int]): Unit = {
+      val w = new java.io.PrintWriter(f)
+      w.println("SurveyID,Site,SiteLat,SiteLong,Family,Total")
+      lats.foreach(lat => w.println(s"S$lat,Site$lat,$lat.0,100.0,Labridae,1"))
+      w.close()
+    }
+    def lats: Set[Double] = ReefPipeline.featurize(spark, f.getAbsolutePath, vocab)
+      .collect().map(_.getDouble(0)).toSet
+    write(Seq(1, 2, 3))
+    assert(lats === Set(1.0, 2.0, 3.0))
+    write(Seq(4, 5))
+    assert(lats === Set(4.0, 5.0))
+  }
+
+  test("releaseIndexes leaves no persistent RDD behind") {
+    val frame = ReefPipeline.featurize(spark, csvPath, vocab)
+    ReefPipeline.trainAndEvaluate(frame, "longitude", ReefPipeline.GBT)
+    SparkEntry.releaseIndexes(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 }
