@@ -27,6 +27,16 @@ object GraftBridge {
   def waitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The metrics rows of the named `observe` nodes in `df`'s plan, as
+    * accumulated by the action `df` itself ran (e.g. its eager
+    * `localCheckpoint`). Read straight off the executed plan, so
+    * unlike `Observation` it needs no listener event and never
+    * initializes the session's observation manager, which does not
+    * serialize: a session that had one could no longer ship an MLlib
+    * model whose training summary captures it. */
+  def observedMetrics(df: DataFrame): Map[String, Row] =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.observedMetrics
+
   /** Release the block-manager storage behind a `localCheckpoint`ed
     * DataFrame. `Dataset.unpersist()` only evicts plan-cache entries
     * registered via `persist()` — a localCheckpoint's blocks live on

@@ -124,6 +124,81 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(out.forall(_._2 == 0L), "every chain node must label to the minimum")
   }
 
+  private def persistentRdds = spark.sparkContext.getPersistentRDDs.keySet
+
+  test("connected components refuse to return unconverged labels and leak nothing when they throw") {
+    import spark.implicits._
+    // diameter 29: label propagation needs 29 supersteps after the init,
+    // the default maxIter allows 10; two star rounds cannot contract it
+    val chain = (0L until 29L).map(i => (i, i + 1)).toDF("ia", "ib")
+    val before = persistentRdds
+    val prop = intercept[IllegalStateException] {
+      graft.operators.DedupClustering.connectedComponents(chain)
+    }
+    assert(prop.getMessage.contains("10 supersteps"), prop.getMessage)
+    assert(persistentRdds === before, "a failed propagation call leaked")
+    val star = intercept[IllegalStateException] {
+      graft.operators.DedupClustering.connectedComponentsStar(chain, maxIter = 2)
+    }
+    assert(star.getMessage.contains("2 rounds"), star.getMessage)
+    assert(persistentRdds === before, "a failed star call leaked")
+    // the same chain converges once maxIter covers its diameter
+    val ok = graft.operators.DedupClustering
+      .connectedComponents(chain, maxIter = 29).collect()
+    assert(ok.length === 30 && ok.forall(_.getLong(1) == 0L))
+  }
+
+  test("connected components of an empty edge list are empty, and one edge is one cluster") {
+    import spark.implicits._
+    val local = Seq.empty[(Long, Long)].toDF("ia", "ib")
+    // empty only at run time: the static optimizer cannot prune it
+    val runtime = spark.range(50).select(col("id").as("ia"), (col("id") + 1).as("ib"))
+      .filter(col("ia") * col("ia") < 0L)
+    val single = Seq((7L, 5L)).toDF("ia", "ib")
+    for (cc <- Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+        graft.operators.DedupClustering.connectedComponents(_),
+        graft.operators.DedupClustering.connectedComponentsStar(_))) {
+      assert(cc(local).collect().isEmpty)
+      assert(cc(runtime).collect().isEmpty)
+      assert(cc(single).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        Map(5L -> 5L, 7L -> 5L))
+    }
+  }
+
+  test("connected components leave the session serializable for a later MLlib model") {
+    // an MLlib model's training summary captures the session, so its
+    // transform closure ships the session: the convergence signal must
+    // not leave a non-serializable member (an observation manager) on it
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("ia", "ib")
+    graft.operators.DedupClustering.connectedComponents(edges).collect()
+    graft.operators.DedupClustering.connectedComponentsStar(edges).collect()
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream())
+      .writeObject(spark)
+  }
+
+  test("d31 construction over a built edge tier runs 6 jobs: the init and one observed superstep") {
+    // warm: the d28 pair tier d31 serves from is built here, not counted.
+    // The 6: the cached edge list; the init's shuffle and checkpoint;
+    // the superstep's label broadcast, shuffle and checkpoint, which
+    // also carries the convergence signal (sf0.001 pairs converge there)
+    SparkEntry.queries("d31_dedup_clusters")(spark, sf0001).collect()
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      SparkEntry.queries("d31_dedup_clusters")(spark, sf0001)
+      org.apache.spark.sql.GraftBridge.waitListenerBus(spark)
+      assert(jobs == 6, s"d31 construction ran $jobs jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    SparkEntry.release(spark)
+  }
+
   test("dedup clusters cover every doc that appears in a near-dup pair") {
     val nodes = exactJaccard.flatMap { case (a, b) => Seq(a, b) }
     val clustered = SparkEntry.queries("d31_dedup_clusters")(spark, sf0001)
