@@ -1,13 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet corpus (TESTDATA.md).
   *
   * All queries receive a scale-factor directory and read parquet through
   * here — schema comes from the parquet footer, so Catalyst gets exact
   * column types and can push filters/projections into the scan.
+  *
+  * The footer is read once per session and file fingerprint ([[read]],
+  * which the reef CSV ingest shares): later reads of an unchanged table
+  * give the reader that schema and run no schema-inference job. Like
+  * [[configure]], this is per session and not re-asserted: a parquet or
+  * CSV reader conf that shapes the inferred schema (such as
+  * `spark.sql.legacy.parquet.nanosAsLong`), changed mid-session, is not
+  * re-read for a path the session has already resolved until its files
+  * change; use a separate session (`spark.newSession()`) instead.
   */
 object Tables {
 
@@ -78,14 +88,14 @@ object Tables {
   def isShared(spark: SparkSession, dir: String, name: String): Boolean =
     shared.containsKey((spark, dir, name))
 
-  /** The files behind table `name` of `dir`, as sorted (path, length,
-    * modification time) from the Hadoop FileSystem listing: a rewrite
-    * of the table at the same path yields a different fingerprint. */
-  def fingerprint(spark: SparkSession, dir: String,
-      name: String): Seq[(String, Long, Long)] = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val files = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listFiles(path, true)
+  /** The files under `path`, as sorted (path, length, modification
+    * time) from the Hadoop FileSystem listing: a rewrite at the same
+    * path yields a different fingerprint. */
+  def fingerprint(spark: SparkSession,
+      path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
     val b = Seq.newBuilder[(String, Long, Long)]
     while (files.hasNext) {
       val f = files.next()
@@ -94,38 +104,69 @@ object Tables {
     b.result().sorted
   }
 
+  /** The files behind table `name` of `dir`. */
+  def fingerprint(spark: SparkSession, dir: String,
+      name: String): Seq[(String, Long, Long)] =
+    fingerprint(spark, s"$dir/$name.parquet")
+
+  // each session's resolved file schemas, by path, with the fingerprint
+  // they were resolved from (weak-keyed like configuredSessions)
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
+      String, (Seq[(String, Long, Long)], StructType)]]())
+
+  /** `open(reader)` on `path`, with the schema resolved once per session
+    * and file fingerprint. Resolving a schema without one given is a
+    * Spark job (a parquet footer read, a CSV header read) on every
+    * call; while the files under `path` keep their fingerprint, the
+    * memoized schema is given to the reader instead and no job runs. A
+    * rewrite at the same path changes the fingerprint and re-resolves.
+    * A path that cannot be listed takes the plain read, so a missing
+    * table keeps Spark's own PATH_NOT_FOUND error. */
+  private[graft] def read(spark: SparkSession, path: String)(
+      open: DataFrameReader => DataFrame): DataFrame = {
+    val fp =
+      try Some(fingerprint(spark, path))
+      catch { case _: java.io.FileNotFoundException => None }
+    val memo = schemas.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap())
+    fp.flatMap(f => Option(memo.get(path)).filter(_._1 == f)) match {
+      case Some((_, schema)) => open(spark.read.schema(schema))
+      case None =>
+        val df = open(spark.read)
+        fp.foreach(f => memo.put(path, (f, df.schema)))
+        df
+    }
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     configure(spark)
     val o = shared.get((spark, dir, name))
     if (o != null) return o
-    name match {
-      // events.ts: the corpus contract is driver-owned and has shipped
-      // two parquet renderings so far — TIMESTAMP(NANOS) (read as raw
-      // longs under the legacy conf above) and TIMESTAMP(MICROS, NTZ).
-      // Branch on the footer schema so either shape (and any future
-      // flip back) analyzes to the same micros TimestampType:
-      //  - LongType (raw nanos): exact integral `div` truncation
-      //    (`div`, not FP `/` — nanos ~1.7e18 exceed double's 2^53
-      //    integer range, FP division would corrupt the low micros).
-      //    DuckDB's CAST(ts_ns AS TIMESTAMP) truncates identically.
-      //  - TimestampNTZType: session TZ is pinned UTC everywhere this
-      //    library runs, so NTZ→TZ cast matches DuckDB's naive
-      //    TIMESTAMP reading bit-for-bit.
-      case "events" =>
-        import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-        val raw = spark.read.parquet(s"$dir/events.parquet")
-        raw.schema("ts").dataType match {
-          case LongType =>
-            raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          case TimestampNTZType =>
-            raw.withColumn("ts", col("ts").cast(TimestampType))
-          case TimestampType => raw
-          case other => throw new IllegalStateException(
-            s"events.ts: unsupported parquet-derived type $other " +
-              "(expected raw-nanos BIGINT, TIMESTAMP_NTZ, or TIMESTAMP)")
-        }
-      case _ =>
-        spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val raw = read(spark, path)(_.parquet(path))
+    if (name != "events") return raw
+    // events.ts: the corpus contract is driver-owned and has shipped
+    // two parquet renderings so far — TIMESTAMP(NANOS) (read as raw
+    // longs under the legacy conf above) and TIMESTAMP(MICROS, NTZ).
+    // Branch on the footer schema so either shape (and any future
+    // flip back) analyzes to the same micros TimestampType:
+    //  - LongType (raw nanos): exact integral `div` truncation
+    //    (`div`, not FP `/` — nanos ~1.7e18 exceed double's 2^53
+    //    integer range, FP division would corrupt the low micros).
+    //    DuckDB's CAST(ts_ns AS TIMESTAMP) truncates identically.
+    //  - TimestampNTZType: session TZ is pinned UTC everywhere this
+    //    library runs, so NTZ→TZ cast matches DuckDB's naive
+    //    TIMESTAMP reading bit-for-bit.
+    raw.schema("ts").dataType match {
+      case LongType =>
+        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType =>
+        raw.withColumn("ts", col("ts").cast(TimestampType))
+      case TimestampType => raw
+      case other => throw new IllegalStateException(
+        s"events.ts: unsupported parquet-derived type $other " +
+          "(expected raw-nanos BIGINT, TIMESTAMP_NTZ, or TIMESTAMP)")
     }
   }
 

@@ -17,7 +17,7 @@ import graft.queries.BuiltIndexMemo
   *
   * Reference mapping (cited file:line are in /root/reference):
   *  - CSV ingest incl. quoted-comma handling: Data_transform.py:32-76
-  *    (arreglaComas + manual split) → one `spark.read.csv` with
+  *    (arreglaComas + manual split) → one CSV read with
   *    quote/escape options; unlike the reference we preserve the
   *    original comma instead of rewriting it to ';'.
   *  - count vectorization: Data_transform.py:87-100 (groupByKey +
@@ -68,13 +68,18 @@ import graft.queries.BuiltIndexMemo
   */
 object ReefPipeline {
 
-  /** Raw CSV → the 5 consumed columns, typed. */
+  /** Raw CSV → the 5 consumed columns, typed. The header names the
+    * columns; [[graft.Tables.read]] resolves it once per session and
+    * file fingerprint, so a later ingest of the unchanged file reads no
+    * header line to do it. Given that schema, the reader skips each
+    * file's header and applies the columns by position, and a rewrite
+    * that reorders them changes the fingerprint and is re-resolved. */
   def ingest(spark: SparkSession, csvPath: String): DataFrame =
-    spark.read
+    graft.Tables.read(spark, csvPath)(_
       .option("header", "true")
       .option("quote", "\"")
       .option("escape", "\"")
-      .csv(csvPath)
+      .csv(csvPath))
       .select(
         col("SurveyID"),
         col("SiteLat").cast("double").as("latitude"),

@@ -252,6 +252,37 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(all.size == 21 && kinds.sorted == all.toSeq.sorted, kinds.sorted)
   }
 
+  test("src/main reads files only through Tables.read, apart from StressBench's own generated inputs") {
+    import scala.jdk.CollectionConverters._
+    // code lines only: comments may name the reader
+    val reads = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if !l.trim.startsWith("//") && !l.trim.startsWith("*") &&
+              "\\.read\\b(?!\\s*\\()".r.findFirstIn(l).isDefined =>
+            (p.getFileName.toString, i, l.trim)
+        }
+      }.toSeq
+    val tables = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/Tables.scala")).asScala
+    val helper = tables.indexWhere(_.contains("private[graft] def read("))
+    val helperEnd = tables.indexWhere(_ == "  }", helper)
+    assert(helper >= 0 && helperEnd > helper, "Tables.read not found")
+    // StressBench writes these itself and times reads of them
+    val generated = Set("documents", "embeddings", "fact2", "dim2")
+    val stray = reads.filterNot {
+      case ("Tables.scala", i, _) => i > helper && i < helperEnd
+      case ("StressBench.scala", _, l) =>
+        "spark\\.read\\.parquet\\(s\"\\$\\w+/(\\w+)\\.parquet\"\\)".r
+          .findFirstMatchIn(l).exists(m => generated(m.group(1)))
+      case _ => false
+    }
+    assert(stray.isEmpty, stray.mkString("\n"))
+    assert(reads.count(_._1 == "Tables.scala") == 2, "Tables.read's hit and miss reads")
+  }
+
   test("shingle-index lifecycle: release keeps the pin, d28 rebuilds and defers the old generation, releaseIndexes drops all") {
     SparkEntry.releaseIndexes(spark) // start clean
     def rows(name: String): Seq[String] =

@@ -37,25 +37,30 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase
     * mix, one all-unknown-family survey (zero-vector guard), one quoted
     * comma in an unused column, one unknown family mixed into a known
     * group (drop semantics). */
-  lazy val csvPath: String = {
+  lazy val csvPath: String =
+    writeReef(new java.io.File(Files.createTempDirectory("reef").toFile, "reef.csv"))
+
+  /** Writes the fixture to `f`, with the SiteLat and SiteLong columns
+    * in header order, or swapped in the header and every row. */
+  private def writeReef(f: java.io.File, swapped: Boolean = false): String = {
+    def row(cells: String*): String =
+      (if (swapped) cells.patch(2, Seq(cells(3), cells(2)), 2) else cells).mkString(",")
     val rows = new scala.collection.mutable.ArrayBuffer[String]
-    rows += "SurveyID,Site,SiteLat,SiteLong,Family,Total"
+    rows += row("SurveyID", "Site", "SiteLat", "SiteLong", "Family", "Total")
     for (i <- 0 until 40) {
       val lat = -40.0 + i * 2
       val lon = 100.0 + i
-      rows += s"S$i,Site$i,$lat,$lon,Labridae,${1 + i % 3}"
-      rows += s"S$i,Site$i,$lat,$lon,Pomacentridae,${2 + (i % 5)}"
-      if (i % 2 == 0) rows += s"S$i,Site$i,$lat,$lon,Serranidae,1"
+      rows += row(s"S$i", s"Site$i", s"$lat", s"$lon", "Labridae", s"${1 + i % 3}")
+      rows += row(s"S$i", s"Site$i", s"$lat", s"$lon", "Pomacentridae", s"${2 + (i % 5)}")
+      if (i % 2 == 0) rows += row(s"S$i", s"Site$i", s"$lat", s"$lon", "Serranidae", "1")
     }
     // quoted comma in Site (reference: arreglaComas, Data_transform.py:44-57)
-    rows += "SQ,\"Bay, of Plenty\",-37.5,176.2,Labridae,2"
-    rows += "SQ,\"Bay, of Plenty\",-37.5,176.2,Gobiidae,5"
+    rows += row("SQ", "\"Bay, of Plenty\"", "-37.5", "176.2", "Labridae", "2")
+    rows += row("SQ", "\"Bay, of Plenty\"", "-37.5", "176.2", "Gobiidae", "5")
     // survey whose families are all outside the vocabulary (zero-total
     // guard, Data_transform.py:93-94)
-    rows += "SZ,SiteZ,89.9,20.0,Gobiidae,3"
-    rows += "SZ,SiteZ,89.9,20.0,Blenniidae,4"
-    val dir = Files.createTempDirectory("reef").toFile
-    val f = new java.io.File(dir, "reef.csv")
+    rows += row("SZ", "SiteZ", "89.9", "20.0", "Gobiidae", "3")
+    rows += row("SZ", "SiteZ", "89.9", "20.0", "Blenniidae", "4")
     val w = new java.io.PrintWriter(f)
     rows.foreach(w.println)
     w.close()
@@ -218,6 +223,11 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase
     i.rddInfos.exists(_.name == "FileScanRDD") &&
       i.taskMetrics.inputMetrics.recordsRead > 1
 
+  /** The reader's header probe: a CSV scan of one record. */
+  private def probesHeader(i: StageInfo): Boolean =
+    i.rddInfos.exists(_.name == "FileScanRDD") &&
+      i.taskMetrics.inputMetrics.recordsRead == 1
+
   /** A stage reads a SQL exchange (here: the pivot's shuffle) if a
     * ShuffledRowRDD is among its narrow ancestors; the MLlib learners
     * shuffle RDDs of their own kinds. */
@@ -263,6 +273,11 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase
     // the fits train on featurize's checkpoint: none re-runs the pivot,
     // where a call-scoped checkpoint of the plan re-reads its shuffle
     assert(stages(i => scansCsv(i) || readsPivot(i))(fourFits(frame)) === 0)
+    // the header is read once per session and file: a new session's
+    // ingest probes it, a second featurize of the unchanged file does not
+    val other = spark.newSession()
+    assert(stages(probesHeader)(ReefPipeline.ingest(other, csvPath)) === 1)
+    assert(stages(probesHeader)(ReefPipeline.featurize(spark, csvPath, vocab)) === 0)
   }
 
   test("regression learns signal on a 2000-survey synthetic reef (rmse < label stddev)") {
@@ -453,6 +468,18 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase
     assert(lats === Set(1.0, 2.0, 3.0))
     write(Seq(4, 5))
     assert(lats === Set(4.0, 5.0))
+  }
+
+  test("featurize after a same-path rewrite that swaps SiteLat and SiteLong returns the same rows") {
+    val f = new java.io.File(Files.createTempDirectory("reef-swap").toFile, "reef.csv")
+    def rows: Set[String] = ReefPipeline.featurize(spark, f.getAbsolutePath, vocab)
+      .collect().map(_.toString).toSet
+    writeReef(f)
+    val before = rows
+    // a schema memoized without the file's fingerprint would apply the
+    // old header by position and swap latitude and longitude
+    writeReef(f, swapped = true)
+    assert(rows === before)
   }
 
   test("releaseIndexes leaves no persistent RDD behind") {
