@@ -30,7 +30,6 @@ object StressBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val base = "/tmp/graft_stress"
     def tm[T](name: String)(f: => T): T = {

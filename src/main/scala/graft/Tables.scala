@@ -8,7 +8,11 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   *
   * All queries receive a scale-factor directory and read parquet through
   * here — schema comes from the parquet footer, so Catalyst gets exact
-  * column types and can push filters/projections into the scan.
+  * column types and can push filters/projections into the scan. A
+  * table is always its file, `<dir>/<name>.parquet`, read through
+  * [[read]]: a caller that needs a different table (a test fixture, a
+  * filtered corpus) writes it into a corpus dir of its own, and every
+  * built-index tier over it is keyed by that dir.
   *
   * The footer is read once per session and file fingerprint ([[read]],
   * which the reef CSV ingest shares): later reads of an unchanged table
@@ -56,37 +60,6 @@ object Tables {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
-
-  // Scoped table overrides: a composition that drives SEVERAL
-  // component queries over the same table (d44's three gates) installs
-  // one projected, persisted scan here so every component's t() call
-  // resolves to the SAME cached plan fragment instead of three
-  // independent parquet scans. Scoped strictly to plan CONSTRUCTION
-  // (the returned DataFrame keeps the shared fragment after the scope
-  // exits — lazy execution reads the persisted plan, not this map), so
-  // concurrent registry calls outside the scope are unaffected.
-  private val shared = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
-  /** Run `body` with `frame` substituted for every `t(spark, dir,
-    * name)` call made during it. `frame` must contain every column the
-    * body's component queries read from that table. */
-  def withShared[T](spark: SparkSession, dir: String, name: String,
-      frame: DataFrame)(body: => T): T = {
-    val key = (spark, dir, name)
-    shared.put(key, frame)
-    try body finally shared.remove(key)
-  }
-
-  /** True while [[withShared]] overrides (spark, dir, name). The
-    * built-index tiers (graft.queries.BuiltIndexMemo.get, the only
-    * caller) consult this: a memoized CORPUS index is only valid for
-    * the real corpus, so under an override they neither serve a stale
-    * entry nor — the r20 regression this guards against — publish an
-    * index built from the substituted frame, which would poison every
-    * post-override serving query in the session. */
-  def isShared(spark: SparkSession, dir: String, name: String): Boolean =
-    shared.containsKey((spark, dir, name))
 
   /** The files under `path`, as sorted (path, length, modification
     * time) from the Hadoop FileSystem listing: a rewrite at the same
@@ -141,8 +114,6 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     configure(spark)
-    val o = shared.get((spark, dir, name))
-    if (o != null) return o
     val path = s"$dir/$name.parquet"
     val raw = read(spark, path)(_.parquet(path))
     if (name != "events") return raw

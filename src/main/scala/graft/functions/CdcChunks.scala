@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -275,9 +274,6 @@ object CdcChunks {
     }
     new String(out)
   }
-
-  private def md5Hex(digest: MessageDigest, bytes: Array[Byte]): String =
-    digestHex(digest.digest(bytes))
 
   private val spaceByte = Array[Byte](' ')
 

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst AGGREGATE function for the portable 48-bit SimHash
   * (the custom-aggregate tier — `TypedImperativeAggregate` — alongside
   * the scalar-expression tier of [[CosineSimilarity]]/[[PqAdcDistance]]
-  * and the typed-Aggregator tier of `ml.FamilyCountAggregator`).
+  * and the typed-Aggregator tier of `queries.TypedOps`).
   *
   * Why: the expression-composed rendering needs 12 nibble columns and
   * 48 separate `sum(CASE ...)` aggregates per group — 48 agg buffers

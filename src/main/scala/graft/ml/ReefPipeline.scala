@@ -40,8 +40,7 @@ import graft.queries.BuiltIndexMemo
   * 100 TB the (SurveyID, lat, long) grouping shuffles only
   * |vocab|-width partial sums per group, not the raw observations;
   * the vocabulary rides the plan as literals (broadcast-sized, 189
-  * entries). See [[FamilyCountAggregator]] for the typed single-column
-  * alternative with identical semantics.
+  * entries).
   *
   * The feature frame is a built-index tier (kind "reef" of
   * [[graft.queries.BuiltIndexMemo]], keyed by the CSV path): each
@@ -116,7 +115,7 @@ object ReefPipeline {
     * built and checkpointed as the session's "reef" tier. */
   def featurize(spark: SparkSession, csvPath: String, vocab: Seq[String],
       includeLatInFeatures: Boolean = true): DataFrame =
-    BuiltIndexMemo.get(spark, csvPath, "reef", "csv", rebuild = true) {
+    BuiltIndexMemo.get(spark, csvPath, "reef", rebuild = true) {
       val vectors = countVectors(ingest(spark, csvPath), vocab)
       featurePipeline(vocab, includeLatInFeatures)
         .fit(vectors).transform(vectors)

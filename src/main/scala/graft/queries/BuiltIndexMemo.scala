@@ -9,9 +9,9 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * index-eval tables (gt10, s37p, s40p, s42p, s43p, s65r, s67r) and the
   * reef feature frame (reef: `graft.ml.ReefPipeline.featurize`, whose
   * "dir" is the CSV path and which rebuilds on every call). Each tier
-  * helper declares itself in ONE [[get]] call naming its kind and the
-  * corpus table it derives from; this object owns the whole lifecycle,
-  * so a fix here holds for every tier.
+  * helper declares itself in ONE [[get]] call naming its kind; this
+  * object owns the whole lifecycle, so a fix here holds for every
+  * tier.
   *
   * Entries are keyed by (session, dir, kind) and are localCheckpointed
   * DataFrames: materialized fixed points or derived corpus tables
@@ -27,14 +27,6 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * materialized index in cluster storage, many query batches against
   * it.
   *
-  * BYPASS: under a `Tables.withShared` override of a tier's table,
-  * [[get]] neither serves nor publishes — a corpus index is only valid
-  * for the real corpus, and one built from a substituted frame would
-  * poison every post-override serving query in the session. The
-  * caller gets the tier's body as pure lineage (persisted when the
-  * helper declares `persistOnBypass`, at its multi-consumer reuse
-  * point; released by the next `SparkEntry.release()`).
-  *
   * DIR WALK: a session holds one dir's tiers at a time. The first
   * [[get]] for another dir evicts the session's entries of EVERY kind
   * for the old dir (deferred, see below), so a caller that walks SF
@@ -42,7 +34,9 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * tiers. Entries whose SparkContext has stopped are dropped on the
   * same sweep: their blocks died with the context's block manager. A
   * reef `featurize` and a corpus tier have different dirs, so each
-  * evicts the other.
+  * evicts the other. The dir is also what keeps corpora apart: a
+  * corpus planted under its own dir (as the tests plant theirs) builds
+  * its own entries, and never serves or replaces another dir's.
   *
   * SESSIONS: `release(s)` keeps every live entry on s's SparkContext,
   * whichever session owns it, and other sessions' deferred
@@ -69,24 +63,14 @@ private[graft] object BuiltIndexMemo {
   private val deferred = new java.util.concurrent.ConcurrentLinkedQueue[
     (SparkSession, DataFrame)]()
 
-  /** The tier `kind` of corpus `d`, derived from `table`: served from
-    * the memo, or built from `body` and published. `body` is
-    * localCheckpointed unless it already is one (the NN-descent
-    * builds checkpoint per superstep). `rebuild = true` forces a fresh
-    * build and swaps it in: the build row's posture — it must never
-    * report a memo hit, and its run refreshes what the serving queries
-    * read. Under a withShared override of `table`, `body` comes back
-    * as pure lineage (see BYPASS above). */
-  def get(s: SparkSession, d: String, kind: String, table: String,
-      rebuild: Boolean = false, persistOnBypass: Boolean = false)
-      (body: => DataFrame): DataFrame =
-    if (!graft.Tables.isShared(s, d, table)) serve(s, d, kind, rebuild)(body)
-    else if (persistOnBypass)
-      body.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else body
-
-  private def serve(s: SparkSession, d: String, kind: String,
-      rebuild: Boolean)(body: => DataFrame): DataFrame = {
+  /** The tier `kind` of corpus `d`: served from the memo, or built
+    * from `body` and published. `body` is localCheckpointed unless it
+    * already is one (the NN-descent builds checkpoint per superstep).
+    * `rebuild = true` forces a fresh build and swaps it in: the build
+    * row's posture — it must never report a memo hit, and its run
+    * refreshes what the serving queries read. */
+  def get(s: SparkSession, d: String, kind: String,
+      rebuild: Boolean = false)(body: => DataFrame): DataFrame = {
     val it = memo.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()

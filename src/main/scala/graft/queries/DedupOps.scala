@@ -69,13 +69,10 @@ object DedupOps {
     * measures serving. An entry is ≤ one row per qualifying doc (id +
     * distinct shingle array). The eager localCheckpoint runs a job at
     * plan-construction time — the same documented eagerness exception
-    * as the graph tier (SparkEntry.queries doc). Under an override the
-    * pure-lineage table is persisted at the old pre-memo reuse
-    * point. */
+    * as the graph tier (SparkEntry.queries doc). */
   private def shingleIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "sh3", "documents", rebuild,
-      persistOnBypass = true)(shingles(s, d))
+    BuiltIndexMemo.get(s, d, "sh3", rebuild)(shingles(s, d))
 
   /** The memoized near-dup PAIR index (r20, kind "nd08", second tier
     * over [[shingleIndex]]):
@@ -96,7 +93,7 @@ object DedupOps {
     * checkpoint cost is a barrier, not storage. */
   private def pairsIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "nd08", "documents", rebuild) {
+    BuiltIndexMemo.get(s, d, "nd08", rebuild) {
       // d28's rebuild refreshes the whole lower chain in order:
       // shingles first, then the posting list over the fresh
       // shingles, then the pairs over both — one rebuild each.
@@ -131,8 +128,7 @@ object DedupOps {
     // the build SERVES the shingle tier (build-on-miss): when d28
     // rebuilds it has already refreshed shingles one line above, so
     // this reads the new generation without double-building it
-    BuiltIndexMemo.get(s, d, "exh", "documents", rebuild)(
-      postingsBody(shingleIndex(s, d)))
+    BuiltIndexMemo.get(s, d, "exh", rebuild)(postingsBody(shingleIndex(s, d)))
 
   /** The memoized CAPPED posting list (r21, kind "ex50"): the postings
     * restricted to shingles with df ≤ [[NeardupMaxDf]] — the
@@ -142,9 +138,7 @@ object DedupOps {
     * self-join + exact confirm over the served posting list; d53's
     * decontamination and d61's 3-gram arm serve. At 100 TB this is
     * the second materialization a capped dedup pipeline ships (the
-    * "rare-anchor index"). Under an override the pure-lineage stream
-    * is persisted at the old pre-memo reuse point (both sides of every
-    * consumer's candidate join read it). */
+    * "rare-anchor index"). */
   private def cappedPostingsBody(ex: DataFrame): DataFrame = {
     val rare = ex.groupBy(col("sv"))
       .agg(count(lit(1)).as("df"))
@@ -155,8 +149,8 @@ object DedupOps {
 
   private def cappedPostingsIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "ex50", "documents", rebuild,
-      persistOnBypass = true)(cappedPostingsBody(postingsIndex(s, d)))
+    BuiltIndexMemo.get(s, d, "ex50", rebuild)(
+      cappedPostingsBody(postingsIndex(s, d)))
 
   /** The memoized SCORED capped candidate table (r21, kind "sc50"):
     * every capped candidate pair (shares ≥ 1 df ≤ [[NeardupMaxDf]]
@@ -170,7 +164,7 @@ object DedupOps {
     * `jac` as exact-operand IEEE (round only at their published edge,
     * as d33/d53/d61 all do). */
   private def scoredCappedBody(s: SparkSession, d: String,
-      rebuild: Boolean = false): DataFrame = {
+      rebuild: Boolean): DataFrame = {
     val sh = shingleIndex(s, d)
     val exCapped = cappedPostingsIndex(s, d, rebuild)
     val cands = exCapped.select(col("doc_id").as("ia"), col("sv"))
@@ -189,8 +183,7 @@ object DedupOps {
 
   private def scoredCappedIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "sc50", "documents", rebuild)(
-      scoredCappedBody(s, d, rebuild))
+    BuiltIndexMemo.get(s, d, "sc50", rebuild)(scoredCappedBody(s, d, rebuild))
 
   /** The memoized CANONICAL KEEP-LIST index (r20, kind "d41k") — the
     * third artifact tier of the dedup pipeline: shingles (d28 builds)
@@ -207,69 +200,41 @@ object DedupOps {
     * keep-list. */
   private[graft] def labelsIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "d41k", "documents", rebuild)(labelsBody(s, d))
+    BuiltIndexMemo.get(s, d, "d41k", rebuild)(labelsBody(s, d))
 
   /** The memoized CLEAN-CORPUS VERDICT index (r20, kind "d44v") — the
     * final artifact tier: per-document keep/drop decision with a
     * first-failing-gate reason. d44 is the build row; its build folds
-    * the quality gate (t35) and decontamination (d38) over the SERVED
-    * keep-list ([[labelsIndex]]) — each build row measures its own
-    * tier. The manifest/funnel/epoch-plan consumers (q96/q103/q104)
-    * serve this table, exactly the "derived from the SAME verdict the
-    * manifest ships" contract their doc comments state: at 100 TB the
+    * decontamination (d38, over `documents`) over the served keep-list
+    * ([[labelsIndex]]) and quality tier (`TextOps.qualityIndex`) —
+    * each build row measures its own tier. The manifest/funnel/
+    * epoch-plan consumers (q96/q103/q104) serve this table, exactly
+    * the "derived from the SAME verdict the manifest ships" contract
+    * their doc comments state: at 100 TB the
     * verdict is materialized once per curation run and every
     * dataset-card and trainer-manifest job reads it. */
   private[graft] def verdictIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "d44v", "documents", rebuild)(verdictBody(s, d))
+    BuiltIndexMemo.get(s, d, "d44v", rebuild)(verdictBody(s, d))
 
   private def verdictBody(s: SparkSession, d: String): DataFrame = {
-    // The DEDUP gate comes from the keep-list tier, OUTSIDE the
-    // shared-scan override below (r20): the withShared substitution is
-    // a pure projection of the real table, installed only to share the
-    // TEXT scan between the two text gates — but the index memos
-    // correctly refuse to serve under ANY override (they cannot know
-    // it is row-identical), so constructing the keep-list inside the
-    // scope forced a full pure-lineage shingle+pair+CC rebuild on
-    // every d44 invocation (and every q96/q103/q104 through it).
     val dedup = labelsIndex(s, d)
       .select(col("doc_id"), col("keep").as("dd_keep"))
-    // The two TEXT gates share ONE projected scan (t35 reads
-    // doc_id/text/lang, d38 reads doc_id/text), substituted for
-    // their embedded t() calls via Tables.withShared. The projection
-    // is additionally PERSISTED only when the scan it dedupes is big
-    // enough to be worth one cache materialization — at bench scale
-    // (sub-GiB documents) pipelined parquet scans beat filling the
-    // cache (VERDICT r9 item 4); at the 100 TB posture the persist
-    // collapses the text gates' corpus scans into one. Size comes
-    // free from the optimizer's file-length stats, no extra job.
-    // Released by SparkEntry.release(), same as the labeled stage.
-    val projected = graft.Tables.t(s, d, "documents")
-      .select(col("doc_id"), col("text"), col("lang"))
-    val persistMinBytes = BigInt(
-      s.conf.get("spark.graft.sharedScan.persistMinBytes",
-        (1L << 30).toString))
-    val sharedDocs =
-      if (projected.queryExecution.optimizedPlan.stats.sizeInBytes
-          >= persistMinBytes)
-        projected.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else projected
-    graft.Tables.withShared(s, d, "documents", sharedDocs) {
-      val quality = graft.queries.TextOps.queries("t35_quality_filter")(s, d)
-        .select(col("doc_id"), col("reason").as("q_reason"))
-      val contam = queries("d38_decontamination")(s, d)
-        .select(col("doc_id"), lit(true).as("contaminated"))
-      val decision =
-        when(col("contaminated"), "drop_contaminated")
-          .when(!col("dd_keep"), "drop_duplicate")
-          .when(col("q_reason") =!= "keep",
-            concat(lit("drop_"), col("q_reason")))
-          .otherwise("keep")
-      quality.join(dedup, "doc_id")
-        .join(contam, Seq("doc_id"), "left")
-        .select(col("doc_id"), decision.as("decision"),
-          (decision === "keep").as("keep"))
-    }
+    // served t35q: t35 is its build row, so the rows are t35's
+    val quality = graft.queries.TextOps.qualityIndex(s, d)
+      .select(col("doc_id"), col("reason").as("q_reason"))
+    val contam = queries("d38_decontamination")(s, d)
+      .select(col("doc_id"), lit(true).as("contaminated"))
+    val decision =
+      when(col("contaminated"), "drop_contaminated")
+        .when(!col("dd_keep"), "drop_duplicate")
+        .when(col("q_reason") =!= "keep",
+          concat(lit("drop_"), col("q_reason")))
+        .otherwise("keep")
+    quality.join(dedup, "doc_id")
+      .join(contam, Seq("doc_id"), "left")
+      .select(col("doc_id"), decision.as("decision"),
+        (decision === "keep").as("keep"))
   }
 
   private def labelsBody(s: SparkSession, d: String): DataFrame = {
@@ -293,8 +258,8 @@ object DedupOps {
   }
 
   /** d28's pair derivation over a given shingle table and its
-    * exploded posting stream (the served [[postingsIndex]]; pure
-    * lineage under an override): shingle equi-join candidates →
+    * exploded posting stream (the served [[postingsIndex]]): shingle
+    * equi-join candidates →
     * inclusion-exclusion Jaccard ≥ 0.8. */
   private def neardupPairsFrom(sh: DataFrame, ex: DataFrame): DataFrame = {
     // join on xxhash64(shingle), not the shingle string: the shuffle

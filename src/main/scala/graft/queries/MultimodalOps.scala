@@ -49,8 +49,7 @@ object MultimodalOps extends Serializable {
     * serves. */
   private[graft] def assetLabelsIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "m43k", "documents", rebuild)(
-      assetLabelsBody(s, d))
+    BuiltIndexMemo.get(s, d, "m43k", rebuild)(assetLabelsBody(s, d))
 
   private def assetLabelsBody(s: SparkSession, d: String): DataFrame = {
     val edges = queries("m36_asset_similarity")(s, d)
@@ -703,7 +702,6 @@ object MultimodalOps extends Serializable {
     // ZERO shuffles, no per-nibble rows.
     "m38_tile_entropy" -> { (s, d) =>
       val hexPerTile = 512 // 256 bytes — m34's tile geometry
-      val nibbles = "0123456789abcdef"
       multimodalTable(s, d)
         .withColumn("hx", lower(hex(col("payload"))))
         .withColumn("nt", least(
@@ -739,7 +737,6 @@ object MultimodalOps extends Serializable {
     // until the 10-row decile aggregate.
     "m49_positional_entropy" -> { (s, d) =>
       val hexPerTile = 64
-      val nibbles = "0123456789abcdef"
       multimodalTable(s, d)
         .withColumn("hx", lower(hex(col("payload"))))
         .withColumn("nt", least(

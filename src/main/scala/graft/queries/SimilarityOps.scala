@@ -120,9 +120,9 @@ object SimilarityOps {
     * rows); the checkpoint cost is a barrier, not storage. */
   private def gt10Index(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "gt10", "embeddings", rebuild)(gt10Body(s, d))
+    BuiltIndexMemo.get(s, d, "gt10", rebuild)(gt10Body(s, d))
 
-  private def gt10Body(s: SparkSession, d: String): DataFrame = {
+  private[graft] def gt10Body(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("emb").as("qemb"))
@@ -139,7 +139,7 @@ object SimilarityOps {
   /** s65's per-query SQ8 recall@10 table (tier "s65r"): ADC search
     * over the sq8Enc-reconstructed corpus vs the served gt10 ground
     * truth. */
-  private def sq8RecallBody(s: SparkSession, d: String): DataFrame = {
+  private[graft] def sq8RecallBody(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
     val recons = sq8Enc(s, d)
       .groupBy(col("vec_id"))
@@ -166,11 +166,12 @@ object SimilarityOps {
 
   private def sq8RecallIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "s65r", "embeddings", rebuild)(sq8RecallBody(s, d))
+    BuiltIndexMemo.get(s, d, "s65r", rebuild)(sq8RecallBody(s, d))
 
   /** s67's per-query binary-Hamming recall@10 table (tier "s67r"):
     * symmetric Hamming search over binCodes vs the served gt10. */
-  private def hammingRecallBody(s: SparkSession, d: String): DataFrame = {
+  private[graft] def hammingRecallBody(s: SparkSession,
+      d: String): DataFrame = {
     val e = emb(s, d)
     val codes = binCodes(s, d)
     val q = e.filter(col("vec_id") < 10)
@@ -197,8 +198,7 @@ object SimilarityOps {
 
   private def hammingRecallIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "s67r", "embeddings", rebuild)(
-      hammingRecallBody(s, d))
+    BuiltIndexMemo.get(s, d, "s67r", rebuild)(hammingRecallBody(s, d))
 
   /** The four PROBE-RESULT tiers (r21, kinds "s37p"/"s40p"/"s42p"/
     * "s43p"): each index variant's published top-k candidate table —
@@ -227,7 +227,7 @@ object SimilarityOps {
 
   private def ivfProbeIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "s37p", "embeddings", rebuild)(ivfProbeBody(s, d))
+    BuiltIndexMemo.get(s, d, "s37p", rebuild)(ivfProbeBody(s, d))
 
   private def trainedProbeBody(s: SparkSession, d: String): DataFrame = {
     val ranked = trainedRanked(s, d)
@@ -251,8 +251,7 @@ object SimilarityOps {
 
   private def trainedProbeIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "s40p", "embeddings", rebuild)(
-      trainedProbeBody(s, d))
+    BuiltIndexMemo.get(s, d, "s40p", rebuild)(trainedProbeBody(s, d))
 
   private def pqProbeBody(s: SparkSession, d: String): DataFrame = {
     val pq = pqModel(s, d, 16)
@@ -279,7 +278,7 @@ object SimilarityOps {
 
   private def pqProbeIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "s42p", "embeddings", rebuild)(pqProbeBody(s, d))
+    BuiltIndexMemo.get(s, d, "s42p", rebuild)(pqProbeBody(s, d))
 
   private def residProbeBody(s: SparkSession, d: String): DataFrame = {
     val ranked = trainedRanked(s, d)
@@ -312,8 +311,7 @@ object SimilarityOps {
 
   private def residProbeIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "s43p", "embeddings", rebuild)(
-      residProbeBody(s, d))
+    BuiltIndexMemo.get(s, d, "s43p", rebuild)(residProbeBody(s, d))
 
   /** The BUILT NN-descent edge tables: layer 0 (kind "nnd0", the
     * full-corpus kNN graph shared by s72/s73/s74; src, dst, cosine;
@@ -332,20 +330,18 @@ object SimilarityOps {
     * edge table pinned in cluster storage while query batches come and
     * go. Without the memo one bench pass built the same layer-0 fixed
     * point four times over (s72, s73 via s72's entry, s74). The build
-    * localCheckpoints per superstep, so it also returns a checkpoint
-    * under an override; its unpinned blocks die at the next
-    * release(). */
+    * localCheckpoints per superstep, so [[BuiltIndexMemo.get]]
+    * publishes that checkpoint as it is. */
   private def nndescentEdges(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "nnd0", "embeddings", rebuild)(
-      nndescentLayer0Build(s, d))
+    BuiltIndexMemo.get(s, d, "nnd0", rebuild)(nndescentLayer0Build(s, d))
 
   /** s74's /8 entry-tier edges, re-keyed to contiguous rank ids —
     * the same derivation as s74's `e1` (filter every 8th, rank id =
     * vec_id/8), so the memoized graph is exactly what the oracle's
     * `e1` CTE chain unrolls. */
   private def nndescentEdges1(s: SparkSession, d: String): DataFrame =
-    BuiltIndexMemo.get(s, d, "nnd1", "embeddings")(nndescentLayer1Build(s, d))
+    BuiltIndexMemo.get(s, d, "nnd1")(nndescentLayer1Build(s, d))
 
   private def nndescentLayer1Build(s: SparkSession, d: String): DataFrame = {
       val e1 = emb(s, d).select(col("vec_id"), col("emb"))
@@ -1684,7 +1680,6 @@ object SimilarityOps {
     // extra corpus passes; everything after the two rankings runs on
     // ≤ 100 matched rows crossed with a 4-row k table.
     "s68_recall_at_k" -> { (s, d) =>
-      val e = emb(s, d)
       val cell = cellAssign(s, d)
       val q = cell.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("emb").as("qemb"),

@@ -46,8 +46,7 @@ object TextOps {
     * measuring the fit + scoring). */
   private[graft] def perplexityIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "t36p", "documents", rebuild)(
-      perplexityBody(s, d))
+    BuiltIndexMemo.get(s, d, "t36p", rebuild)(perplexityBody(s, d))
 
   private def perplexityBody(s: SparkSession, d: String): DataFrame = {
     val bg = t(s, d, "documents")
@@ -93,9 +92,7 @@ object TextOps {
     * measuring the full derivation + checkpoint; t40 (novelty) and t38
     * (top spans per source) serve. t59 is deliberately NOT a consumer:
     * its accounting is position-aware (posexplode, no per-doc
-    * distinct) — a different artifact. Under an override the
-    * pure-lineage stream is persisted at the multi-consumer reuse
-    * point: every consumer fans it into ≥ 2 plan branches. */
+    * distinct) — a different artifact. */
   private def spans8Body(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .withColumn("w", tokens(col("text")))
@@ -107,8 +104,7 @@ object TextOps {
 
   private[graft] def spans8Index(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "sp8", "documents", rebuild,
-      persistOnBypass = true)(spans8Body(s, d))
+    BuiltIndexMemo.get(s, d, "sp8", rebuild)(spans8Body(s, d))
 
   /** The BUILT per-doc quality-verdict table (r21, kind "t35q"): t35's
     * five rule signals + reason/keep verdict, one row per document —
@@ -120,12 +116,11 @@ object TextOps {
     * every downstream curation job joins it — the same posture as the
     * perplexity tier above. t35 is the designated BUILD row (rebuilds
     * unconditionally, so its bench row keeps measuring the full signal
-    * derivation + checkpoint). d44's composite gate reads it under a
-    * shared-scan override of `documents`, so there it is pure
-    * lineage. */
+    * derivation + checkpoint). d44's verdict tier serves it as its
+    * quality gate. */
   private[graft] def qualityIndex(s: SparkSession, d: String,
       rebuild: Boolean = false): DataFrame =
-    BuiltIndexMemo.get(s, d, "t35q", "documents", rebuild)(qualityBody(s, d))
+    BuiltIndexMemo.get(s, d, "t35q", rebuild)(qualityBody(s, d))
 
   private def qualityBody(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "documents")

@@ -13,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite with SparkTestBase {
 
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf0001)
-      .queryExecution.executedPlan.toString
+    planOf(SparkEntry.queries(name)(spark, sf0001))
+
+  private def planOf(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString
 
   test("q02: both predicates reach the parquet scan; scan reads only needed columns") {
     val p = plan("q02_filter_pushdown")
@@ -46,12 +48,8 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
 
   test("s33 broadcasts the query side: no shuffle of the corpus for the kNN probe") {
     // r21: s33 is the gt10 tier's build row, so the registry plan is
-    // the served checkpoint read; pin the build shape through the
-    // withShared bypass (pure lineage over the same corpus).
-    val p = graft.Tables.withShared(spark, sf0001, "embeddings",
-      graft.Tables.t(spark, sf0001, "embeddings")) {
-      plan("s33_knn_bruteforce")
-    }
+    // the served checkpoint read; pin the build shape on the tier body.
+    val p = planOf(graft.queries.SimilarityOps.gt10Body(spark, sf0001))
     assert(p.contains("Broadcast"), s"query set must broadcast in:\n$p")
     SparkEntry.release(spark)
   }
@@ -912,13 +910,9 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
 
   // r21: s65/s67 are BUILD rows of the s65r/s67r recall tiers, so the
   // registry plan is the served checkpoint read; pin the BUILD shape
-  // through the withShared bypass (pure lineage over the same corpus),
-  // which renders the full search body the tier build runs.
+  // on the tier body, the full search the tier build runs.
   test("s65 sq8 recall: the approx arm scores map-side against broadcast queries and ranks in the native heap") {
-    val p = graft.Tables.withShared(spark, sf0001, "embeddings",
-      graft.Tables.t(spark, sf0001, "embeddings")) {
-      plan("s65_sq8_recall")
-    }
+    val p = planOf(graft.queries.SimilarityOps.sq8RecallBody(spark, sf0001))
     assert(p.contains("TopKPerKey"),
       s"top-10 must be the native heap in:\n$p")
     assert(p.contains("BroadcastNestedLoopJoin"),
@@ -927,10 +921,8 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("s67 hamming recall: the Hamming arm broadcasts the queries and ranks in the native heap") {
-    val p = graft.Tables.withShared(spark, sf0001, "embeddings",
-      graft.Tables.t(spark, sf0001, "embeddings")) {
-      plan("s67_hamming_recall")
-    }
+    val p = planOf(
+      graft.queries.SimilarityOps.hammingRecallBody(spark, sf0001))
     assert(p.contains("TopKPerKey"),
       s"top-10 must be the native heap in:\n$p")
     assert(p.contains("BroadcastNestedLoopJoin"),

@@ -6,10 +6,10 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions
-import graft.ml.{FamObs, FamilyCountAggregator}
+import graft.ml.ReefPipeline
 
 /** Property-based invariants (SURVEY.md §5.2): L1-normalization,
-  * aggregator semantics under arbitrary groupings, cosine bounds,
+  * reef family shares under arbitrary observations, cosine bounds,
   * dedup idempotence. Uses raw scalacheck generators with explicit
   * seeds (the scalatest-scalacheck bridge isn't in the offline cache),
   * so every run draws the same cases. */
@@ -22,20 +22,24 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
 
   val vocab = Seq("f1", "f2", "f3", "f4", "f5")
 
-  test("FamilyCountAggregator: output L1-normalizes unless all-unknown/zero") {
+  test("reef featurization: family shares L1-normalize unless all-unknown/zero") {
     import spark.implicits._
+    // one survey's observations per case, through the pivot path
+    // (countVectors + featurePipeline) that featurize runs
     val obsGen = Gen.listOfN(30, for {
       fam <- Gen.oneOf(vocab ++ Seq("unknownA", "unknownB"))
       tot <- Gen.choose(0.0, 9.0)
-    } yield FamObs(fam, tot))
+    } yield ("S0", 0.0, 0.0, fam, tot))
     forAllSeeded(obsGen, 10) { obs =>
-      val out = obs.toDS()
-        .groupByKey(_ => 0)
-        .agg(new FamilyCountAggregator(vocab).toColumn.name("v"))
-        .head()._2
+      val vectors = ReefPipeline.countVectors(obs.toDF("SurveyID",
+        "latitude", "longitude", "Family", "Total"), vocab)
+      val out = ReefPipeline.featurePipeline(vocab, includeLatInFeatures = false)
+        .fit(vectors).transform(vectors)
+        .head().getAs[org.apache.spark.ml.linalg.Vector]("features").toArray
       val s = out.sum
+      val known = obs.filter(o => vocab.contains(o._4)).map(_._5).sum
       assert(out.length === vocab.size)
-      assert(s == 0.0 || math.abs(s - 1.0) < 1e-9)
+      assert(if (known == 0.0) s == 0.0 else math.abs(s - 1.0) < 1e-9)
       assert(out.forall(_ >= 0.0))
     }
   }

@@ -231,16 +231,17 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     } finally SparkEntry.releaseIndexes(spark)
   }
 
-  test("every built-index tier is declared once through BuiltIndexMemo.get, the only Tables.isShared caller") {
+  test("every built-index tier is declared once through BuiltIndexMemo.get, and no table override is left in src/main") {
     import scala.jdk.CollectionConverters._
     val sources = java.nio.file.Files.walk(
         java.nio.file.Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
       .toSeq
-    // a hand-wired bypass branch elsewhere would fork the lifecycle
-    assert(sources.filter(_._2.contains("isShared(")).map(_._1).toSet ==
-      Set("Tables.scala", "BuiltIndexMemo.scala"))
+    // a table override would fork the lifecycle: every tier get would
+    // need a bypass branch, since an entry is valid only for its files
+    for (word <- Seq("withShared", "isShared", "persistOnBypass"))
+      assert(sources.filter(_._2.contains(word)).map(_._1).isEmpty, word)
     val calls = sources.map(f => "BuiltIndexMemo\\.get\\(".r
       .findAllMatchIn(f._2).size).sum
     val kinds = sources.flatMap(f =>

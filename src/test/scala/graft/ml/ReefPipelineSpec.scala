@@ -111,28 +111,24 @@ class ReefPipelineSpec extends AnyFunSuite with SparkTestBase
     assert(raw.filter(col("SurveyID") === "SQ").count() === 2)
   }
 
-  test("typed FamilyCountAggregator matches the pivot path exactly") {
-    import spark.implicits._
-    val typed = ReefPipeline.ingest(spark, csvPath)
-    val agg = new FamilyCountAggregator(vocab)
-    val viaAgg = typed
-      .select(col("SurveyID"), col("Family").as("family"), col("Total").as("total"))
-      .as[(String, String, Double)]
-      .map { case (sid, fam, tot) => (sid, FamObs(fam, tot)) }
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(agg.toColumn.name("shares"))
-      .collect().toMap
-    val viaPivot = ReefPipeline.countVectors(typed, vocab).collect().map { r =>
-      val counts = vocab.map(f => r.getAs[Double](f))
-      val total = counts.sum
-      val shares = if (total == 0.0) counts else counts.map(_ / total)
-      r.getAs[String]("SurveyID") -> shares
+  test("featurize's family shares replay the reference's count-vector closure driver-side") {
+    // toVector (Data_transform.py:87-95) per survey, on the ingested
+    // rows: unknown families dropped, L1 shares, zero-total guard
+    val expected = ReefPipeline.ingest(spark, csvPath).collect()
+      .groupBy(r => (r.getDouble(1), r.getDouble(2))).map { case (k, rs) =>
+        val counts = vocab.map(f =>
+          rs.filter(_.getString(3) == f).map(_.getDouble(4)).sum)
+        val total = counts.sum
+        k -> (if (total == 0.0) counts else counts.map(_ / total))
+      }
+    val got = featured.collect().map { r =>
+      val v = r.getAs[Vector]("features")
+      (r.getDouble(0), r.getDouble(1)) -> vocab.indices.map(v(_))
     }.toMap
-    assert(viaAgg.keySet === viaPivot.keySet)
-    viaAgg.foreach { case (sid, shares) =>
-      shares.zip(viaPivot(sid)).foreach { case (a, b) =>
-        assert(math.abs(a - b) < 1e-12, s"survey $sid differs")
+    assert(got.keySet === expected.keySet)
+    got.foreach { case (k, shares) =>
+      shares.zip(expected(k)).foreach { case (a, b) =>
+        assert(math.abs(a - b) < 1e-12, s"survey at $k differs")
       }
     }
   }

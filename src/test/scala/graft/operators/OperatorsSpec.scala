@@ -193,6 +193,14 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(total > GraphRank.Scale - 1000L)
   }
 
+  test("GraphRank: an empty edge list throws and leaves no persisted block behind") {
+    import spark.implicits._
+    val edges = Seq.empty[(Long, Long)].toDF("ia", "ib")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException](GraphRank.pagerankFixedPoint(edges))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("IncrementalDedup: none/semi/bloom modes emit identical pairs") {
     import spark.implicits._
     val mk = (id: Long, text: String) => (id, text)

@@ -464,9 +464,8 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
       (2L, Array.fill(dim - 3)(1.0f), 0),
       (3L, Array.fill(dim)(1.0f), 0)
     ).toDF("vec_id", "embedding", "label")
-    val flagged = graft.Tables.withShared(spark, sf0001, "embeddings",
-      planted) {
-      SparkEntry.queries("s55_embedding_qa")(spark, sf0001).collect()
+    val flagged = withCorpus("embeddings" -> planted) { dir =>
+      SparkEntry.queries("s55_embedding_qa")(spark, dir).collect()
     }
     assert(flagged.length === 1)
     assert(flagged(0).getLong(2) === 1L, "zero-norm vector must be counted")
@@ -3408,8 +3407,8 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
     val giant = Seq((1L, big, "en", "src0"), (2L, big, "en", "src0"))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val out = graft.Tables.withShared(spark, sf0001, "documents", giant) {
-      SparkEntry.queries("m50_phash_neardup")(spark, sf0001).collect()
+    val out = withCorpus("documents" -> giant) { dir =>
+      SparkEntry.queries("m50_phash_neardup")(spark, dir).collect()
     }
     assert(out.length === 1, "the identical pair must be the one candidate")
     assert(out.head.getLong(2) === 0L && out.head.getBoolean(3),
@@ -3430,8 +3429,8 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
     } :+ ((99L, "solo payload never repeated", "en", "srcB"))
     val docs = rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val got = graft.Tables.withShared(spark, sf0001, "documents", docs) {
-      SparkEntry.queries("m51_payload_cdc")(spark, sf0001)
+    val got = withCorpus("documents" -> docs) { dir =>
+      SparkEntry.queries("m51_payload_cdc")(spark, dir)
         .collect().map(r => r.getString(0) ->
           ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     }
@@ -3487,8 +3486,8 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
       (30L, "an unrelated singleton document body", "en", "srcC"))
     val docs = rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val got = graft.Tables.withShared(spark, sf0001, "documents", docs) {
-      SparkEntry.queries("m52_gear_cdc")(spark, sf0001)
+    val got = withCorpus("documents" -> docs) { dir =>
+      SparkEntry.queries("m52_gear_cdc")(spark, dir)
         .collect().map(r => r.getString(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
             r.getDouble(5)))).toMap
@@ -3561,8 +3560,8 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
       (30L, "an unrelated singleton document body", "en", "srcC"))
     val docs = rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val got = graft.Tables.withShared(spark, sf0001, "documents", docs) {
-      SparkEntry.queries("m53_gear_cdc_clamped")(spark, sf0001)
+    val got = withCorpus("documents" -> docs) { dir =>
+      SparkEntry.queries("m53_gear_cdc_clamped")(spark, dir)
         .collect().map(r => r.getString(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
             r.getDouble(5)))).toMap
@@ -3627,16 +3626,16 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
       "en", "srcZ")).toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
     val (unclamped, clamped) =
-      graft.Tables.withShared(spark, sf0001, "documents", docs) {
+      withCorpus("documents" -> docs) { dir =>
         // this test MEASURES the degeneracy the r17 fence exists to
         // refuse, so lift the fence for the demonstration run only
         // (QueriesSpec pins that the default bound rejects this corpus)
         spark.conf.set("spark.graft.cdc.maxDegenerateFrac", "1.0")
-        val u = try SparkEntry.queries("m52_gear_cdc")(spark, sf0001)
+        val u = try SparkEntry.queries("m52_gear_cdc")(spark, dir)
           .agg(org.apache.spark.sql.functions.sum(col("n_chunks")),
             org.apache.spark.sql.functions.sum(col("bytes_total"))).head()
         finally spark.conf.unset("spark.graft.cdc.maxDegenerateFrac")
-        val c = SparkEntry.queries("m53_gear_cdc_clamped")(spark, sf0001)
+        val c = SparkEntry.queries("m53_gear_cdc_clamped")(spark, dir)
           .agg(org.apache.spark.sql.functions.sum(col("n_chunks")),
             org.apache.spark.sql.functions.sum(col("bytes_total"))).head()
         ((u.getLong(0), u.getLong(1)), (c.getLong(0), c.getLong(1)))
@@ -3663,8 +3662,8 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
     val giant = Seq((1L, big, "en", "src0"), (2L, big, "en", "src0"))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val out = graft.Tables.withShared(spark, sf0001, "documents", giant) {
-      SparkEntry.queries("m51_payload_cdc")(spark, sf0001).collect()
+    val out = withCorpus("documents" -> giant) { dir =>
+      SparkEntry.queries("m51_payload_cdc")(spark, dir).collect()
     }
     assert(out.length === 1)
     val r = out.head

@@ -376,7 +376,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // transitively-closed clusters keep exactly one member each, so a
     // second dedup pass over the survivors must find NOTHING — if two
     // survivors were near-dups they would have shared a cluster. Run
-    // d28 over the kept corpus via the shared-table override.
+    // d28 over the kept corpus, planted as a corpus dir of its own.
+    def rows(q: String, d: String): Seq[String] =
+      SparkEntry.queries(q)(spark, d).collect().map(_.toString).sorted.toSeq
+    val d28 = rows("d28_neardup_jaccard", sf0001)
+    val d31 = rows("d31_dedup_clusters", sf0001)
     val kept = SparkEntry.queries("d41_canonical_docs")(spark, sf0001)
       .filter(col("keep")).select(col("doc_id"))
     val survivors = graft.Tables.t(spark, sf0001, "documents")
@@ -384,11 +388,18 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(survivors.count() <
       graft.Tables.t(spark, sf0001, "documents").count(),
       "the first pass must actually drop something")
-    val second = graft.Tables.withShared(spark, sf0001, "documents",
-      survivors) {
-      SparkEntry.queries("d28_neardup_jaccard")(spark, sf0001)
+    val planted = withCorpus("documents" -> survivors) { dir =>
+      val second = SparkEntry.queries("d28_neardup_jaccard")(spark, dir)
+      assert(second.count() === 0L, "second dedup pass must be empty")
+      BuiltIndexMemo.pinned(spark).values.toSet
     }
-    assert(second.count() === 0L, "second dedup pass must be empty")
+    // the planted pass's tiers are keyed by its own dir: the real
+    // corpus serves and rebuilds the same rows, and none of them pins
+    // a block built from the planted corpus
+    assert(planted.nonEmpty)
+    assert(rows("d31_dedup_clusters", sf0001) == d31)
+    assert(rows("d28_neardup_jaccard", sf0001) == d28)
+    assert((BuiltIndexMemo.pinned(spark).values.toSet & planted).isEmpty)
     SparkEntry.release(spark)
   }
 
@@ -425,11 +436,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (30L, block + " " + block, "en", "srcC"))       // internal repeat only
     val docs = rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val (d65, m53) = graft.Tables.withShared(spark, sf0001, "documents", docs) {
-      val a = SparkEntry.queries("d65_gear_substring_dedup")(spark, sf0001)
+    val (d65, m53) = withCorpus("documents" -> docs) { dir =>
+      val a = SparkEntry.queries("d65_gear_substring_dedup")(spark, dir)
         .collect().map(r => r.getString(0) ->
           ((r.getLong(2), r.getLong(4)))).toMap       // (bytes_total, removable)
-      val b = SparkEntry.queries("m53_gear_cdc_clamped")(spark, sf0001)
+      val b = SparkEntry.queries("m53_gear_cdc_clamped")(spark, dir)
         .collect().map(r => r.getString(0) ->
           ((r.getLong(2), r.getLong(4)))).toMap       // (bytes_total, stored)
       (a, b)
