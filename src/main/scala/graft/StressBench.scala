@@ -1147,10 +1147,11 @@ object StressBench {
     // deployment posture — every hop's join reuses that exchange
     // instead of re-shuffling the corpus-sized edge list). Synthetic
     // navigable graph: n nodes with deterministic 8-dim vectors, 3
-    // hash-derived out-edges each, 1000 queries, beam 4, 2 hops —
-    // s71's exact dataflow (beam window → edge walk → anti-join fresh
-    // arrivals → score). 10× nodes must not cost ~10× search time.
+    // hash-derived out-edges each, 1000 queries — the registry's own
+    // GraphWalk.beamWalk at s71's defaults (beam 4, 2 hops, one lazy
+    // plan). 10× nodes must not cost ~10× search time.
     graft.functions.VectorFunctions.register(spark)
+    val sim = graft.queries.SimilarityOps
     def graphSearch(n: Long, label: String): Unit = {
       val nodes = spark.range(n).toDF("nid")
         .withColumn("nemb", transform(sequence(lit(1), lit(8)),
@@ -1165,28 +1166,16 @@ object StressBench {
       val q = nodes.filter(col("nid") < 1000)
         .select(col("nid").as("qid"), col("nemb").as("qemb")).persist()
       q.count()
-      val cosF = graft.functions.VectorFunctions.cosineSim _
-      def scored(fr: DataFrame): DataFrame =
-        fr.join(nodes, "nid").join(broadcast(q), "qid")
-          .select(col("qid"), col("nid"),
-            round(cosF(col("qemb"), col("nemb")), 6).as("cosine"))
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
         .orderBy(col("cosine").desc, col("nid").asc)
-      def grow(v: DataFrame): DataFrame = {
-        val beam = v.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 4).select(col("qid"), col("nid"))
-        val fresh = beam.join(edges, col("nid") === col("src"))
-          .select(col("qid"), col("dst").as("nid"))
-          .filter(col("nid") =!= col("qid")).distinct()
-          .join(v.select(col("qid"), col("nid")), Seq("qid", "nid"),
-            "left_anti")
-        v.unionByName(scored(fresh))
-      }
-      val hop0 = scored(q.select(col("qid"))
+      val seeds = q.select(col("qid"))
         .join(edges, col("qid") === col("src"))
-        .select(col("qid"), col("dst").as("nid")))
+        .select(col("qid"), col("dst").as("nid"))
       val top5 = tm(s"graph_ann_search_$label") {
-        grow(grow(hop0)).withColumn("rnk", row_number().over(w))
+        graft.operators.GraphWalk.beamWalk(q, nodes, edges, seeds,
+            sim.graphAnnDefaultHops, sim.graphAnnDefaultBeam,
+            excludeQ = true, checkpointEvery = 0)
+          .withColumn("rnk", row_number().over(w))
           .filter(col("rnk") <= 5).count()
       }
       require(top5 == 5000L,
@@ -1197,22 +1186,16 @@ object StressBench {
     graphSearch(1000000L, "1m")
 
     // ---- s72: kNN-graph BUILD slope — the round-18 replacement for
-    // s47's cell-mate join as the construction path. Two builds, both
-    // timed AND pair-counted (the count is the mechanical evidence;
-    // wall time on a 32-thread box under-reports small runs' slopes
-    // because job overhead dominates them):
-    //  - NN-descent (s72's dataflow: hash-mix init, bounded
-    //    neighbor-of-neighbor supersteps, native TopKPerKey): scored
-    //    pairs ∝ n·K² per round, so 10× nodes → ~10× pairs. Measured
-    //    at 10k vs 100k nodes.
+    // s47's cell-mate join as the construction path. Two builds:
+    //  - NN-descent: the registry's own SimilarityOps.nndescentGraph
+    //    (hash-mix init, K=10, 6 fused neighbor-of-neighbor supersteps,
+    //    native TopKPerKey), whose scored pairs grow ∝ n·K² per round.
+    //    Timed at 10k vs 100k nodes.
     //  - s47-shape cell build (FIXED 16 cells, all cell-mate pairs
     //    scored): pairs = Σ cell² ≈ n²/16, so ~10× pairs from only
-    //    3.16× nodes. Measured at 10k vs 31.6k nodes.
-    // Same pair growth from 10× vs 3.16× data — the linear-vs-quadratic
-    // contrast, both sides measured, neither extrapolated. The
-    // registry's (K=10, 6 rounds) constants are kept verbatim; a
-    // 200-query sampled recall@3 floor keeps the fast build honest
-    // (speed from skipping work would show here).
+    //    3.16× nodes. Timed and pair-counted at 10k vs 31.6k nodes.
+    // A 200-query sampled recall@3 floor keeps the NN-descent build
+    // honest (speed from skipping work would show here).
     // `spark.range`'s (id >= 0, id < n) constraints survive a
     // localCheckpoint (LogicalRDD keeps originalConstraints with the
     // PRE-checkpoint attribute ids), and InferFiltersFromConstraints
@@ -1235,14 +1218,6 @@ object StressBench {
           i => pmod(xxhash64(col("nid") * 31 + i), lit(1000)) / 500.0 - 1.0))
         .repartition(32, col("nid")).persist()
     val cosF2 = graft.functions.VectorFunctions.cosineSim _
-    def scoreOn(nodes: DataFrame)(pairs: DataFrame): DataFrame =
-      pairs
-        .join(nodes.select(col("nid").as("src"), col("nemb").as("semb")),
-          "src")
-        .join(nodes.select(col("nid").as("dst"), col("nemb").as("demb")),
-          "dst")
-        .select(col("src"), col("dst"),
-          round(cosF2(col("semb"), col("demb")), 6).as("cosine"))
     def sampledRecall(nodes: DataFrame, graph: DataFrame): Double = {
       val sample = nodes.filter(col("nid") < 200)
         .select(col("nid").as("qid"), col("nemb").as("qemb")).persist()
@@ -1262,54 +1237,25 @@ object StressBench {
       sample.unpersist()
       hits / 600.0
     }
-    val ndK = graft.queries.SimilarityOps.nndescentK
-    val ndIters = graft.queries.SimilarityOps.nndescentIters
     def nndescentBuild(n: Long, label: String): Unit = {
       val nodes = hashNodes(n)
       nodes.count() // materialize OUTSIDE the timed build
-      var scoredPairs = 0L
-      val graph = tm(s"nndescent_build_$label") {
-        val init = nodes.select(col("nid").as("src"))
-          .select(col("src"), explode(array(
-            (1 to ndK).map(j => lit(j.toLong)): _*)).as("j"))
-          .select(col("src"),
-            ((col("src") * lit(1103515245L) + lit(12345L)
-              + col("j") * lit(2654435761L)) % lit(n)).as("dst"))
-          .filter(col("dst") =!= col("src")).distinct()
-        var g = scoreOn(nodes)(init).localCheckpoint(true)
-        scoredPairs += g.count()
-        for (_ <- 1 to ndIters) {
-          val adj = g.union(g.select(col("dst").as("src"),
-              col("src").as("dst"), col("cosine"))).distinct()
-          val cand = adj.select(col("src").as("p"), col("dst").as("ua"))
-            .join(adj.select(col("src").as("p"), col("dst").as("ub")), "p")
-            .filter(col("ua") =!= col("ub"))
-            .select(col("ua").as("src"), col("ub").as("dst")).distinct()
-            .persist()
-          scoredPairs += cand.count()
-          val next = graft.operators.TopKPerKeyApi.topKPerKey(
-              adj.union(scoreOn(nodes)(cand)).distinct(),
-              Seq("src"), Seq(("cosine", false), ("dst", true)), ndK)
-            .select(col("src"), col("dst"), col("cosine"))
-            .localCheckpoint(true)
-          cand.unpersist()
-          org.apache.spark.sql.GraftBridge.uncheckpoint(g)
-          g = next
-        }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("src"))
-          .orderBy(col("cosine").desc, col("dst").asc)
-        g.withColumn("rnk", row_number().over(w)).persist()
-      }
+      val vecs = nodes.select(col("nid").as("vec_id"), col("nemb").as("emb"))
+      val g = tm(s"nndescent_build_$label")(sim.nndescentGraph(vecs))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("src"))
+        .orderBy(col("cosine").desc, col("dst").asc)
+      val graph = g.withColumn("rnk", row_number().over(w)).persist()
       val edges = graph.count()
       val recall = sampledRecall(nodes, graph)
-      println(f"""{"stress":"nndescent_build_${label}_shape","scored_pairs":$scoredPairs,"edges":$edges,"sampled_recall_at_3":$recall%.4f}""")
+      println(f"""{"stress":"nndescent_build_${label}_shape","edges":$edges,"sampled_recall_at_3":$recall%.4f}""")
       // hash-random 8-dim vectors have real NN structure (measured
       // 0.95+ at both scales); a build that got fast by skipping
       // supersteps or candidates would crater this
       require(recall >= 0.7,
         s"nndescent sampled recall@3 $recall < 0.7 at $label")
       graph.unpersist(); nodes.unpersist()
+      org.apache.spark.sql.GraftBridge.uncheckpoint(g)
     }
     def cellBuild(n: Long, label: String): Unit = {
       val nodes = hashNodes(n)
@@ -1342,25 +1288,19 @@ object StressBench {
     // ---- s74: the entry-tier walk on NAVIGABLE vectors. The registry
     // corpus is uniform-random, where greedy graph navigation provably
     // degrades (s74's spec floor there is 0.35, measured 0.4–0.47);
-    // this row runs the SAME two-layer machinery — the registry's own
-    // nndescentGraph on both layers, the same election + 6-hop
-    // descent — on structured 8-dim vectors and require-gates the
-    // recall ≥ 0.7 (measured 0.87–0.93), pinning that the low corpus
-    // number is the data's pathology, not the machinery's.
+    // this row runs the registry's own code on structured 8-dim
+    // vectors — nndescentGraph on both layers (layer 1 from
+    // SimilarityOps.entryLayer) and GraphWalk.entrySearch with s74's
+    // constants — and require-gates the recall ≥ 0.7, pinning that the
+    // low corpus number is the data's pathology, not the machinery's.
     {
       val n = 10000L
       val nodes = hashNodes(n)
       nodes.count()
       val vecs0 = nodes.select(col("nid").as("vec_id"), col("nemb").as("emb"))
-      val vecs1 = nodes.filter(col("nid") % 8 === 0)
-        .select((col("nid") / 8).cast("long").as("vec_id"),
-          col("nemb").as("emb"))
-      val g0 = tm("hnsw_entry_build") {
-        val g = graft.queries.SimilarityOps.nndescentGraph(vecs0)
-          .persist()
-        g.count(); g
-      }
-      val g1 = graft.queries.SimilarityOps.nndescentGraph(vecs1).persist()
+      val vecs1 = sim.entryLayer(vecs0)
+      val g0 = tm("hnsw_entry_build")(sim.nndescentGraph(vecs0))
+      val g1 = sim.nndescentGraph(vecs1)
       val q = nodes.filter(col("nid") < 10)
         .select(col("nid").as("qid"), col("nemb").as("qemb")).persist()
       q.count()
@@ -1369,54 +1309,13 @@ object StressBench {
         col("emb").as("nemb"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid")).orderBy(col("cosine").desc, col("nid").asc)
-      def scoredOn(nt: DataFrame)(fr: DataFrame): DataFrame =
-        fr.join(nt, "nid").join(broadcast(q), "qid")
-          .select(col("qid"), col("nid"),
-            round(cosF2(col("qemb"), col("nemb")), 6).as("cosine"))
-      def growOn(nt: DataFrame, ed: DataFrame, excl: Boolean)
-          (v: DataFrame): DataFrame = {
-        val beam = v.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 4).select(col("qid"), col("nid"))
-        val walked = beam.join(ed, col("nid") === col("src"))
-          .select(col("qid"), col("dst").as("nid"))
-        val fresh = (if (excl) walked.filter(col("nid") =!= col("qid"))
-          else walked).distinct()
-          .join(v.select(col("qid"), col("nid")), Seq("qid", "nid"),
-            "left_anti")
-        v.unionByName(scoredOn(nt)(fresh))
-      }
-      val top3 = tm("hnsw_entry_search") {
-        val entry0 = q.select(col("qid"))
-          .crossJoin(broadcast(nodes1.filter(col("nid") === 0)
-            .select(col("nid"))))
-          .unionByName(q.select(col("qid"))
-            .crossJoin(broadcast(g1.filter(col("src") === 0)
-              .select(col("dst").as("nid")))))
-          .distinct()
-        val upper = (1 to 2).foldLeft(scoredOn(nodes1)(entry0))(
-          (v, _) => growOn(nodes1, g1, excl = false)(v))
-        val bestE = upper.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 4)
-          .select(col("qid"), (col("nid") * 8).as("entry_id"))
-        val hop0 = scoredOn(nodes0)(
-          bestE.select(col("qid"), col("entry_id").as("nid"))
-            .unionByName(bestE.join(g0, col("entry_id") === col("src"))
-              .select(col("qid"), col("dst").as("nid")))
-            .filter(col("nid") =!= col("qid")).distinct())
-        var visited = hop0.localCheckpoint(true)
-        // the registry's shared descent depth — r19 re-measured the
-        // plateau HERE (structured vectors): 0.733/0.800/0.933/1.000
-        // at hops 3/4/5/6, so 6 is load-bearing where navigation works
-        for (_ <- 1 to graft.queries.SimilarityOps.hnswDescentHops) {
-          val nv = growOn(nodes0, g0, excl = true)(visited)
-            .localCheckpoint(true)
-          org.apache.spark.sql.GraftBridge.uncheckpoint(visited)
-          visited = nv
-        }
-        visited.withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
-          .select(col("qid"), col("nid")).persist()
-      }
+      val visited = tm("hnsw_entry_search")(graft.operators.GraphWalk
+        .entrySearch(q, nodes0, g0, nodes1, g1, sim.hnswStride,
+          sim.graphAnnDefaultBeam, sim.graphAnnDefaultHops,
+          sim.hnswDescentHops))
+      val top3 = visited.withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= 3)
+        .select(col("qid"), col("nid")).persist()
       val exact3 = nodes0.join(broadcast(q), col("nid") =!= col("qid"))
         .select(col("qid"), col("nid"),
           round(cosF2(col("qemb"), col("nemb")), 6).as("cosine"))
@@ -1428,8 +1327,8 @@ object StressBench {
       require(recall >= 0.7,
         s"entry-tier recall $recall < 0.7 on navigable vectors — the " +
           "machinery, not the data, is broken")
-      top3.unpersist(); g0.unpersist(); g1.unpersist(); q.unpersist()
-      nodes.unpersist()
+      top3.unpersist(); q.unpersist(); nodes.unpersist()
+      Seq(visited, g0, g1).foreach(org.apache.spark.sql.GraftBridge.uncheckpoint(_))
     }
     } finally spark.conf.set(cpKey, cpPrev)
 

@@ -103,8 +103,8 @@ object DedupOps {
     }
 
   /** Shared df cap of the rare-anchor candidate pipeline (d33's
-    * stop-shingle discipline; d53 and d61's 3-gram arm run the same
-    * cap so they can serve [[cappedPostingsIndex]]). */
+    * stop-shingle discipline; d53 and every d61 arm run the same cap,
+    * so d53 and d61's 3-gram arm can serve [[cappedPostingsIndex]]). */
   private[graft] val NeardupMaxDf = 50
 
   /** The memoized EXPLODED POSTING LIST (r21, kind "exh"): one row per
@@ -166,9 +166,15 @@ object DedupOps {
   private def scoredCappedBody(s: SparkSession, d: String,
       rebuild: Boolean): DataFrame = {
     val sh = shingleIndex(s, d)
-    val exCapped = cappedPostingsIndex(s, d, rebuild)
-    val cands = exCapped.select(col("doc_id").as("ia"), col("sv"))
-      .join(exCapped.select(col("doc_id").as("ib"), col("sv").as("svb")),
+    scoredBody(sh, cappedPostingsIndex(s, d, rebuild))
+  }
+
+  /** Every pair sharing a posting of `exc` (doc_id, sv), with its exact
+    * full-set Jaccard over `sh` (doc_id, shingles): the sc50 body, and
+    * d61's 2-/5-gram arms over their own capped postings. */
+  private def scoredBody(sh: DataFrame, exc: DataFrame): DataFrame = {
+    val cands = exc.select(col("doc_id").as("ia"), col("sv"))
+      .join(exc.select(col("doc_id").as("ib"), col("sv").as("svb")),
         col("sv") === col("svb") && col("ia") < col("ib"))
       .select(col("ia"), col("ib")).distinct()
     cands
@@ -1110,7 +1116,6 @@ object DedupOps {
           .map(StructField(_, LongType, nullable = true)) :+
           StructField("mean_confirmed_jac", DoubleType, nullable = true))
       graft.plans.DeferredRows.ofRows(s, d61Schema) { () =>
-      val maxDf = 50
       import scala.concurrent.{Await, ExecutionContext, Future, blocking}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.global
@@ -1119,8 +1124,8 @@ object DedupOps {
         // ([[shinglesN]] at n = 3 ≡ [[shingles]]) — serve it, its
         // exploded posting tier, and the df ≤ 50 capped tier (the arm
         // runs the same [[NeardupMaxDf]] cap) from the memo (r20/r21);
-        // the 2-/5-gram arms are d61-only and keep their arm-local
-        // persists. Served frames are checkpoint-resident and pinned —
+        // the 2-/5-gram arms run the same bodies over their own
+        // shingles and keep their arm-local persists. Served frames are checkpoint-resident and pinned —
         // they are NOT this arm's to persist or unpersist.
         val served = n == 3
         val sh =
@@ -1129,45 +1134,23 @@ object DedupOps {
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val ex =
           if (served) postingsIndex(s, d)
-          else sh.select(col("doc_id"), explode(col("shingles")).as("sstr"))
-            .select(col("doc_id"), xxhash64(col("sstr")).as("sv"))
+          else postingsBody(sh)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val stats0 = ex.agg(count(lit(1)).as("n_instances"),
           countDistinct(col("sv")).as("n_distinct_shingles"))
         val exc =
           if (served) cappedPostingsIndex(s, d)
-          else {
-            val rare = ex.groupBy(col("sv")).agg(count(lit(1)).as("df"))
-              .filter(col("df") <= maxDf).select(col("sv"))
-            ex.join(rare, "sv")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          }
+          else cappedPostingsBody(ex)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // the capped stream's distinct sv set IS the rare set, so the
         // rare count reads the (possibly served) capped tier directly
         val nRare = exc.select(col("sv")).distinct()
           .agg(count(lit(1)).as("n_rare_shingles"))
         // the 3-gram arm's scored candidates are exactly the sc50 tier
         // (same cap, same exact full-set Jaccard, unthresholded) — the
-        // d61-only arms keep the in-line self-join + array confirm
+        // d61-only arms score their own capped postings the same way
         val scored =
-          if (served) scoredCappedIndex(s, d)
-          else {
-            val cands = exc.select(col("doc_id").as("ia"), col("sv"))
-              .join(exc.select(col("doc_id").as("ib"),
-                col("sv").as("svb")),
-                col("sv") === col("svb") && col("ia") < col("ib"))
-              .select(col("ia"), col("ib")).distinct()
-            cands
-              .join(sh.select(col("doc_id").as("ia"),
-                col("shingles").as("sa")), "ia")
-              .join(sh.select(col("doc_id").as("ib"),
-                col("shingles").as("sb")), "ib")
-              .withColumn("inter",
-                size(array_intersect(col("sa"), col("sb"))))
-              .select(col("ia"), col("ib"), (col("inter") /
-                (size(col("sa")) + size(col("sb")) - col("inter")))
-                .as("jac"))
-          }
+          if (served) scoredCappedIndex(s, d) else scoredBody(sh, exc)
         val agg = scored
           .agg(count(lit(1)).as("n_candidates"),
             sum(when(col("jac") >= 0.8, 1L).otherwise(0L))

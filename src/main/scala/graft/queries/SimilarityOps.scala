@@ -336,17 +336,22 @@ object SimilarityOps {
       rebuild: Boolean = false): DataFrame =
     BuiltIndexMemo.get(s, d, "nnd0", rebuild)(nndescentLayer0Build(s, d))
 
-  /** s74's /8 entry-tier edges, re-keyed to contiguous rank ids —
-    * the same derivation as s74's `e1` (filter every 8th, rank id =
-    * vec_id/8), so the memoized graph is exactly what the oracle's
-    * `e1` CTE chain unrolls. */
+  /** s74's entry-tier edges: NN-descent over [[entryLayer]], so the
+    * memoized graph is exactly what the oracle's `e1` CTE chain
+    * unrolls. */
   private def nndescentEdges1(s: SparkSession, d: String): DataFrame =
     BuiltIndexMemo.get(s, d, "nnd1")(nndescentLayer1Build(s, d))
 
+  /** s74's entry layer of (vec_id, emb): every [[hnswStride]]-th vector,
+    * re-keyed to the contiguous rank id vec_id / stride that the
+    * NN-descent init mix needs — the oracle's `e1` CTE. */
+  private[graft] def entryLayer(vecs: DataFrame): DataFrame =
+    vecs.filter(col("vec_id") % hnswStride === 0)
+      .select((col("vec_id") / hnswStride).cast("long").as("vec_id"),
+        col("emb"))
+
   private def nndescentLayer1Build(s: SparkSession, d: String): DataFrame = {
-      val e1 = emb(s, d).select(col("vec_id"), col("emb"))
-        .filter(col("vec_id") % 8 === 0)
-        .select((col("vec_id") / 8).cast("long").as("vec_id"), col("emb"))
+      val e1 = entryLayer(emb(s, d).select(col("vec_id"), col("emb")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the input persist feeds only the build's supersteps; once the
       // result is checkpoint-resident it is dead weight — drop it here
@@ -1167,7 +1172,7 @@ object SimilarityOps {
       val edges = queries("s47_knn_graph")(s, d)
         .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      beamWalk(s, d, edges)
+      flatWalk(s, d, edges)
     },
 
     // GRAPH-ANN OVER THE NN-DESCENT GRAPH — the end-to-end closure of
@@ -1175,7 +1180,7 @@ object SimilarityOps {
     // (StressBench: flat at 10× corpus) but walked edges built by
     // s47's quadratic cell join; s72 proved the BUILD scales
     // (near-linear at 10× corpus) — this query is the two composed,
-    // the same [[beamWalk]] (shared code, shared knobs) over s72's
+    // the same [[flatWalk]] (shared code, shared knobs) over s72's
     // out-degree-K graph. Recall@3 vs brute force: 0.933 at sf0.001
     // (matching s71's, floor-asserted in QueriesSpec); 0.667 at sf0.1,
     // where the walk honestly inherits the s72 graph's 0.61 edge
@@ -1189,7 +1194,7 @@ object SimilarityOps {
       // search query pays the walk, not a rebuild of the same fixed
       // point s72 just built (VERDICT r18 item 1a). The edge table is
       // already checkpoint-resident — no per-query persist needed.
-      beamWalk(s, d, nndescentEdges(s, d).select(col("src"), col("dst")))
+      flatWalk(s, d, nndescentEdges(s, d).select(col("src"), col("dst")))
     },
 
     // IVF-style ANN: a fixed coarse quantizer (vectors 0..15 as cell
@@ -1817,8 +1822,9 @@ object SimilarityOps {
     // what serves a NOVEL query at 100 TB, and the upper walk costs
     // O(hops × beam × degree) over a graph 1/8 the size (1/64 the
     // edges). Both graphs build via the shared [[nndescentGraph]]
-    // supersteps; the oracle composes the same generator twice
-    // (prefixed CTE chains) plus both walks unrolled. Self-matches are
+    // supersteps and both walks are [[GraphWalk.entrySearch]]; the
+    // oracle composes the same generator twice (prefixed CTE chains)
+    // plus both walks unrolled. Self-matches are
     // excluded (an entry-seeded walk can reach the query's own node;
     // its cosine-1.0 row would be a degenerate answer).
     //
@@ -1828,24 +1834,25 @@ object SimilarityOps {
     // and greedy graph navigation provably degrades without local
     // structure to route through (single-entry/2-hop read 0.23; wider
     // beams and deeper walks all plateau ≤ 0.47 here). On vectors with
-    // real neighborhood structure the SAME walk reads recall 1.0
-    // (StressBench's hnsw_entry row, require-gated ≥ 0.7). The flat
+    // real neighborhood structure the SAME search reads recall 0.9 on
+    // QueriesSpec's 2000 hash vectors and 1.0 on StressBench's 10k
+    // (hnsw_entry row), both gated ≥ 0.7. The flat
     // tier (s73, own-node seeding) remains the corpus-member serving
     // path at 0.933; this tier is what answers queries that are NOT
     // corpus members. QueriesSpec floors the corpus recall at 0.35.
     "s74_hnsw_entry_search" -> { (s, d) => hnswEntrySearch(s, d) }
   )
 
-  /** s74's whole walk, parameterized over the layer-0 descent depth so
-    * the hop-plateau can be RE-MEASURED (not re-estimated) whenever the
-    * corpus or the graph build changes — the registry query and the
-    * oracle both pin [[hnswDescentHops]]. */
+  /** s74's whole search — [[GraphWalk.entrySearch]] over the corpus
+    * embeddings and both served NN-descent layers — parameterized over
+    * the layer-0 descent depth so the hop plateau can be RE-MEASURED
+    * (not re-estimated) whenever the corpus or the graph build changes;
+    * the registry query and the oracle both pin [[hnswDescentHops]]. */
   private[graft] def hnswEntrySearch(s: SparkSession, d: String,
       descentHops: Int = hnswDescentHops): DataFrame = {
       val e = emb(s, d).select(col("vec_id"), col("emb"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val e1 = e.filter(col("vec_id") % 8 === 0)
-        .select((col("vec_id") / 8).cast("long").as("vec_id"), col("emb"))
+      val e1 = entryLayer(e)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // both layers serve from the memoized indexes (build-on-miss,
       // VERDICT r18 item 1a — the r18 shape rebuilt BOTH fixed points
@@ -1859,93 +1866,22 @@ object SimilarityOps {
       val nodes0 = e.select(col("vec_id").as("nid"), col("emb").as("nemb"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("cosine").desc, col("nid").asc)
-      def scoredOn(nodes: DataFrame)(fr: DataFrame): DataFrame =
-        fr.join(nodes, "nid").join(broadcast(q), "qid")
-          .select(col("qid"), col("nid"),
-            round(cos(col("qemb"), col("nemb")), 6).as("cosine"))
-      def growOn(nodes: DataFrame, edges: DataFrame, excludeQ: Boolean)
-          (v: DataFrame): DataFrame = {
-        val beam = v.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= graphAnnDefaultBeam)
-          .select(col("qid"), col("nid"))
-        val walked = beam.join(edges, col("nid") === col("src"))
-          .select(col("qid"), col("dst").as("nid"))
-        // layer 0 excludes the query's own node (an entry-seeded walk
-        // can reach it; its cosine-1.0 row is a degenerate answer);
-        // the UPPER walk must not — rid r is vector 8r, a different
-        // vector, and dropping rid == qid would lose a real entry
-        val fresh = (if (excludeQ) walked.filter(col("nid") =!= col("qid"))
-          else walked).distinct()
-          .join(v.select(col("qid"), col("nid")), Seq("qid", "nid"),
-            "left_anti")
-        v.unionByName(scoredOn(nodes)(fresh))
-      }
-      // upper walk: every query starts at the ONE global entry (rid 0
-      // + its out-edges), then two expansion rounds over layer 1
-      val entry0 = q.select(col("qid"))
-        .crossJoin(broadcast(nodes1.filter(col("nid") === 0)
-          .select(col("nid"))))
-        .unionByName(q.select(col("qid"))
-          .crossJoin(broadcast(edges1.filter(col("src") === 0)
-            .select(col("dst").as("nid")))))
-        .distinct()
-      val upper = (1 to graphAnnDefaultHops)
-        .foldLeft(scoredOn(nodes1)(entry0))((v, _) =>
-          growOn(nodes1, edges1, excludeQ = false)(v))
-      // elect the top-BEAM layer-1 nodes as entry points (measured:
-      // a single entry leaves whole regions unreachable — multi-entry
-      // seeding lifted sf0.1 recall 0.23 → 0.40)
-      val bestE = upper.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= graphAnnDefaultBeam)
-        .select(col("qid"), (col("nid") * 8).as("entry_id"))
-      // layer-0 walk seeded from every entry's out-edges (+ the
-      // entries themselves), the query's own node excluded throughout;
-      // the descent runs DEEPER than the flat walk (hnswDescentHops =
-      // 6, not 2): an entry-seeded search must TRAVEL to the query's
-      // neighborhood where s71/s73 start inside it — measured, recall
-      // plateaus by hop 6 on both corpora
-      val hop0 = scoredOn(nodes0)(
-        bestE.select(col("qid"), col("entry_id").as("nid"))
-          .unionByName(bestE.join(edges0, col("entry_id") === col("src"))
-            .select(col("qid"), col("dst").as("nid")))
-          .filter(col("nid") =!= col("qid")).distinct())
-      // the 6-hop descent checkpoints every SECOND hop (r20; per-hop
-      // until r19): a lazy fold references v THREE times per hop
-      // (beam, anti-join, union), so an un-truncated plan grows
-      // 3^hops subtree copies — at 6 hops the optimizer never
-      // finishes. Truncating every 2 hops bounds each lazy segment at
-      // 3² = 9 copies — the documented-fine regime of the 2-hop walks
-      // (upper, s71/s73) — while halving the number of full
-      // materialization barriers (6 → 3), which dominated s74's row
-      // once both graph layers served from the memo (per-hop frontier
-      // work is tiny: ≤ beam × degree rows per query). The last hop
-      // always checkpoints so the ranking window below reads a
-      // truncated root. Hash-identical at all SFs: checkpoint
-      // placement changes barrier count, never rows.
-      var lastCp = hop0.localCheckpoint(true)
-      var visited: DataFrame = lastCp
-      for (h <- 1 to descentHops) {
-        val grown = growOn(nodes0, edges0, excludeQ = true)(visited)
-        if (h % 2 == 0 || h == descentHops) {
-          val nv = grown.localCheckpoint(true)
-          org.apache.spark.sql.GraftBridge.uncheckpoint(lastCp)
-          lastCp = nv
-          visited = nv
-        } else visited = grown
-      }
-      visited
+      graft.operators.GraphWalk.entrySearch(q, nodes0, edges0, nodes1,
+          edges1, hnswStride, graphAnnDefaultBeam, graphAnnDefaultHops,
+          descentHops)
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 5)
         .select(col("qid"), col("rnk"), col("nid").as("neighbor_id"),
           col("cosine"))
   }
 
-  /** The NN-descent fixed-point shared by s72 (full corpus) and s74's
-    * upper layer (the /8 sample re-keyed to contiguous rank ids):
+  /** The NN-descent fixed-point behind every kNN graph of the family
+    * (s72's corpus, s74's [[entryLayer]], StressBench's graph rows):
     * hash-mix init, [[nndescentIters]] bounded neighbor-of-neighbor
     * supersteps with the d37 localCheckpoint discipline, final
-    * out-degree ≤ [[nndescentK]]. `vecs` must carry (vec_id, emb)
-    * with CONTIGUOUS ids 0..n−1 — the init mix maps into [0, n). */
+    * out-degree ≤ [[nndescentK]]. A failing superstep releases the live
+    * generation before the error propagates. `vecs` must carry (vec_id,
+    * emb) with CONTIGUOUS ids 0..n−1 — the init mix maps into [0, n). */
   private[graft] def nndescentGraph(vecs: DataFrame): DataFrame = {
     val nRow = vecs.agg(count(lit(1)).as("n"))
     val init = vecs.select(col("vec_id").as("src"))
@@ -1965,36 +1901,43 @@ object SimilarityOps {
           "dst")
         .select(col("src"), col("dst"),
           round(cos(col("semb"), col("demb")), 6).as("cosine"))
-    var g = score(init).localCheckpoint(true)
-    for (_ <- 1 to nndescentIters) {
-      val adj = g.union(g.select(col("dst").as("src"),
-          col("src").as("dst"), col("cosine"))).distinct()
-      // FUSED superstep (VERDICT r18 item 1b): the r18 shape scored
-      // EVERY neighbor-of-neighbor candidate and then ran a third full
-      // distinct over adj ∪ scored — but a candidate pair already in
-      // adj carries its (deterministic, 6-dp) cosine there, so scoring
-      // it again only feeds the dedup. Anti-joining candidates against
-      // adj first (a) skips the two vector-fetch joins for the ~2K
-      // known edges per node and (b) makes adj and score(fresh)
-      // disjoint-by-(src,dst) with each side internally distinct, so
-      // the union needs NO third distinct before the bounded top-K.
-      // Set-identical to the unfused shape — the oracle's distinct-
-      // union CTE chain replays the same fixed point unchanged.
-      val cand = adj.select(col("src").as("p"), col("dst").as("ua"))
-        .join(adj.select(col("src").as("p"), col("dst").as("ub")), "p")
-        .filter(col("ua") =!= col("ub"))
-        .select(col("ua").as("src"), col("ub").as("dst")).distinct()
-      val fresh = cand.join(adj.select(col("src"), col("dst")),
-        Seq("src", "dst"), "left_anti")
-      val next = graft.operators.TopKPerKeyApi.topKPerKey(
-          adj.union(score(fresh)),
-          Seq("src"), Seq(("cosine", false), ("dst", true)), nndescentK)
-        .select(col("src"), col("dst"), col("cosine"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.GraftBridge.uncheckpoint(g)
-      g = next
+    var g: DataFrame = null
+    try {
+      g = score(init).localCheckpoint(true)
+      for (_ <- 1 to nndescentIters) {
+        val adj = g.union(g.select(col("dst").as("src"),
+            col("src").as("dst"), col("cosine"))).distinct()
+        // FUSED superstep (VERDICT r18 item 1b): the r18 shape scored
+        // EVERY neighbor-of-neighbor candidate and then ran a third full
+        // distinct over adj ∪ scored — but a candidate pair already in
+        // adj carries its (deterministic, 6-dp) cosine there, so scoring
+        // it again only feeds the dedup. Anti-joining candidates against
+        // adj first (a) skips the two vector-fetch joins for the ~2K
+        // known edges per node and (b) makes adj and score(fresh)
+        // disjoint-by-(src,dst) with each side internally distinct, so
+        // the union needs NO third distinct before the bounded top-K.
+        // Set-identical to the unfused shape — the oracle's distinct-
+        // union CTE chain replays the same fixed point unchanged.
+        val cand = adj.select(col("src").as("p"), col("dst").as("ua"))
+          .join(adj.select(col("src").as("p"), col("dst").as("ub")), "p")
+          .filter(col("ua") =!= col("ub"))
+          .select(col("ua").as("src"), col("ub").as("dst")).distinct()
+        val fresh = cand.join(adj.select(col("src"), col("dst")),
+          Seq("src", "dst"), "left_anti")
+        val next = graft.operators.TopKPerKeyApi.topKPerKey(
+            adj.union(score(fresh)),
+            Seq("src"), Seq(("cosine", false), ("dst", true)), nndescentK)
+          .select(col("src"), col("dst"), col("cosine"))
+          .localCheckpoint(true)
+        org.apache.spark.sql.GraftBridge.uncheckpoint(g)
+        g = next
+      }
+      g
+    } catch {
+      case e: Throwable =>
+        if (g != null) org.apache.spark.sql.GraftBridge.uncheckpoint(g)
+        throw e
     }
-    g
   }
 
   /** s72's shared constants — ONE definition drives both the Spark
@@ -2027,17 +1970,17 @@ object SimilarityOps {
     * recall, so 6 stays. */
   private[graft] val hnswDescentHops = 6
 
-  /** The beam walk shared by s71 (s47 cell-built edges) and s73 (s72
-    * NN-descent edges): each query starts at its own node's out-edges
-    * (queries are corpus members, the s33 posture), then runs fixed
-    * expansion supersteps — keep the beam (top-beamW visited by exact
-    * rounded cosine, id tie-break), walk the beam's out-edges, score
-    * only NOT-YET-VISITED arrivals (anti-join — no pair scored twice),
-    * union into the visited set; final answer = top-5 visited. Every
-    * join is keyed by node or query id; per query per hop the frontier
-    * is ≤ beam × out-degree rows — at 100 TB a search touches
-    * O(hops × beam × degree) nodes per query while the edge table
-    * shuffles only by node id, never pairwise.
+  /** s74's layer-1 stride: every 8th vector is an entry node. Read by
+    * [[entryLayer]], the entry election and the oracle's `e1`/`bestE`
+    * CTEs. */
+  private[graft] val hnswStride = 8
+
+  /** s71/s73's flat walk: [[GraphWalk.beamWalk]] over the corpus
+    * embeddings and `edges` (s47's cell-built graph for s71, s72's
+    * NN-descent graph for s73), one lazy plan. Each query starts at its
+    * own node's out-edges (queries are corpus members, the s33
+    * posture), never re-enters its own node, and answers its top-5
+    * visited.
     *
     * Serving-time knobs (the q83 spark.graft.fuzzy.buckets posture):
     * spark.graft.graphann.{beam,hops} are THE latency/recall dials —
@@ -2045,7 +1988,7 @@ object SimilarityOps {
     * (graphAnnDefault*) are what the DuckDB oracle unrolls; non-default
     * settings trade scored nodes for recall and are covered by
     * QueriesSpec's widened-beam recall re-assertion, not the oracle. */
-  private def beamWalk(s: SparkSession, d: String,
+  private def flatWalk(s: SparkSession, d: String,
       edges: DataFrame): DataFrame = {
     val beamW = {
       val v = s.conf.get("spark.graft.graphann.beam",
@@ -2065,29 +2008,12 @@ object SimilarityOps {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("emb").as("qemb"))
     val nodes = e.select(col("vec_id").as("nid"), col("emb").as("nemb"))
-    def scored(frontier: DataFrame): DataFrame =
-      frontier.join(nodes, "nid").join(broadcast(q), "qid")
-        .select(col("qid"), col("nid"),
-          round(cos(col("qemb"), col("nemb")), 6).as("cosine"))
+    val seeds = q.select(col("qid")).join(edges, col("qid") === col("src"))
+      .select(col("qid"), col("dst").as("nid"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cosine").desc, col("nid").asc)
-    def beam(v: DataFrame): DataFrame =
-      v.withColumn("rn", row_number().over(w)).filter(col("rn") <= beamW)
-        .select(col("qid"), col("nid"))
-    def expand(b: DataFrame): DataFrame =
-      b.join(edges, col("nid") === col("src"))
-        .select(col("qid"), col("dst").as("nid"))
-        .filter(col("nid") =!= col("qid")).distinct()
-    def grow(v: DataFrame): DataFrame = {
-      val fresh = expand(beam(v))
-        .join(v.select(col("qid"), col("nid")), Seq("qid", "nid"),
-          "left_anti")
-      v.unionByName(scored(fresh))
-    }
-    val hop0 = scored(
-      q.select(col("qid")).join(edges, col("qid") === col("src"))
-        .select(col("qid"), col("dst").as("nid")))
-    (1 to hops).foldLeft(hop0)((v, _) => grow(v))
+    graft.operators.GraphWalk.beamWalk(q, nodes, edges, seeds, hops, beamW,
+        excludeQ = true, checkpointEvery = 0)
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
       .select(col("qid"), col("rnk"), col("nid").as("neighbor_id"),
@@ -2867,7 +2793,7 @@ object SimilarityOps {
     val uHops = graphAnnDefaultHops
     val wHops = hnswDescentHops
     s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       |e1 AS MATERIALIZED (SELECT vec_id // 8 AS vec_id, emb FROM e WHERE vec_id % 8 = 0),
+       |e1 AS MATERIALIZED (SELECT vec_id // $hnswStride AS vec_id, emb FROM e WHERE vec_id % $hnswStride = 0),
        |$chain0,
        |$chain1,
        |edges0 AS MATERIALIZED (SELECT src, dst FROM $fin0),
@@ -2882,7 +2808,7 @@ object SimilarityOps {
        |${(1 to uHops).map(h => hop(h, "u", "edges1", "e1", excl = false))
           .mkString(",\n")},
        |bestE AS (
-       | SELECT qid, nid * 8 AS entry_id FROM (
+       | SELECT qid, nid * $hnswStride AS entry_id FROM (
        |  SELECT *, row_number() OVER (PARTITION BY qid
        |    ORDER BY cosine DESC, nid ASC) AS rn FROM uv$uHops)
        | WHERE rn <= $graphAnnDefaultBeam),

@@ -253,6 +253,26 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(all.size == 21 && kinds.sorted == all.toSeq.sorted, kinds.sorted)
   }
 
+  test("StressBench runs the registry's walk and NN-descent: it writes neither and checkpoints nothing itself") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+      .toMap
+    // its checkpoints are the ones GraphWalk and nndescentGraph take
+    val checkpoints = "localCheckpoint\\(".r
+      .findAllIn(sources("StressBench.scala")).size
+    assert(checkpoints == 0, "StressBench.scala calls localCheckpoint(")
+    // the walk step's anti-join against the visited set is written
+    // once, and so is the NN-descent init mix
+    val walkSteps = sources.filter(f => "Seq\\(\"qid\", \"nid\"\\),\\s*\"left_anti\""
+      .r.findFirstIn(f._2).isDefined).keySet
+    assert(walkSteps == Set("GraphWalk.scala"), walkSteps)
+    val initMixes = sources.filter(_._2.contains("1103515245L")).keySet
+    assert(initMixes == Set("SimilarityOps.scala"), initMixes)
+  }
+
   test("src/main reads files only through Tables.read, apart from StressBench's own generated inputs") {
     import scala.jdk.CollectionConverters._
     // code lines only: comments may name the reader
@@ -532,6 +552,48 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(SparkEntry.queries("s74_hnsw_entry_search")(spark, sf0001)
       .filter(col("qid") === col("neighbor_id")).count() == 0L)
     SparkEntry.release(spark)
+  }
+
+  test("s74's entry search reaches recall@3 >= 0.7 on navigable hash vectors, both layers built by nndescentGraph") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val sim = queries.SimilarityOps
+    graft.functions.VectorFunctions.register(spark)
+    // StressBench's structured 8-dim hash vectors, from a local frame:
+    // a range-sourced one trips the constraint-propagation fault that
+    // StressBench switches off around its graph rows
+    val n = 2000L
+    val nodes = (0L until n).toDF("nid")
+      .withColumn("nemb", transform(sequence(lit(1), lit(8)),
+        i => pmod(xxhash64(col("nid") * 31 + i), lit(1000)) / 500.0 - 1.0))
+      .persist()
+    val vecs0 = nodes.select(col("nid").as("vec_id"), col("nemb").as("emb"))
+    val vecs1 = sim.entryLayer(vecs0)
+    val g0 = sim.nndescentGraph(vecs0)
+    val g1 = sim.nndescentGraph(vecs1)
+    val q = nodes.filter(col("nid") < 10)
+      .select(col("nid").as("qid"), col("nemb").as("qemb"))
+    val nodes1 = vecs1.select(col("vec_id").as("nid"), col("emb").as("nemb"))
+    val visited = graft.operators.GraphWalk.entrySearch(q, nodes, g0, nodes1,
+      g1, sim.hnswStride, sim.graphAnnDefaultBeam, sim.graphAnnDefaultHops,
+      sim.hnswDescentHops)
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col("cosine").desc, col("nid").asc)
+    def top3(scored: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        .select(col("qid"), col("nid")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = top3(nodes.join(broadcast(q), col("nid") =!= col("qid"))
+      .select(col("qid"), col("nid"), round(graft.functions.VectorFunctions
+        .cosineSim(col("qemb"), col("nemb")), 6).as("cosine")))
+    val recall = (exact & top3(visited)).size.toDouble / exact.size
+    // measured 0.9 (27 of 30) at n = 2000, the floor StressBench's
+    // 10k hnsw_entry row gates; s74's corpus reads 0.467 because its
+    // embeddings are uniform-random
+    assert(exact.size == 30 && recall >= 0.7, s"entry-search recall@3 was $recall")
+    Seq(visited, g0, g1).foreach(org.apache.spark.sql.GraftBridge.uncheckpoint(_))
+    nodes.unpersist()
   }
 
   test("s71 beam/hop knobs: explicit defaults reproduce the oracle walk, a wider beam keeps the recall floor, bad values refuse") {

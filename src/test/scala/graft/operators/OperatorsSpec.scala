@@ -201,6 +201,64 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
+  /** True when `t` or one of its causes carries `msg`. */
+  private def raised(t: Throwable, msg: String): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains(msg)))
+
+  test("GraphWalk: a checkpointed walk that fails after its first checkpoint throws and leaves no persisted block behind") {
+    import spark.implicits._
+    graft.functions.VectorFunctions.register(spark)
+    val nodes = (0L until 6L).map(i => (i, Seq(1.0, i.toDouble)))
+      .toDF("nid", "nemb")
+    val q = nodes.filter(col("nid") === 0)
+      .select(col("nid").as("qid"), col("nemb").as("qemb"))
+    val seeds = Seq((0L, 1L)).toDF("qid", "nid")
+    // a chain i → i + 1 whose scan raises: hop 0 scores the seeds
+    // alone, so the edges are first read by the hops after its
+    // checkpoint, inside hop 2's
+    val edges = spark.range(5).select(col("id").as("src"),
+      when(col("id") === 2, raise_error(lit("poisoned edge")))
+        .otherwise(col("id") + 1).as("dst"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception](GraphWalk.beamWalk(q, nodes, edges, seeds,
+      hops = 3, beam = 2, excludeQ = true, checkpointEvery = 2))
+    assert(raised(e, "poisoned edge"), e)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("nndescentGraph: a superstep that fails releases the live generation") {
+    import spark.implicits._
+    graft.functions.VectorFunctions.register(spark)
+    val n = 200L
+    // the init scans the vectors at most 3n times (the count and both
+    // sides of its scoring join) and every superstep's scoring join
+    // scans them again, so reads past 3n fail in a superstep, after
+    // the init's checkpoint
+    val limit = 3 * n
+    NnDescentFault.reads.set(0L)
+    val emb = udf { (v: Seq[Double]) =>
+      if (NnDescentFault.reads.incrementAndGet() > limit)
+        throw new IllegalStateException("poisoned superstep")
+      v
+    }.asNondeterministic()
+    // from a file: a local frame's projection, the UDF included, would
+    // be evaluated once on the driver while the init is planned
+    val dir = java.nio.file.Files.createTempDirectory("graft-nnd")
+    try {
+      val file = dir.resolve("v.parquet").toString
+      (0L until n).map(i => (i, Seq(1.0, (i * 7919 % 211).toDouble)))
+        .toDF("vec_id", "v").write.parquet(file)
+      val vecs = spark.read.parquet(file)
+        .select(col("vec_id"), emb(col("v")).as("emb"))
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[Exception](
+        graft.queries.SimilarityOps.nndescentGraph(vecs))
+      assert(raised(e, "poisoned superstep"), e)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("IncrementalDedup: none/semi/bloom modes emit identical pairs") {
     import spark.implicits._
     val mk = (id: Long, text: String) => (id, text)
@@ -309,4 +367,10 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
         s"$flag: kmv=$kmv exact=$e")
     }
   }
+}
+
+/** Vector reads of the failing NN-descent test, counted across its
+  * tasks (local mode runs them in this JVM). */
+object NnDescentFault {
+  val reads = new java.util.concurrent.atomic.AtomicLong
 }
