@@ -67,10 +67,9 @@ object SparkEntry {
     * embedding the registry should do the same. Two layers to cover:
     *  - the Dataset cache manager (every `df.persist()` in
     *    graft.queries.* registers here) — `catalog.clearCache()`;
-    *  - stray RDD-level blocks (`localCheckpoint` leaves its final
-    *    checkpointed RDD resident; DedupClustering/GraphRank unpersist
-    *    each superseded generation in-loop via GraftBridge.uncheckpoint,
-    *    but the returned lineage root outlives the call)
+    *  - stray RDD-level blocks: the checkpoints an iterative operator's
+    *    [[graft.Blocks]] scope hands back because its result reads them
+    *    (the scope itself drops every other block it made)
     *    — unpersist everything still in `getPersistentRDDs`.
     * BLOCKING (VERDICT r18 item 2): r18's non-blocking release let the
     * graph builders' hundreds of MB of checkpointed blocks drain

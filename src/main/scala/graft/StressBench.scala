@@ -1254,8 +1254,8 @@ object StressBench {
       // supersteps or candidates would crater this
       require(recall >= 0.7,
         s"nndescent sampled recall@3 $recall < 0.7 at $label")
-      graph.unpersist(); nodes.unpersist()
-      org.apache.spark.sql.GraftBridge.uncheckpoint(g)
+      // also drops the graph's checkpoint, which the build hands back
+      SparkEntry.release(spark)
     }
     def cellBuild(n: Long, label: String): Unit = {
       val nodes = hashNodes(n)
@@ -1327,8 +1327,7 @@ object StressBench {
       require(recall >= 0.7,
         s"entry-tier recall $recall < 0.7 on navigable vectors — the " +
           "machinery, not the data, is broken")
-      top3.unpersist(); q.unpersist(); nodes.unpersist()
-      Seq(visited, g0, g1).foreach(org.apache.spark.sql.GraftBridge.uncheckpoint(_))
+      SparkEntry.release(spark)
     }
     } finally spark.conf.set(cpKey, cpPrev)
 

@@ -50,12 +50,12 @@ import graft.queries.BuiltIndexMemo
   * [[trainAndEvaluate]] and [[crossValidate]] split, fit and score on
   * such a frame as it is, so one featurize pays the only CSV ingest and
   * pivot, however many fits follow. Any other frame (a plain plan) gets
-  * the same eager `localCheckpoint`, held only for the call: a blocking
-  * unpersist releases it when the call returns or throws. Either way
-  * the fits run lineage-truncated. Tree learners run one job per tree
-  * level, and every task binary serializes its RDD's whole lineage; on
-  * the plan itself that is the CSV scan, the 189-way pivot and both
-  * assemblers, and the split and the evaluator re-scan the CSV besides.
+  * the same eager `localCheckpoint`, held only for the call in a
+  * [[graft.Blocks]] scope. Either way the fits run lineage-truncated.
+  * Tree learners run one job per tree level, and every task binary
+  * serializes its RDD's whole lineage; on the plan itself that is the
+  * CSV scan, the 189-way pivot and both assemblers, and the split and
+  * the evaluator re-scan the CSV besides.
   * `persist()` would not help: a persisted RDD serves its blocks but
   * still ships its parents in every task, while a checkpoint replaces
   * them. The cost is one MEMORY_AND_DISK copy of the feature frame (two
@@ -149,17 +149,12 @@ object ReefPipeline {
 
   /** Run `body` on `featured` itself when it is already a checkpoint
     * (a [[featurize]] frame), else on one eager, lineage-truncated copy
-    * of it, released (blocking) when `body` returns or throws. The copy
-    * keeps the plan's partitions and each partition's row order, so
-    * seeded splits and folds select the same rows as on the plan
-    * itself. */
+    * of it, held for the call. The copy keeps the plan's partitions and
+    * each partition's row order, so seeded splits and folds select the
+    * same rows as on the plan itself. */
   private def onCheckpoint[T](featured: DataFrame)(body: DataFrame => T): T =
     if (GraftBridge.isCheckpointed(featured)) body(featured)
-    else {
-      val frame = featured.localCheckpoint(true)
-      try body(frame)
-      finally GraftBridge.uncheckpoint(frame, blocking = true)
-    }
+    else graft.Blocks.scoped(b => body(b.checkpoint(featured)))
 
   /** Seeded k-fold model selection — the `CrossValidator` surface the
     * MLlib north star implies (Pipeline + param grid + evaluator; the

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.Blocks
+
 /** Byte-pair-encoding tokenizer TRAINING, K merge steps — the bounded
   * superstep completion of t63's single-step merge frontier (SURVEY
   * §2.12 text family; same loop discipline as
@@ -34,9 +36,8 @@ import org.apache.spark.sql.functions._
   * map-side rewrite — corpus volume never re-enters. Pair rows per
   * word are capped at maxChars−1 (the 32-char cap shared with t63 and
   * the reference's m33 bounded-sample contract). Each step
-  * localCheckpoints the rewritten vocabulary and releases the previous
-  * step's blocks ([[org.apache.spark.sql.GraftBridge.uncheckpoint]] —
-  * the d37 hygiene), so lineage and storage stay O(1) in K.
+  * checkpoints the rewritten vocabulary and releases the previous one
+  * in one [[graft.Blocks]] scope, so lineage and storage stay O(1) in K.
   */
 object BpeTrainer {
 
@@ -64,13 +65,12 @@ object BpeTrainer {
     * that expose this as a registry entry wrap it in
     * [[graft.plans.DeferredRows]] so the loop fires at first action,
     * not at plan construction. */
-  def trainMerges(words: DataFrame, k: Int, maxChars: Int = 32): Seq[Row] = {
-    var cur = words
-      .select(split(substring(col("w"), 1, maxChars), "").as("syms"),
-        col("wf").cast("long").as("wf"))
-      .localCheckpoint(true)
-    val out = Seq.newBuilder[Row]
-    try {
+  def trainMerges(words: DataFrame, k: Int, maxChars: Int = 32): Seq[Row] =
+    Blocks.scoped { b =>
+      var cur = b.checkpoint(words
+        .select(split(substring(col("w"), 1, maxChars), "").as("syms"),
+          col("wf").cast("long").as("wf")))
+      val out = Seq.newBuilder[Row]
       var step = 1
       var exhausted = false
       while (step <= k && !exhausted) {
@@ -89,16 +89,14 @@ object BpeTrainer {
           val right = top(0).getString(1)
           val merged = left + right
           out += Row(step.toLong, left, right, merged, top(0).getLong(2))
-          val next = cur.select(
-              split(rewriteFold(col("syms"), left, right, merged), " ")
-                .as("syms"), col("wf"))
-            .localCheckpoint(true)
-          org.apache.spark.sql.GraftBridge.uncheckpoint(cur)
+          val next = b.checkpoint(cur.select(
+            split(rewriteFold(col("syms"), left, right, merged), " ")
+              .as("syms"), col("wf")))
+          b.release(cur)
           cur = next
           step += 1
         }
       }
-    } finally org.apache.spark.sql.GraftBridge.uncheckpoint(cur)
-    out.result()
-  }
+      out.result()
+    }
 }

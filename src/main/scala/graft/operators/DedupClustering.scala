@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
+import graft.Blocks
+
 /** Connected components over a near-duplicate edge list — the dedup
   * CLUSTERING step: group mutually-similar documents so one canonical
   * doc per component survives (min id here).
@@ -28,8 +30,8 @@ import org.apache.spark.sql.functions._
   * signal and stop the loop early.
   *
   * Both operators throw when `maxIter` runs out before convergence —
-  * partial labels are not the component minima — and on any failure
-  * release the persist and checkpoints they made before rethrowing.
+  * partial labels are not the component minima. Their persist and
+  * checkpoints live in one [[graft.Blocks]] scope.
   */
 object DedupClustering {
 
@@ -41,26 +43,18 @@ object DedupClustering {
     * `maxIter` ≥ its largest component diameter (a 30-node chain needs
     * 29). Throws `IllegalStateException` otherwise.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 10): DataFrame = {
-    // no distinct: min is idempotent, so a duplicate edge only repeats
-    // a message. The persist is more than reuse: without it a d31
-    // superstep over the d28 tier ran 5 jobs, not 3.
-    val sym = edges
-      .select(col("ia").cast("long").as("src"), col("ib").cast("long").as("dst"))
-      .union(edges
-        .select(col("ib").cast("long").as("src"), col("ia").cast("long").as("dst")))
-      .persist()
-    // localCheckpoint (not persist) per superstep: persist caches the
-    // DATA but the logical plan still nests one join level per
-    // superstep — at O(diameter) supersteps even *stringifying* the
-    // plan (event log, explain) is O(2^depth)/OOM territory. Eager
-    // checkpoint truncates lineage to the materialized blocks, keeping
-    // every superstep's plan shallow no matter how many run.
-    var labels: DataFrame = null
-    try {
-      labels = sym.groupBy(col("src")).agg(min(col("dst")).as("m"))
-        .select(col("src").as("node"), least(col("src"), col("m")).as("comp"))
-        .localCheckpoint(true)
+  def connectedComponents(edges: DataFrame, maxIter: Int = 10): DataFrame =
+    Blocks.scoped { b =>
+      // no distinct: min is idempotent, so a duplicate edge only repeats
+      // a message. The persist is more than reuse: without it a d31
+      // superstep over the d28 tier ran 5 jobs, not 3.
+      val sym = b.persist(edges
+        .select(col("ia").cast("long").as("src"), col("ib").cast("long").as("dst"))
+        .union(edges
+          .select(col("ib").cast("long").as("src"), col("ia").cast("long").as("dst"))))
+      var labels = b.checkpoint(sym
+        .groupBy(col("src")).agg(min(col("dst")).as("m"))
+        .select(col("src").as("node"), least(col("src"), col("m")).as("comp")))
       var changed = 1L
       var i = 0
       while (changed > 0) {
@@ -79,23 +73,14 @@ object DedupClustering {
           .agg(min(col("comp")).as("comp"), max(col("old")).as("old"))
           .observe("cc", count_if(col("comp") < col("old")).as("changed"))
           .select(col("node"), col("comp"))
-        val next = step.localCheckpoint(true)
-        // next is materialized by its eager checkpoint — release the
-        // superseded generation's blocks or storage grows
-        // O(supersteps × nodes) inside a single query
-        val prev = labels
+        val next = b.checkpoint(step)
+        b.release(labels)
         labels = next
-        GraftBridge.uncheckpoint(prev)
         changed = GraftBridge.observedMetrics(step)("cc").getLong(0)
         i += 1
       }
-    } catch {
-      case e: Throwable =>
-        if (labels != null) GraftBridge.uncheckpoint(labels)
-        throw e
-    } finally sym.unpersist()
-    labels.select(col("node").as("doc_id"), col("comp").as("cluster_id"))
-  }
+      labels.select(col("node").as("doc_id"), col("comp").as("cluster_id"))
+    }
 
   /** Large-star/small-star connected components (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond") — same output
@@ -112,40 +97,31 @@ object DedupClustering {
     * with the previous round's; `maxIter` rounds without a repeat
     * throw `IllegalStateException`.
     */
-  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // (edge count, order-independent xor of edge hashes — xor, not
-    // sum: ANSI mode makes a long sum overflow), observed on top of the
-    // edge generation's final distinct, inside its eager checkpoint
-    def checkpointWithSig(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val gen = df.observe("sig", count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x"))
-      val cp = gen.localCheckpoint(true)
-      val r = GraftBridge.observedMetrics(gen)("sig")
-      (cp, (r.getLong(0), r.getLong(1)))
-    }
-    var e: DataFrame = null
-    var allNodes: DataFrame = null
-    var ls: DataFrame = null
-    try {
-      // localCheckpoint (not persist): each round's plan embeds the
-      // previous one 4× over (symmetrize + two join branches), so after
-      // ~10 rounds the LOGICAL PLAN itself is exponentially large —
-      // checkpointing truncates lineage to the materialized blocks
-      val (e0, sig0) = checkpointWithSig(edges
+  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 25): DataFrame =
+    Blocks.scoped { b =>
+      // (edge count, order-independent xor of edge hashes — xor, not
+      // sum: ANSI mode makes a long sum overflow), observed on top of
+      // the edge generation's final distinct, inside its eager checkpoint
+      def checkpointWithSig(df: DataFrame): (DataFrame, (Long, Long)) = {
+        val gen = df.observe("sig", count(lit(1)).as("n"),
+          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x"))
+        val cp = b.checkpoint(gen)
+        val r = GraftBridge.observedMetrics(gen)("sig")
+        (cp, (r.getLong(0), r.getLong(1)))
+      }
+      var (e, prevSig) = checkpointWithSig(edges
         .select(col("ia").cast("long").as("a"), col("ib").cast("long").as("b"))
         .filter(col("a") =!= col("b"))
         .select(greatest(col("a"), col("b")).as("u"),
           least(col("a"), col("b")).as("v"))
         .distinct())
-      e = e0
-      // eager checkpoint, NOT lazy persist: the in-loop uncheckpoint of
+      // eager checkpoint, NOT lazy persist: the in-loop release of
       // superseded edge generations drops gen-0's blocks, so allNodes
       // must materialize (and truncate its lineage off gen-0) before the
       // first round runs — a lazy persist would first compute at the
       // final join and find its parent blocks gone
-      allNodes = e.select(col("u").as("node"))
-        .union(e.select(col("v").as("node"))).distinct().localCheckpoint(true)
-      var prevSig = sig0
+      val allNodes = b.checkpoint(e.select(col("u").as("node"))
+        .union(e.select(col("v").as("node"))).distinct())
       var converged = false
       var i = 0
       while (!converged) {
@@ -157,11 +133,11 @@ object DedupClustering {
           .union(e.select(col("v").as("c"), col("u").as("n")))
         val mins = sym.groupBy(col("c")).agg(min(col("n")).as("mn"))
           .select(col("c"), least(col("mn"), col("c")).as("m"))
-        ls = sym.join(mins, "c")
+        val ls = b.persist(sym.join(mins, "c")
           .filter(col("n") > col("c"))
           .select(col("n").as("u"), col("m").as("v"))
           .filter(col("u") =!= col("v"))
-          .distinct().persist()
+          .distinct())
         // SMALL-STAR: for each center u over its smaller neighbors S,
         // attach S ∪ {u} to min(S) (ls edges are already big→small)
         val minsS = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
@@ -172,32 +148,19 @@ object DedupClustering {
           .select(greatest(col("a"), col("b")).as("u"),
             least(col("a"), col("b")).as("v"))
           .distinct())
-        ls.unpersist()
-        ls = null
-        // release the superseded round's checkpoint blocks (next is
-        // already materialized by its eager checkpoint)
-        val prev = e
+        b.release(ls)
+        b.release(e)
         e = next
-        GraftBridge.uncheckpoint(prev)
         converged = nextSig == prevSig
         prevSig = nextSig
         i += 1
       }
-    } catch {
-      case t: Throwable =>
-        if (ls != null) ls.unpersist()
-        Seq(e, allNodes).filter(_ != null).foreach(GraftBridge.uncheckpoint(_))
-        throw t
+      // at the fixpoint the edges form stars rooted at component minima:
+      // each non-root u keeps one edge, to its root
+      val stars = e.groupBy(col("u")).agg(min(col("v")).as("root"))
+      allNodes
+        .join(stars, col("node") === col("u"), "left")
+        .select(col("node").as("doc_id"),
+          coalesce(col("root"), col("node")).as("cluster_id"))
     }
-    // at the fixpoint the edges form stars rooted at component minima:
-    // each non-root u keeps one edge, to its root
-    val stars = e.groupBy(col("u")).agg(min(col("v")).as("root"))
-    // allNodes' checkpoint blocks stay resident — they are a leaf of
-    // the returned (lazy) plan and cannot be recomputed once dropped;
-    // SparkEntry.release() reaps them between queries
-    allNodes
-      .join(stars, col("node") === col("u"), "left")
-      .select(col("node").as("doc_id"),
-        coalesce(col("root"), col("node")).as("cluster_id"))
-  }
 }

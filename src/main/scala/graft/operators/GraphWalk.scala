@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Blocks
 import graft.functions.VectorFunctions
 
 /** Beam search over a kNN graph — the one walk behind the graph-ANN
@@ -36,9 +37,8 @@ object GraphWalk {
     * anti-join, union), so a deeper walk grows 3^hops plan copies:
     * `checkpointEvery = k` truncates it with an eager localCheckpoint
     * of hop 0, every k-th hop and the last hop, releasing the one
-    * before. Placement changes the barrier count, never the rows. A
-    * failing hop releases the live checkpoint before the error
-    * propagates; the returned checkpoint is the caller's. */
+    * before. Placement changes the barrier count, never the rows. The
+    * checkpoints live in one [[graft.Blocks]] scope. */
   def beamWalk(q: DataFrame, nodes: DataFrame, edges: DataFrame,
       seeds: DataFrame, hops: Int, beam: Int, excludeQ: Boolean,
       checkpointEvery: Int): DataFrame = {
@@ -57,26 +57,19 @@ object GraphWalk {
     }
     val hop0 = scored(seeds)
     if (checkpointEvery == 0) (1 to hops).foldLeft(hop0)((v, _) => grow(v))
-    else {
-      var lastCp: DataFrame = null
-      try {
-        lastCp = hop0.localCheckpoint(true)
-        var visited = lastCp
-        for (h <- 1 to hops) {
-          val grown = grow(visited)
-          if (h % checkpointEvery == 0 || h == hops) {
-            val nv = grown.localCheckpoint(true)
-            GraftBridge.uncheckpoint(lastCp)
-            lastCp = nv
-            visited = nv
-          } else visited = grown
-        }
-        visited
-      } catch {
-        case e: Throwable =>
-          if (lastCp != null) GraftBridge.uncheckpoint(lastCp)
-          throw e
+    else Blocks.scoped { b =>
+      var lastCp = b.checkpoint(hop0)
+      var visited = lastCp
+      for (h <- 1 to hops) {
+        val grown = grow(visited)
+        if (h % checkpointEvery == 0 || h == hops) {
+          val nv = b.checkpoint(grown)
+          b.release(lastCp)
+          lastCp = nv
+          visited = nv
+        } else visited = grown
       }
+      visited
     }
   }
 

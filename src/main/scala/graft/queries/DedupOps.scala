@@ -1095,9 +1095,9 @@ object DedupOps {
     // posture): pick n, then run the chosen config corpus-wide.
     // LIFECYCLE: each arm's 1-row aggregate is materialized EAGERLY
     // (head() on a provably 1-row frame — the scale-safe collect
-    // posture) and the arm's three persisted frames are unpersisted
-    // as soon as that row exists, so no arm's cache outlives its use
-    // (the r11 eviction-pressure finding). The three arms submit as
+    // posture) inside the arm's own [[graft.Blocks]] scope, so its
+    // persists are released as soon as that row exists and no arm's
+    // cache outlives its use (the r11 eviction-pressure finding). The three arms submit as
     // CONCURRENT jobs (Spark's scheduler interleaves them exactly as
     // the old lazy union did), so the eager lifecycle costs no
     // wall-clock vs the r11 single-action form. LAZINESS (r17): the
@@ -1119,29 +1119,25 @@ object DedupOps {
       import scala.concurrent.{Await, ExecutionContext, Future, blocking}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.global
-      val futures = Seq(2, 3, 5).map { n => Future { blocking {
+      val futures = Seq(2, 3, 5).map { n =>
+        Future { blocking { graft.Blocks.scoped { b =>
         // the 3-gram arm is exactly the family's shingle index
         // ([[shinglesN]] at n = 3 ≡ [[shingles]]) — serve it, its
         // exploded posting tier, and the df ≤ 50 capped tier (the arm
         // runs the same [[NeardupMaxDf]] cap) from the memo (r20/r21);
         // the 2-/5-gram arms run the same bodies over their own
-        // shingles and keep their arm-local persists. Served frames are checkpoint-resident and pinned —
-        // they are NOT this arm's to persist or unpersist.
+        // shingles, persisted in the arm's scope. Served frames are
+        // pinned tiers and never enter the scope.
         val served = n == 3
         val sh =
-          if (served) shingleIndex(s, d)
-          else shinglesN(s, d, n)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          if (served) shingleIndex(s, d) else b.persist(shinglesN(s, d, n))
         val ex =
-          if (served) postingsIndex(s, d)
-          else postingsBody(sh)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          if (served) postingsIndex(s, d) else b.persist(postingsBody(sh))
         val stats0 = ex.agg(count(lit(1)).as("n_instances"),
           countDistinct(col("sv")).as("n_distinct_shingles"))
         val exc =
           if (served) cappedPostingsIndex(s, d)
-          else cappedPostingsBody(ex)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          else b.persist(cappedPostingsBody(ex))
         // the capped stream's distinct sv set IS the rare set, so the
         // rare count reads the (possibly served) capped tier directly
         val nRare = exc.select(col("sv")).distinct()
@@ -1165,12 +1161,8 @@ object DedupOps {
             col("n_confirmed"),
             round(col("sj") / (col("n_confirmed") * lit(10000L))
               .cast("double"), 6).as("mean_confirmed_jac"))
-        val row = armDf.head()
-        // only the arm-local persists are released here; the served
-        // 3-gram tiers stay pinned (their blocks are not this arm's)
-        if (!served) Seq(sh, ex, exc).foreach(_.unpersist(false))
-        row
-      } } }
+        armDf.head()
+      } } } }
       futures.map(Await.result(_, Duration.Inf))
       }
     },

@@ -350,27 +350,17 @@ object SimilarityOps {
       .select((col("vec_id") / hnswStride).cast("long").as("vec_id"),
         col("emb"))
 
-  private def nndescentLayer1Build(s: SparkSession, d: String): DataFrame = {
-      val e1 = entryLayer(emb(s, d).select(col("vec_id"), col("emb")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // the input persist feeds only the build's supersteps; once the
-      // result is checkpoint-resident it is dead weight — drop it here
-      // (ADVICE r19: on a lost build race it otherwise stayed resident
-      // until the next release(), and under the concurrent warm-up
-      // several duplicate full-corpus persists could be live at once)
-      try nndescentGraph(e1) finally e1.unpersist(blocking = false)
-    }
+  // the input persist feeds only the build's init and supersteps, so
+  // the scope drops it once the checkpointed graph lands (a lost
+  // concurrent build race used to leave duplicate full-corpus persists
+  // resident until the next release())
+  private def nndescentLayer1Build(s: SparkSession, d: String): DataFrame =
+    graft.Blocks.scoped(b => nndescentGraph(
+      b.persist(entryLayer(emb(s, d).select(col("vec_id"), col("emb"))))))
 
-  private def nndescentLayer0Build(s: SparkSession, d: String): DataFrame = {
-    // the input persist feeds the init + 6 supersteps' scoring joins;
-    // only the checkpointed RESULT is pinned, so the working set is
-    // unpersisted as soon as the build lands (ADVICE r19 — it used to
-    // ride until the next release(), and a lost concurrent build race
-    // left duplicate full-corpus persists resident)
-    val e = emb(s, d).select(col("vec_id"), col("emb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try nndescentGraph(e) finally e.unpersist(blocking = false)
-  }
+  private def nndescentLayer0Build(s: SparkSession, d: String): DataFrame =
+    graft.Blocks.scoped(b => nndescentGraph(
+      b.persist(emb(s, d).select(col("vec_id"), col("emb")))))
 
   /** Driver-side fitted models of the embeddings table, memoized per
     * (SF dir, table fingerprint, key) so each is fit once per process
@@ -1767,7 +1757,7 @@ object SimilarityOps {
     // .GraphRank]]'s d37 discipline verbatim: a fixed iteration count
     // (so the DuckDB oracle unrolls the identical supersteps as
     // chained CTEs), eager localCheckpoint per round to truncate
-    // lineage, superseded generations uncheckpointed in-loop.
+    // lineage, superseded generations released in-loop.
     //
     // Determinism end to end: the init graph is a SEEDLESS HASH MIX —
     // dst = (src·1103515245 + 12345 + j·2654435761) mod n, j ∈ 1..K
@@ -1851,9 +1841,7 @@ object SimilarityOps {
   private[graft] def hnswEntrySearch(s: SparkSession, d: String,
       descentHops: Int = hnswDescentHops): DataFrame = {
       val e = emb(s, d).select(col("vec_id"), col("emb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val e1 = entryLayer(e)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // both layers serve from the memoized indexes (build-on-miss,
       // VERDICT r18 item 1a — the r18 shape rebuilt BOTH fixed points
       // on every invocation, 2 of the pass's 4 redundant builds); the
@@ -1878,10 +1866,10 @@ object SimilarityOps {
   /** The NN-descent fixed-point behind every kNN graph of the family
     * (s72's corpus, s74's [[entryLayer]], StressBench's graph rows):
     * hash-mix init, [[nndescentIters]] bounded neighbor-of-neighbor
-    * supersteps with the d37 localCheckpoint discipline, final
-    * out-degree ≤ [[nndescentK]]. A failing superstep releases the live
-    * generation before the error propagates. `vecs` must carry (vec_id,
-    * emb) with CONTIGUOUS ids 0..n−1 — the init mix maps into [0, n). */
+    * supersteps with the d37 localCheckpoint discipline in one
+    * [[graft.Blocks]] scope, final out-degree ≤ [[nndescentK]]. `vecs`
+    * must carry (vec_id, emb) with CONTIGUOUS ids 0..n−1 — the init mix
+    * maps into [0, n). */
   private[graft] def nndescentGraph(vecs: DataFrame): DataFrame = {
     val nRow = vecs.agg(count(lit(1)).as("n"))
     val init = vecs.select(col("vec_id").as("src"))
@@ -1901,9 +1889,8 @@ object SimilarityOps {
           "dst")
         .select(col("src"), col("dst"),
           round(cos(col("semb"), col("demb")), 6).as("cosine"))
-    var g: DataFrame = null
-    try {
-      g = score(init).localCheckpoint(true)
+    graft.Blocks.scoped { b =>
+      var g = b.checkpoint(score(init))
       for (_ <- 1 to nndescentIters) {
         val adj = g.union(g.select(col("dst").as("src"),
             col("src").as("dst"), col("cosine"))).distinct()
@@ -1924,19 +1911,14 @@ object SimilarityOps {
           .select(col("ua").as("src"), col("ub").as("dst")).distinct()
         val fresh = cand.join(adj.select(col("src"), col("dst")),
           Seq("src", "dst"), "left_anti")
-        val next = graft.operators.TopKPerKeyApi.topKPerKey(
+        val next = b.checkpoint(graft.operators.TopKPerKeyApi.topKPerKey(
             adj.union(score(fresh)),
             Seq("src"), Seq(("cosine", false), ("dst", true)), nndescentK)
-          .select(col("src"), col("dst"), col("cosine"))
-          .localCheckpoint(true)
-        org.apache.spark.sql.GraftBridge.uncheckpoint(g)
+          .select(col("src"), col("dst"), col("cosine")))
+        b.release(g)
         g = next
       }
       g
-    } catch {
-      case e: Throwable =>
-        if (g != null) org.apache.spark.sql.GraftBridge.uncheckpoint(g)
-        throw e
     }
   }
 

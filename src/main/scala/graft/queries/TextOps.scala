@@ -1527,7 +1527,7 @@ object TextOps {
     // has the semantics + fold-equivalence proof). Corpus collapses to
     // the word-frequency table before the loop; each superstep is one
     // vocabulary-keyed pair aggregation + a map-side codegen'd rewrite
-    // fold, with d37's localCheckpoint/uncheckpoint lineage hygiene.
+    // fold, with d37's checkpoint-and-release lineage hygiene.
     // The 5-row result sits behind a DeferredRowsPlan leaf (the d61
     // laziness contract): plan-only callers run no jobs; the first
     // action fires the loop and memoizes. Oracle unrolls the SAME five
@@ -1570,11 +1570,10 @@ object TextOps {
         StructField("fertility", DoubleType, nullable = true),
         StructField("compression", DoubleType, nullable = true)))
       graft.plans.DeferredRows.ofRows(s, schema) { () =>
-        val perSrc = t(s, d, "documents")
-          .select(col("source"), explode(tokens(col("text"))).as("w"))
-          .groupBy(col("source"), col("w")).agg(count(lit(1)).as("wf"))
-          .persist()
-        try {
+        graft.Blocks.scoped { b =>
+          val perSrc = b.persist(t(s, d, "documents")
+            .select(col("source"), explode(tokens(col("text"))).as("w"))
+            .groupBy(col("source"), col("w")).agg(count(lit(1)).as("wf")))
           val words = perSrc.groupBy(col("w")).agg(sum(col("wf")).as("wf"))
           val merges = graft.operators.BpeTrainer.trainMerges(words, k = 5)
           var syms: org.apache.spark.sql.Column =
@@ -1597,7 +1596,7 @@ object TextOps {
               round(col("n_bpe_syms") / col("n_char_syms").cast("double"), 4)
                 .as("compression"))
             .collect().toSeq
-        } finally perSrc.unpersist()
+        }
       }
     }
   )

@@ -49,12 +49,9 @@ object GraftBridge {
     * Accepts ONLY the checkpointed DataFrame itself (plan root is the
     * LogicalRDD), never a derivation of it: matching anywhere in the
     * tree would silently drop blocks of OTHER live checkpointed
-    * DataFrames embedded in a derived plan.
-    *
-    * `blocking = true` waits until the blocks are gone, so a call that
-    * checkpoints for its own use is charged its cleanup. */
-  def uncheckpoint(df: DataFrame, blocking: Boolean = false): Unit =
-    checkpointRdd(df, "uncheckpoint").unpersist(blocking)
+    * DataFrames embedded in a derived plan. Non-blocking. */
+  def uncheckpoint(df: DataFrame): Unit =
+    checkpointRdd(df, "uncheckpoint").unpersist(blocking = false)
 
   /** The id of the block-manager-resident RDD behind a localCheckpointed
     * DataFrame — lets lifecycle code (SparkEntry.release) identify PINNED
@@ -62,6 +59,13 @@ object GraftBridge {
     * unpersisted. Same root-only contract as [[uncheckpoint]]. */
   def checkpointRddId(df: DataFrame): Int =
     checkpointRdd(df, "checkpointRddId").id
+
+  /** The ids of the checkpointed RDDs `ds` reads: those behind the
+    * `LogicalRDD` leaves of its analyzed plan, subqueries included. */
+  def checkpointLeaves(ds: Dataset[_]): Set[Int] =
+    ds.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+      .collectWithSubqueries { case lr: execution.LogicalRDD => lr.rdd.id }
+      .toSet
 
   /** True when `df` is itself a localCheckpointed DataFrame — the
     * root-only test [[uncheckpoint]] and [[checkpointRddId]] apply. */

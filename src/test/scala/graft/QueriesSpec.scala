@@ -260,10 +260,14 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
       .filter(_.toString.endsWith(".scala"))
       .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
       .toMap
-    // its checkpoints are the ones GraphWalk and nndescentGraph take
-    val checkpoints = "localCheckpoint\\(".r
-      .findAllIn(sources("StressBench.scala")).size
-    assert(checkpoints == 0, "StressBench.scala calls localCheckpoint(")
+    // its checkpoints are the ones GraphWalk and nndescentGraph take,
+    // and every checkpoint in src/main is taken and released by one of
+    // two owners: Blocks for a call's blocks, BuiltIndexMemo for tiers
+    val checkpointing = sources.filter(f =>
+      "localCheckpoint\\(|GraftBridge\\.uncheckpoint\\(".r
+        .findFirstIn(f._2).isDefined).keySet
+    assert(checkpointing == Set("Blocks.scala", "BuiltIndexMemo.scala"),
+      checkpointing)
     // the walk step's anti-join against the visited set is written
     // once, and so is the NN-descent init mix
     val walkSteps = sources.filter(f => "Seq\\(\"qid\", \"nid\"\\),\\s*\"left_anti\""

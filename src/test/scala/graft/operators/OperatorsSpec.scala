@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, SparkTestBase}
+import graft.{Blocks, SparkEntry, SparkTestBase}
 
 class OperatorsSpec extends AnyFunSuite with SparkTestBase {
 
@@ -257,6 +257,51 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       assert(raised(e, "poisoned superstep"), e)
       assert(spark.sparkContext.getPersistentRDDs.keySet == before)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  private def persistent(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("Blocks: a body that persists, checkpoints, releases a generation and then throws leaves no block behind") {
+    val before = persistent()
+    val e = intercept[IllegalStateException](Blocks.scoped { b =>
+      val p = b.persist(spark.range(10).toDF("id"))
+      val g0 = b.checkpoint(p.select((col("id") * 2).as("id")))
+      b.checkpoint(g0.filter(col("id") > 4))
+      b.release(g0)
+      assert((persistent() -- before).size == 2, "the persist and one checkpoint")
+      throw new IllegalStateException("body failed")
+    })
+    assert(e.getMessage == "body failed")
+    assert(persistent() == before)
+  }
+
+  test("Blocks: a body that returns a derivation of its last checkpoint keeps exactly that checkpoint") {
+    val before = persistent()
+    var last: org.apache.spark.sql.DataFrame = null
+    val out = Blocks.scoped { b =>
+      val p = b.persist(spark.range(10).toDF("id"))
+      val g0 = b.checkpoint(p.select((col("id") * 2).as("id")))
+      last = b.checkpoint(g0.filter(col("id") > 4))
+      b.release(g0)
+      last.select((col("id") + 1).as("id"))
+    }
+    try {
+      assert(persistent() -- before ==
+        Set(org.apache.spark.sql.GraftBridge.checkpointRddId(last)))
+      assert(out.collect().map(_.getLong(0)).sorted.toSeq ==
+        Seq(7L, 9L, 11L, 13L, 15L, 17L, 19L))
+    } finally org.apache.spark.sql.GraftBridge.uncheckpoint(last)
+  }
+
+  test("Blocks: a body that returns rows leaves no block behind") {
+    val before = persistent()
+    val rows = Blocks.scoped { b =>
+      val p = b.persist(spark.range(10).toDF("id"))
+      b.checkpoint(p.filter(col("id") % 2 === 0)).collect().toSeq
+    }
+    assert(rows.size == 5)
+    assert(persistent() == before)
   }
 
   test("IncrementalDedup: none/semi/bloom modes emit identical pairs") {
