@@ -1097,14 +1097,14 @@ object DedupOps {
     // (head() on a provably 1-row frame — the scale-safe collect
     // posture) inside the arm's own [[graft.Blocks]] scope, so its
     // persists are released as soon as that row exists and no arm's
-    // cache outlives its use (the r11 eviction-pressure finding). The three arms submit as
-    // CONCURRENT jobs (Spark's scheduler interleaves them exactly as
-    // the old lazy union did), so the eager lifecycle costs no
-    // wall-clock vs the r11 single-action form. LAZINESS (r17): the
-    // whole sweep sits behind a DeferredRowsPlan leaf — building the
-    // DataFrame is plan-only (explain/schema/driver warm-up run no
-    // jobs); the first ACTION fires the thunk on the driver, which
-    // runs the three arms and memoizes the 3 result rows.
+    // cache outlives its use (the r11 eviction-pressure finding). The
+    // three arms submit as CONCURRENT jobs (Spark's scheduler
+    // interleaves them exactly as the old lazy union did), so the eager
+    // lifecycle costs no wall-clock vs the r11 single-action form.
+    // LAZINESS (r17): the whole sweep sits behind a DeferredRowsPlan
+    // leaf — building the DataFrame is plan-only (explain/schema/driver
+    // warm-up run no jobs); the first ACTION fires the thunk on the
+    // driver, which runs the three arms and memoizes the 3 result rows.
     // Each arm body sits inside scala.concurrent.blocking so the
     // global pool spawns threads for the blocking head() calls — on
     // hosts with < 3 pool threads the arms would otherwise serialize.

@@ -351,9 +351,8 @@ object SimilarityOps {
         col("emb"))
 
   // the input persist feeds only the build's init and supersteps, so
-  // the scope drops it once the checkpointed graph lands (a lost
-  // concurrent build race used to leave duplicate full-corpus persists
-  // resident until the next release())
+  // the scope drops it once the checkpointed graph lands: a lost
+  // concurrent build race leaves no duplicate full-corpus persist
   private def nndescentLayer1Build(s: SparkSession, d: String): DataFrame =
     graft.Blocks.scoped(b => nndescentGraph(
       b.persist(entryLayer(emb(s, d).select(col("vec_id"), col("emb"))))))

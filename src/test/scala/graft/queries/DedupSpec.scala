@@ -191,7 +191,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val expected = Seq("d31_dedup_clusters" -> (6 to 6),
       "d34_dedup_clusters_star" -> (28 to 28), "d37_pagerank" -> (51 to 51),
       "s72_nndescent_knn_graph" -> (59 to 59),
-      "s74_hnsw_entry_search" -> (0 to 90))
+      "s74_hnsw_entry_search" -> (60 to 90))
     @volatile var jobs = 0
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
