@@ -186,7 +186,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // there). s72 always rebuilds its graph, so its row counts the
     // whole NN-descent build; s74 serves both graph layers. s74's
     // count moves with the timing of adaptive execution's stage jobs
-    // (77–81 seen), so its row is a bound, far under the 220 that two
+    // (77–81 seen), so its row is a range, far under the 220 that two
     // per-call persists of its inputs cost.
     val expected = Seq("d31_dedup_clusters" -> (6 to 6),
       "d34_dedup_clusters_star" -> (28 to 28), "d37_pagerank" -> (51 to 51),
