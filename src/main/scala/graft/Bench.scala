@@ -60,8 +60,9 @@ object Bench {
     // returned rc 124 at r18). A small pool overlaps the driver-side
     // plan/codegen work of one query with the executor-side jobs of
     // others. Shared state is build-race-safe: the tier memo keeps the
-    // first published build and defers a rebuild's uncheckpoint until
-    // release, so in-flight readers finish (BuiltIndexMemo), and Spark's
+    // first published build and records a superseded one for the
+    // session's release, so in-flight readers finish (BuiltIndexMemo),
+    // the session's records are thread-safe (Blocks), and Spark's
     // CacheManager caches a persisted plan once however many queries
     // build it. Timed passes below are untouched — they stay strictly
     // sequential.

@@ -19,12 +19,14 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * LIFECYCLE: some queries persist shared stages (shingle sets, ANN
-    * cell assignments) at documented reuse points. Spark's
-    * CacheManager serves a repeat build of the same persisted plan
-    * from the first one's cache, and every persisted stage lives until
-    * [[release]]. A long-lived session embedding this registry should
-    * call [[release]] when it is done with a query's result —
-    * Bench/Verify do so between queries.
+    * cell assignments) at documented reuse points through
+    * [[graft.Blocks.persist]], which records each under the session;
+    * an iterative operator's result also records the checkpoints it
+    * reads. Spark's CacheManager serves a repeat build of the same
+    * persisted plan from the first one's cache. Every record lives until
+    * the session's [[release]]. A long-lived session embedding this
+    * registry should call [[release]] when it is done with a query's
+    * result — Bench/Verify do so between queries.
     *
     * EAGERNESS: every entry is a lazy plan. d61_shingle_size_sweep's
     * 3-arm sweep sits behind a DeferredRowsPlan leaf (r17) — plan-only
@@ -58,19 +60,18 @@ object SparkEntry {
       graft.queries.SamplingOps.queries ++
       graft.queries.TypedOps.queries
 
-  /** Release every cached block this library has created in `spark`.
+  /** Drop every block session `spark` recorded ([[graft.Blocks]]): its
+    * lazy reuse persists, the checkpoints its iterative operators handed
+    * back with their results, and its superseded, evicted or cleared
+    * tier generations. Nothing else: a published tier of
+    * [[graft.queries.BuiltIndexMemo]] is never a record, another
+    * session's records are that session's to drop, and a Dataset the
+    * caller persisted itself stays cached. A library query cannot know
+    * when its caller is done with the result, so the lifecycle hook
+    * lives here: Bench/Verify call it between queries, and a long-lived
+    * session embedding the registry should do the same. Safe between
+    * queries only — a dropped checkpoint cannot be recomputed.
     *
-    * Registry queries persist at documented reuse points (shingle sets,
-    * normalized embeddings) but a library query cannot know when its
-    * caller is done with the result — so the lifecycle hook lives here:
-    * Bench/Verify call it between queries, and a long-lived session
-    * embedding the registry should do the same. Two layers to cover:
-    *  - the Dataset cache manager (every `df.persist()` in
-    *    graft.queries.* registers here) — `catalog.clearCache()`;
-    *  - stray RDD-level blocks: the checkpoints an iterative operator's
-    *    [[graft.Blocks]] scope hands back because its result reads them
-    *    (the scope itself drops every other block it made)
-    *    — unpersist everything still in `getPersistentRDDs`.
     * BLOCKING (VERDICT r18 item 2): r18's non-blocking release let the
     * graph builders' hundreds of MB of checkpointed blocks drain
     * asynchronously INTO the next queries' timed windows — under
@@ -78,40 +79,15 @@ object SparkEntry {
     * s-family every pass, so min-of-3 could never filter the recurring
     * contamination (t66/t67 read 3.0–3.5× with an untouched execution
     * path). A blocking unpersist charges each query's cleanup to that
-    * query. Safe between queries only — a still-referenced
-    * localCheckpointed RDD cannot be recomputed once its blocks drop.
-    *
-    * KEPT ALIVE by design: the built-index tiers of
-    * [[graft.queries.BuiltIndexMemo]] — build-once/serve-many
-    * localCheckpointed frames, the reef feature frame of
-    * `graft.ml.ReefPipeline.featurize` among them — of EVERY live
-    * session on this SparkContext, plus other sessions' superseded
-    * generations still awaiting their own session's release. Only this session's
-    * superseded generations are reclaimed. [[releaseIndexes]] is the
-    * full teardown of this session's tiers. */
-  def release(spark: SparkSession): Unit = {
-    // blocking RDD unpersist FIRST — this is the synchronous barrier
-    // (it covers cached-Dataset buffer RDDs too); catalog.clearCache()
-    // afterwards drops the CacheManager bookkeeping (its own unpersist
-    // is async-only, which is why it cannot be the barrier). The
-    // persistent-RDD list spans every session on the context, so the
-    // pins do too: no live session's tiers are torn down here. This
-    // session's superseded tier generations (a rebuild swaps the
-    // entry; the old blocks are only DEFERRED so in-flight readers
-    // finish) are reclaimed here: their ids are not retained, so the
-    // blanket unpersist drops the blocks, and the drain trims the
-    // handle queue.
-    graft.queries.BuiltIndexMemo.drainDeferred(spark)
-    val pinned = graft.queries.BuiltIndexMemo.retained(spark)
-    spark.sparkContext.getPersistentRDDs.valuesIterator
-      .foreach(r => if (!pinned(r.id)) r.unpersist(blocking = true))
-    spark.catalog.clearCache()
-  }
+    * query: Bench's and perfbench's timed passes need that barrier.
+    * [[releaseIndexes]] is the full teardown of this session's tiers. */
+  def release(spark: SparkSession): Unit = graft.Blocks.releaseSession(spark)
 
-  /** Full teardown: [[release]] plus this session's built-index tiers,
-    * which the per-query release deliberately keeps (the
-    * build-once/serve-many contract). Call when done with the
-    * session's serving — Bench does before its leak accounting. */
+  /** Full teardown: this session's built-index tiers, which the
+    * per-query release never reaches (the build-once/serve-many
+    * contract), go to its records, and [[release]] drops them. Call
+    * when done with the session's serving — Bench does before its leak
+    * accounting. */
   def releaseIndexes(spark: SparkSession): Unit = {
     graft.queries.BuiltIndexMemo.clear(spark)
     release(spark)

@@ -1254,7 +1254,8 @@ object StressBench {
       // supersteps or candidates would crater this
       require(recall >= 0.7,
         s"nndescent sampled recall@3 $recall < 0.7 at $label")
-      // also drops the graph's checkpoint, which the build hands back
+      graph.unpersist(); nodes.unpersist()
+      // drops the graph's checkpoint, which the build hands back
       SparkEntry.release(spark)
     }
     def cellBuild(n: Long, label: String): Unit = {
@@ -1327,6 +1328,7 @@ object StressBench {
       require(recall >= 0.7,
         s"entry-tier recall $recall < 0.7 on navigable vectors — the " +
           "machinery, not the data, is broken")
+      top3.unpersist(); q.unpersist(); nodes.unpersist()
       SparkEntry.release(spark)
     }
     } finally spark.conf.set(cpKey, cpPrev)

@@ -115,13 +115,6 @@ object DedupClustering {
         .select(greatest(col("a"), col("b")).as("u"),
           least(col("a"), col("b")).as("v"))
         .distinct())
-      // eager checkpoint, NOT lazy persist: the in-loop release of
-      // superseded edge generations drops gen-0's blocks, so allNodes
-      // must materialize (and truncate its lineage off gen-0) before the
-      // first round runs — a lazy persist would first compute at the
-      // final join and find its parent blocks gone
-      val allNodes = b.checkpoint(e.select(col("u").as("node"))
-        .union(e.select(col("v").as("node"))).distinct())
       var converged = false
       var i = 0
       while (!converged) {
@@ -155,12 +148,13 @@ object DedupClustering {
         prevSig = nextSig
         i += 1
       }
-      // at the fixpoint the edges form stars rooted at component minima:
-      // each non-root u keeps one edge, to its root
-      val stars = e.groupBy(col("u")).agg(min(col("v")).as("root"))
-      allNodes
-        .join(stars, col("node") === col("u"), "left")
-        .select(col("node").as("doc_id"),
-          coalesce(col("root"), col("node")).as("cluster_id"))
+      // every round keeps the edge set's node set and components, so at
+      // the fixpoint the edges are stars over every node, rooted at the
+      // component minima: a node's label is the least of itself and its
+      // edges' v (a root is only ever a v)
+      e.select(col("u").as("node"), col("v").as("root"))
+        .union(e.select(col("v").as("node"), col("v").as("root")))
+        .groupBy(col("node")).agg(min(col("root")).as("cluster_id"))
+        .select(col("node").as("doc_id"), col("cluster_id"))
     }
 }

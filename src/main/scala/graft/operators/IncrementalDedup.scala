@@ -43,7 +43,7 @@ object IncrementalDedup {
 
   def pairs(sh: DataFrame, minJ: Double, prefilter: String = "semi",
       expectedNewShingles: Long = 1000000L): DataFrame = {
-    val shP = sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shP = graft.Blocks.persist(sh)
     val ex = shP.select(col("doc_id"), col("is_new"),
       explode(col("shingles")).as("sstr"))
       .select(col("doc_id"), col("is_new"), xxhash64(col("sstr")).as("sv"))

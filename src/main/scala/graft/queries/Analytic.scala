@@ -407,9 +407,8 @@ object Analytic {
       // dev feeds TWO consumers (the MAD rank pass and the final
       // select) — persist the joined deviations so the events scan +
       // median join run once per action; released by SparkEntry.release
-      val dev = e.join(broadcast(med), "event_type")
-        .withColumn("adev", abs(col("value") - col("med")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val dev = graft.Blocks.persist(e.join(broadcast(med), "event_type")
+        .withColumn("adev", abs(col("value") - col("med"))))
       val mad = rankMedian(dev, "adev", "mad")
       dev.join(broadcast(mad), "event_type")
         .filter(col("mad") > 0)

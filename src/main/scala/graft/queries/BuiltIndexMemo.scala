@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
+import graft.Blocks
+
 /** The built-index TIERS: one session-scoped memo for every BUILT
   * index table the registry serves — the dedup tiers (sh3, exh, ex50,
   * sc50, nd08, d41k, d44v), the text tiers (t36p, sp8, t35q), the
@@ -17,8 +19,8 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * DataFrames: materialized fixed points or derived corpus tables
   * whose build dominates their family's cost and whose blocks CANNOT
   * be recomputed once dropped (a localCheckpoint truncates lineage).
-  * They survive `SparkEntry.release()` by design — their RDD ids are
-  * pinned via [[retained]] — and are torn down only by
+  * They are never session records (`graft.Blocks`), so
+  * `SparkEntry.release()` cannot reach them; they are torn down only by
   * `SparkEntry.releaseIndexes()`, a dir switch, or an explicit
   * `rebuild = true` caller (a family's designated "build" row: d28 for
   * the lower dedup tiers, s72 for the graph, and so on — their bench
@@ -38,30 +40,25 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * corpus planted under its own dir (as the tests plant theirs) builds
   * its own entries, and never serves or replaces another dir's.
   *
-  * SESSIONS: `release(s)` keeps every live entry on s's SparkContext,
-  * whichever session owns it, and other sessions' deferred
-  * generations (their readers may still be running). RDD ids restart
-  * per SparkContext, so only entries on s's own context count: a
-  * stopped context's ids would alias live RDDs.
+  * SESSIONS: an entry that leaves the memo — superseded by a rebuild,
+  * evicted by a dir switch, cleared, or a concurrent build's losing
+  * copy — is recorded under its own session, so only that session's
+  * next `SparkEntry.release()` drops it. One session's release never
+  * touches another session's tiers or generations.
   *
-  * CONCURRENCY: concurrent BUILDERS are safe (putIfAbsent — losers
-  * uncheckpoint their never-published build and serve the winner's).
+  * CONCURRENCY: concurrent BUILDERS are safe (putIfAbsent — a loser
+  * records its never-published build and serves the winner's).
   * Rebuild-while-SERVING is also safe, by DEFERRAL rather than
-  * discipline: a replaced or dir-evicted entry is never uncheckpointed
-  * inline — its handle moves to `deferred`, so any job still reading
-  * the old blocks completes — and its session's next
-  * `SparkEntry.release()` reclaims the blocks ([[drainDeferred]] plus
-  * release's blanket unpersist of everything not [[retained]]).
-  * Between releases the cost is at most one superseded generation per
-  * rebuild, and rebuilds outside the concurrent warm-up happen
-  * strictly between releases.
+  * discipline: a replaced or dir-evicted entry is never dropped inline
+  * — it is recorded, so any job still reading the old blocks completes
+  * — and its session's next `SparkEntry.release()` drops it. Between
+  * releases the cost is at most one superseded generation per rebuild,
+  * and rebuilds outside the concurrent warm-up happen strictly between
+  * releases.
   */
 private[graft] object BuiltIndexMemo {
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]()
-  /** Superseded entries awaiting reclaim — see CONCURRENCY above. */
-  private val deferred = new java.util.concurrent.ConcurrentLinkedQueue[
-    (SparkSession, DataFrame)]()
 
   /** The tier `kind` of corpus `d`: served from the memo, or built
     * from `body` and published. `body` is localCheckpointed unless it
@@ -77,7 +74,7 @@ private[graft] object BuiltIndexMemo {
       val owner = e.getKey._1
       if (owner.sparkContext.isStopped) it.remove()
       else if ((owner eq s) && e.getKey._2 != d) {
-        deferred.add((owner, e.getValue))
+        Blocks.record(s, e.getValue)
         it.remove()
       }
     }
@@ -87,19 +84,16 @@ private[graft] object BuiltIndexMemo {
     else {
       val b = body
       val built =
-        if (GraftBridge.isCheckpointed(b)) b else b.localCheckpoint(true)
-      if (rebuild) {
-        val old = memo.put(key, built)
-        if (old != null && (old ne built)) deferred.add((s, old))
+        if (!GraftBridge.isCheckpointed(b)) b.localCheckpoint(true)
+        else { Blocks.publish(s, b); b }
+      // the generation a rebuild replaces, or a lost race's build, goes
+      // to s's records (SESSIONS above)
+      val prev =
+        if (rebuild) memo.put(key, built) else memo.putIfAbsent(key, built)
+      if (rebuild || prev == null) {
+        if (prev != null && (prev ne built)) Blocks.record(s, prev)
         built
-      } else {
-        // losers of a concurrent build race drop their blocks inline:
-        // the loser's frame was never published, so no other thread
-        // can be reading it
-        val prev = memo.putIfAbsent(key, built)
-        if (prev != null) { GraftBridge.uncheckpoint(built); prev }
-        else built
-      }
+      } else { Blocks.record(s, built); prev }
     }
   }
 
@@ -113,38 +107,9 @@ private[graft] object BuiltIndexMemo {
     b.result()
   }
 
-  /** RDD ids `SparkEntry.release(s)` must leave resident: every
-    * session's [[pinned]] tiers on s's SparkContext, and the deferred
-    * generations of sessions other than s (see SESSIONS above). */
-  def retained(s: SparkSession): Set[Int] = {
-    def live(owner: SparkSession) = owner.sparkContext eq s.sparkContext
-    val b = Set.newBuilder[Int]
-    memo.forEach { (k, df) =>
-      if (live(k._1)) b += GraftBridge.checkpointRddId(df)
-    }
-    deferred.forEach { case (owner, df) =>
-      if ((owner ne s) && live(owner)) b += GraftBridge.checkpointRddId(df)
-    }
-    b.result()
-  }
-
-  /** Uncheckpoint and forget the session's superseded generations.
-    * Idempotent with release()'s blanket unpersist — unpersisting an
-    * already-dropped RDD is a no-op — so this is primarily handle
-    * hygiene; it also makes a standalone drain (no release) correct. */
-  def drainDeferred(s: SparkSession): Unit =
-    deferred.removeIf { case (owner, df) =>
-      (owner eq s) && {
-        if (!owner.sparkContext.isStopped) GraftBridge.uncheckpoint(df)
-        true
-      }
-    }
-
-  /** Drop the session's tiers — blocks and handles. */
-  def clear(s: SparkSession): Unit = {
+  /** Drop the session's tiers from the memo into its records. */
+  def clear(s: SparkSession): Unit =
     memo.entrySet().removeIf { e =>
-      (e.getKey._1 eq s) && { GraftBridge.uncheckpoint(e.getValue); true }
+      (e.getKey._1 eq s) && { Blocks.record(s, e.getValue); true }
     }
-    drainDeferred(s)
-  }
 }

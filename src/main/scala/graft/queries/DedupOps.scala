@@ -251,10 +251,10 @@ object DedupOps {
     // labeled feeds TWO branches (the size aggregate and the final
     // join) — persist it so the documents scan + component join run
     // once per action, not twice; released by SparkEntry.release().
-    val labeled = t(s, d, "documents").select(col("doc_id"))
+    val labeled = graft.Blocks.persist(t(s, d, "documents")
+      .select(col("doc_id"))
       .join(comps, Seq("doc_id"), "left")
-      .withColumn("cluster_rep", coalesce(col("cid"), col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("cluster_rep", coalesce(col("cid"), col("doc_id"))))
     val sizes = labeled.groupBy(col("cluster_rep"))
       .agg(count(lit(1)).as("cluster_size"))
     labeled.join(sizes, "cluster_rep")
@@ -528,7 +528,7 @@ object DedupOps {
     val sh = shingleIndex(s, d)
     val ex = postingsIndex(s, d)
     val sizes = sh.select(col("doc_id"), size(col("shingles")).as("n"))
-    ex.select(col("doc_id").as("ia"), col("sv"))
+    graft.Blocks.persist(ex.select(col("doc_id").as("ia"), col("sv"))
       .join(ex.select(col("doc_id").as("ib"), col("sv").as("svb")),
         col("sv") === col("svb") && col("ia") < col("ib"))
       .groupBy(col("ia"), col("ib"))
@@ -536,8 +536,7 @@ object DedupOps {
       .join(sizes.select(col("doc_id").as("ia"), col("n").as("na")), "ia")
       .join(sizes.select(col("doc_id").as("ib"), col("n").as("nb")), "ib")
       .filter(col("inter") / (col("na") + col("nb") - col("inter")) >= 0.5)
-      .select(col("ia"), col("ib"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("ia"), col("ib")))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -991,9 +990,8 @@ object DedupOps {
       // oracle is untouched. Signature table feeds band keying AND both
       // sides of the confirm join — persist at the documented reuse
       // point (as d28 does).
-      val sigs = tok.groupBy(col("doc_id"))
-        .agg(graft.functions.SimHash48Agg.simhash48(col("tok")).as("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sigs = graft.Blocks.persist(tok.groupBy(col("doc_id"))
+        .agg(graft.functions.SimHash48Agg.simhash48(col("tok")).as("sig")))
       val banded = sigs.select(col("doc_id"), col("sig"),
         explode(array(
           struct(lit(0).as("bi"),
@@ -1053,8 +1051,7 @@ object DedupOps {
     // then run d36 at the chosen config on the full corpus.
     "d54_band_sweep" -> { (s, d) =>
       val sh = shingleIndex(s, d) // served, checkpoint-resident (r20)
-      val sigs = minhashSigs(sh)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sigs = graft.Blocks.persist(minhashSigs(sh))
       val exact = pairsIndex(s, d)
         .agg(count(lit(1)).as("n_exact"))
       val arms = Seq(2, 4, 6, 8).map { r =>
@@ -1583,13 +1580,12 @@ object DedupOps {
       // straight from the scan — the source column rides the corpus
       // row for free here, and at real scale the doc→source map is
       // corpus-sized, so the join would stay array-shuffling there too.
-      val sh = t(s, d, "documents")
+      val sh = graft.Blocks.persist(t(s, d, "documents")
         .repartition(s.sparkContext.defaultParallelism)
         .withColumn("w", tokens(col("text")))
         .filter(size(col("w")) >= 3)
         .select(col("source"), shingleCol.as("shingles"))
-        .select(col("source"), explode(col("shingles")).as("sstr"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("source"), explode(col("shingles")).as("sstr")))
       val x = conv(substring(md5(col("sstr")), 1, 12), 16, 10)
         .cast("long") % p
       val permVals = array((0 until 24).map(i =>

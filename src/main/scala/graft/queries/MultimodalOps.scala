@@ -59,10 +59,10 @@ object MultimodalOps extends Serializable {
       .withColumnRenamed("cluster_id", "cid")
     // feeds the size aggregate and the final join — persist so the
     // component pass runs once; released by SparkEntry.release()
-    val labeled = multimodalTable(s, d).select(col("doc_id"))
+    val labeled = graft.Blocks.persist(multimodalTable(s, d)
+      .select(col("doc_id"))
       .join(comps, Seq("doc_id"), "left")
-      .withColumn("cluster_rep", coalesce(col("cid"), col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("cluster_rep", coalesce(col("cid"), col("doc_id"))))
     val sizes = labeled.groupBy(col("cluster_rep"))
       .agg(count(lit(1)).as("cluster_size"))
     labeled.join(sizes, "cluster_rep")
@@ -792,8 +792,7 @@ object MultimodalOps extends Serializable {
       graft.functions.VectorFunctions.register(s)
       // Signature table persists at its two-consumer reuse point (both
       // sides of the band self-join, plus the auto policy's count).
-      val sigs = phashSignatures(multimodalTable(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sigs = graft.Blocks.persist(phashSignatures(multimodalTable(s, d)))
       // Band width from the auto policy (see resolveBandBits for the
       // full recall/volume contract): the count only fires when the
       // knob is "auto", and it reads the persisted signature table the
@@ -998,10 +997,9 @@ object MultimodalOps extends Serializable {
       // and the fleet-total rollup — without the persist each branch
       // re-runs the corpus scan (2× the map work at 100 TB); with it
       // the rollup reads ~20 cached rows. Released by SparkEntry.release.
-      val bySrc = withCnts.groupBy(col("src").as("source"))
+      val bySrc = graft.Blocks.persist(withCnts.groupBy(col("src").as("source"))
         .agg(sum(col("hxlen")).as("tot"),
-          (0 until 16).map(i => sum(col(s"c$i")).as(s"s$i")): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (0 until 16).map(i => sum(col(s"c$i")).as(s"s$i")): _*))
       val global = bySrc.groupBy()
         .agg(sum(col("tot")).as("gtot"),
           (0 until 16).map(i => sum(col(s"s$i")).as(s"g$i")): _*)
@@ -1042,9 +1040,8 @@ object MultimodalOps extends Serializable {
     "m36_asset_similarity" -> { (s, d) =>
       // distinct tile set feeds both join sides and the size lookup —
       // persist once; released by SparkEntry.release()
-      val tiles = queries("m34_payload_tiles")(s, d)
-        .select(col("doc_id"), col("tile_md5")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val tiles = graft.Blocks.persist(queries("m34_payload_tiles")(s, d)
+        .select(col("doc_id"), col("tile_md5")).distinct())
       val sizes = tiles.groupBy(col("doc_id")).agg(count(lit(1)).as("nt"))
       val pairs = tiles.select(col("doc_id").as("ia"), col("tile_md5"))
         .join(tiles.select(col("doc_id").as("ib"),

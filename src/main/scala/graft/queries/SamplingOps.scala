@@ -326,8 +326,8 @@ object SamplingOps {
         .filter(col("quality").isNotNull)
       // feeds two rank passes + the final corr — persist so the two
       // parent signal jobs run once; released by SparkEntry.release()
-      val j = ppl.join(qual, "doc_id").withColumn("g", lit(0))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val j = graft.Blocks.persist(
+        ppl.join(qual, "doc_id").withColumn("g", lit(0)))
       def avgRanks(v: String, blk: Column, out: String): DataFrame =
         graft.operators.DistributedRank.valueRanks(j, "g", v, blk)
           .select(col(v),

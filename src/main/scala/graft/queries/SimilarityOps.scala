@@ -87,14 +87,13 @@ object SimilarityOps {
       .select(col("vec_id").as("cid"), col("emb").as("cemb"))
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("cosc").desc, col("cid").asc)
-    val a = e.crossJoin(broadcast(cents))
+    val a = graft.Blocks.persist(e.crossJoin(broadcast(cents))
       .withColumn("cosc", round(cos(col("emb"), col("cemb")), 6))
       .withColumn("rn", row_number().over(wAssign))
       .filter(col("rn") === 1)
       // label rides along for the filtered-search consumers (s52);
       // every other consumer selects its columns explicitly
-      .select(col("vec_id"), col("emb"), col("label"), col("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("vec_id"), col("emb"), col("label"), col("cid")))
     a.count()
     a
   }
@@ -432,10 +431,9 @@ object SimilarityOps {
       .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cid", "cemb")
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("cosc").desc, col("cid").asc)
-    emb(s, d).crossJoin(broadcast(centsDf))
+    graft.Blocks.persist(emb(s, d).crossJoin(broadcast(centsDf))
       .withColumn("cosc", round(cos(col("emb"), col("cemb")), 6))
-      .withColumn("rn", row_number().over(wAssign))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("rn", row_number().over(wAssign)))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -846,8 +844,7 @@ object SimilarityOps {
       // sides of the exact-confirm join) — persist once instead of
       // re-scanning and re-shuffling parquet per branch (same documented
       // reuse point discipline as d28)
-      val e = emb(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val e = graft.Blocks.persist(emb(s, d))
       val tableBuckets = (0 until nTables).map { tb =>
         val bucket = (0 until planesPerTable).map { p =>
           val proj = aggregate(
@@ -1037,11 +1034,10 @@ object SimilarityOps {
     // CTE steps.
     "q98_kcenter_coreset" -> { (s, d) =>
       val k = 4
-      val e = emb(s, d).select(col("vec_id"), col("emb"))
-        // feeds k sequential bounded-aggregate rounds — persist so the
-        // parquet scan + float→double widening runs once; released by
-        // SparkEntry.release()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // feeds k sequential bounded-aggregate rounds — persist so the
+      // parquet scan + float→double widening runs once; released by
+      // SparkEntry.release()
+      val e = graft.Blocks.persist(emb(s, d).select(col("vec_id"), col("emb")))
       val first = e.filter(col("vec_id") === 0L)
         .select(col("emb")).head().getSeq[Double](0)
       var picked = Vector((1, 0L, null.asInstanceOf[java.lang.Double],
@@ -1158,9 +1154,8 @@ object SimilarityOps {
     // documented reuse point (three hops read it; released by
     // SparkEntry.release — the d28 discipline).
     "s71_graph_ann" -> { (s, d) =>
-      val edges = queries("s47_knn_graph")(s, d)
-        .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val edges = graft.Blocks.persist(queries("s47_knn_graph")(s, d)
+        .select(col("vec_id").as("src"), col("neighbor_id").as("dst")))
       flatWalk(s, d, edges)
     },
 
@@ -1498,8 +1493,7 @@ object SimilarityOps {
       val nTables = 6
       val planesPerTable = 4
       val planes = s35Planes
-      val e = emb(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val e = graft.Blocks.persist(emb(s, d))
       val tableBuckets = (0 until nTables).map { tb =>
         val bucket = (0 until planesPerTable).map { p =>
           val proj = aggregate(
@@ -1511,10 +1505,10 @@ object SimilarityOps {
       }
       // feeds both arms' probe and corpus sides — persist the keyed
       // stream once; released by SparkEntry.release()
-      val keyed = e.withColumn("tb", explode(array(tableBuckets: _*)))
+      val keyed = graft.Blocks.persist(
+        e.withColumn("tb", explode(array(tableBuckets: _*)))
         .select(col("vec_id"), col("tb.tbl").as("tbl"),
-          col("tb.bucket").as("bucket"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col("tb.bucket").as("bucket")))
       val va = e.select(col("vec_id").as("ia"), col("emb").as("ea"))
       val vb = e.select(col("vec_id").as("ib"), col("emb").as("eb"))
       Seq(0, 1).map { probeBits =>

@@ -49,7 +49,9 @@ object TextOps {
     BuiltIndexMemo.get(s, d, "t36p", rebuild)(perplexityBody(s, d))
 
   private def perplexityBody(s: SparkSession, d: String): DataFrame = {
-    val bg = t(s, d, "documents")
+    // feeds the model fit (twice) and the scoring join — persist so
+    // tokenize+explode runs once; released by SparkEntry.release()
+    val bg = graft.Blocks.persist(t(s, d, "documents")
       .withColumn("w", tokens(col("text")))
       .filter(size(col("w")) >= 2)
       .select(col("doc_id"), explode(expr(
@@ -57,10 +59,7 @@ object TextOps {
         .as("bg"))
       // tokens contain no spaces (whitespace split), so the first
       // token of the bigram string is recoverable exactly
-      .withColumn("w1", substring_index(col("bg"), " ", 1))
-      // feeds the model fit (twice) and the scoring join — persist so
-      // tokenize+explode runs once; released by SparkEntry.release()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("w1", substring_index(col("bg"), " ", 1)))
     val model = bg.groupBy(col("bg")).agg(count(lit(1)).as("c_bg"))
     val ctx = bg.groupBy(col("w1")).agg(count(lit(1)).as("c_ctx"))
     // attach the context count to the DISTINCT-BIGRAM model first
@@ -172,15 +171,14 @@ object TextOps {
     * long-lived session embedding the registry must do the same). */
   private[queries] def bm25Scores(s: SparkSession, d: String): DataFrame = {
     val terms = Seq("spark", "table", "vector")
-    val docs = t(s, d, "documents")
+    // feeds the stats aggregate AND the scoring pass — persist the
+    // (doc_id, 4×long) projection so tokenize runs once
+    val docs = graft.Blocks.persist(t(s, d, "documents")
       .withColumn("w", tokens(col("text")))
       .select(col("doc_id") +: size(col("w")).cast("long").as("dl") +:
         terms.map(tm =>
           size(filter(col("w"), x => x === lit(tm))).cast("long")
-            .as(s"tf_$tm")): _*)
-      // feeds the stats aggregate AND the scoring pass — persist the
-      // (doc_id, 4×long) projection so tokenize runs once
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .as(s"tf_$tm")): _*))
     val stats = docs.agg(
       count(lit(1)).as("n_docs"),
       sum(col("dl")).as("sum_dl") +:
@@ -825,12 +823,11 @@ object TextOps {
         .groupBy(col("tok")).agg(count(lit(1)).as("cu"))
       // feeds the total and the support filter — persist so the bigram
       // count pass runs once; released by SparkEntry.release()
-      val bgCounts = toks.filter(size(col("w")) >= 2)
+      val bgCounts = graft.Blocks.persist(toks.filter(size(col("w")) >= 2)
         .select(explode(expr(
           "transform(sequence(0, size(w)-2), i -> concat_ws(' ', w[i], w[i+1]))"))
           .as("bg"))
-        .groupBy(col("bg")).agg(count(lit(1)).as("c_bg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("bg")).agg(count(lit(1)).as("c_bg")))
       val nu = uni.agg(sum(col("cu")).as("n_u"))
       val nb = bgCounts.agg(sum(col("c_bg")).as("n_bg"))
       bgCounts.filter(col("c_bg") >= 5)
@@ -1325,14 +1322,13 @@ object TextOps {
         .filter(size(col("w")) > 0)
         .select(col("doc_id"), col("source"),
           size(col("w")).cast("long").as("n_tokens"), col("w"))
-      val occ = tok.filter(col("n_tokens") >= span)
+      // feeds the df aggregate AND the coverage join — persist the
+      // positioned digest stream; released by SparkEntry.release()
+      val occ = graft.Blocks.persist(tok.filter(col("n_tokens") >= span)
         .select(col("doc_id"), posexplode(expr(
           s"transform(sequence(0, size(w)-$span), " +
             s"i -> md5(concat_ws(' ', slice(w, i+1, $span))))"))
-          .as(Seq("i", "span_md5")))
-        // feeds the df aggregate AND the coverage join — persist the
-        // positioned digest stream; released by SparkEntry.release()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .as(Seq("i", "span_md5"))))
       val flagged = occ.groupBy(col("span_md5"))
         .agg(countDistinct(col("doc_id")).as("nd"))
         .filter(col("nd") >= 2).select(col("span_md5"))

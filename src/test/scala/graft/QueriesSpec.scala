@@ -178,6 +178,89 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     } finally SparkEntry.releaseIndexes(b)
   }
 
+  private def persistent(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("one session's release keeps another session's constructed rows readable, and that session's own release leaves only its tiers") {
+    // d31, d34 and d37 construct plans that read checkpoints their
+    // operators handed back; those belong to B, whose blocks share A's
+    // SparkContext, and cannot be recomputed once dropped
+    val b = spark.newSession()
+    val names = Seq("q01_pricing_summary", "d31_dedup_clusters",
+      "d34_dedup_clusters_star", "d37_pagerank")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    SparkEntry.releaseIndexes(spark)
+    val before = persistent()
+    try {
+      // warm: the first calls build B's tiers, so the second ones serve
+      val expected = names.map(n => rows(SparkEntry.queries(n)(b, sf0001)))
+      SparkEntry.release(b)
+      val dfs = names.map(n => SparkEntry.queries(n)(b, sf0001))
+      SparkEntry.release(spark)
+      val got = dfs.map(df => scala.util.Try(rows(df)))
+      val failed = names.zip(got).collect {
+        case (n, scala.util.Failure(e)) => s"$n: ${e.getMessage.take(160)}"
+      }
+      assert(failed.isEmpty, failed.mkString("\n"))
+      assert(got.map(_.get) == expected)
+      SparkEntry.release(b)
+      val pins = BuiltIndexMemo.pinned(b).values.toSet
+      assert(pins.nonEmpty && persistent() -- before == pins,
+        "B's release must leave exactly B's tiers")
+    } finally SparkEntry.releaseIndexes(b)
+  }
+
+  test("release leaves a Dataset the caller persisted itself cached, with its blocks resident") {
+    val start = persistent()
+    val mine = spark.range(1000).selectExpr("id % 13 as k").persist()
+    try {
+      assert(mine.count() == 1000)
+      val ours = persistent() -- start
+      assert(ours.nonEmpty)
+      // s49 persists its cell assignment: a record of this session
+      SparkEntry.queries("s49_ivf_cell_stats")(spark, sf0001).collect()
+      assert((persistent() -- start -- ours).nonEmpty)
+      SparkEntry.release(spark)
+      assert((persistent() -- start -- ours)
+        .subsetOf(BuiltIndexMemo.pinned(spark).values.toSet),
+        "release drops the library's own blocks")
+      assert(mine.storageLevel ==
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+        "the caller's Dataset must stay cached")
+      assert(ours.subsetOf(persistent()) &&
+        spark.sparkContext.getRDDStorageInfo.exists(i => ours(i.id)),
+        "the caller's blocks must stay resident")
+    } finally mine.unpersist(blocking = true)
+  }
+
+  test("rows run from 4 threads in one session: its release leaves exactly its pinned tiers") {
+    // d28 rebuilds the lower dedup tiers while d31 and d34 serve them,
+    // and d61's arms run on pool threads of their own
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val names = Seq("d28_neardup_jaccard", "d61_shingle_size_sweep",
+      "d31_dedup_clusters", "d34_dedup_clusters_star",
+      "s49_ivf_cell_stats", "t51_signal_calibration")
+    SparkEntry.releaseIndexes(spark)
+    val before = persistent()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val counts = Await.result(Future.traverse(names)(n =>
+        Future(SparkEntry.queries(n)(spark, sf0001).collect().length)),
+        Duration(10, "min"))
+      assert(counts.forall(_ > 0), names.zip(counts))
+      SparkEntry.release(spark)
+      val pins = BuiltIndexMemo.pinned(spark).values.toSet
+      assert(pins.nonEmpty && persistent() -- before == pins,
+        s"resident ${persistent() -- before}, pinned $pins")
+    } finally {
+      pool.shutdown()
+      SparkEntry.releaseIndexes(spark)
+    }
+  }
+
   test("identical index stages share one cache entry: s50 after s49 materializes no second cell assignment") {
     // s49 and s50 both build the persisted IVF cell assignment; within
     // one session and without a release, the second build must be
@@ -268,6 +351,13 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
         .findFirstIn(f._2).isDefined).keySet
     assert(checkpointing == Set("Blocks.scala", "BuiltIndexMemo.scala"),
       checkpointing)
+    // and every persist by Blocks: a scope's `b.persist`, or a session's
+    // `Blocks.persist`, apart from StressBench's generated inputs, which
+    // it unpersists itself
+    val persisting = sources.filter(f =>
+      "(?<!\\bBlocks)(?<!\\bb)\\.(persist|cache)\\(".r
+        .findFirstIn(f._2).isDefined).keySet
+    assert(persisting == Set("Blocks.scala", "StressBench.scala"), persisting)
     // the walk step's anti-join against the visited set is written
     // once, and so is the NN-descent init mix
     val walkSteps = sources.filter(f => "Seq\\(\"qid\", \"nid\"\\),\\s*\"left_anti\""

@@ -189,7 +189,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // (77–81 seen), so its row is a range, far under the 220 that two
     // per-call persists of its inputs cost.
     val expected = Seq("d31_dedup_clusters" -> (6 to 6),
-      "d34_dedup_clusters_star" -> (28 to 28), "d37_pagerank" -> (51 to 51),
+      "d34_dedup_clusters_star" -> (26 to 26), "d37_pagerank" -> (51 to 51),
       "s72_nndescent_knn_graph" -> (59 to 59),
       "s74_hnsw_entry_search" -> (60 to 90))
     @volatile var jobs = 0
